@@ -1,23 +1,37 @@
-"""Distributed kNN join via bounded cell-ring expansion.
+"""Distributed kNN join: a brute-force scan for small indexes, bounded
+cell-ring expansion for the rest.
 
-Re-expresses S2ClosestPointQuery's best-first cell search
-(Query/S2ClosestPointQueryBase.cs, base algorithm
-Query/S2ClosestEdgeQueryBase.cs:211-363) as a bounded loop of Spark
-joins (SURVEY.md §2.4 / §3.3):
+Re-expresses S2ClosestPointQuery (Query/S2ClosestPointQueryBase.cs,
+base algorithm Query/S2ClosestEdgeQueryBase.cs:211-363), including its
+size-based choice between scanning every indexed point and descending
+the index (S2ClosestEdgeQueryBase.cs:274-298).  ``knn_join`` picks the
+arm from the index size:
 
-round r: every *unfinished* query joins its 3x3 cell neighborhood at
-level L_r against the index side keyed by ``parent(leaf, L_r)``;
-accumulated candidates are ranked with a window (distance, index_key) —
-the reference's result ordering (S2ClosestEdgeQueryBase.cs:69-120).  A
-query finishes when its k-th squared-chord distance is smaller than the
-guaranteed-covered radius of its ring: any point outside the 3x3
-neighborhood is at least one cell min-width away (S2Metrics kMinWidth,
-S2Metrics.cs:75-86).  Each following round coarsens the level by 2
-(ring area x16), so the loop is bounded by ~L/2 rounds and in practice
-finishes in 1-2; the final fallback (level exhausted, still unfinished)
-is a cross join of the residual queries — a vanishing fraction.
+- brute force (``knn_join_brute``, index <= ``KNN_BRUTE_FORCE_MAX_INDEX``
+  points, no ``group_col``): the normalized index is collected once to
+  the driver, sorted by key, and every query is answered in one Arrow
+  UDF pass that carries the index (``kernels.closest_point``).  No
+  join, no shuffle, no eager rounds: a single narrow stage over the
+  query side.
+- ring expansion (``knn_join_rings``), a bounded loop of Spark joins
+  (SURVEY.md §2.4 / §3.3).  Round r: every *unfinished* query joins its
+  3x3 cell neighborhood at level L_r against the index side keyed by
+  ``parent(leaf, L_r)``; candidates are ranked with a window
+  (distance, index_key) — the reference's result ordering
+  (S2ClosestEdgeQueryBase.cs:69-120).  A query finishes when its k-th
+  squared-chord distance is smaller than the guaranteed-covered radius
+  of its ring: any point outside the 3x3 neighborhood is at least one
+  cell min-width away (S2Metrics kMinWidth, S2Metrics.cs:75-86).  Each
+  following round coarsens the level by one (ring area x4), so the
+  loop is bounded by ~L rounds and in practice finishes in 1-2; the
+  final fallback (level exhausted, still unfinished) is a cross join of
+  the residual queries — a vanishing fraction.
 
-Scale notes:
+Both arms compute dist2 as ``_dist2``'s ``(dx*dx + dy*dy) + dz*dz`` on
+JVM-normalized unit vectors and order results by (dist2, neighbor_key),
+so they return identical rows.
+
+Scale notes (ring arm):
 - the fact-side never shuffles: the ring explode (x9) feeds a hash
   equi-join on (level, cell); the per-round unfinished set shrinks
   geometrically.
@@ -32,6 +46,7 @@ import math
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -101,6 +116,14 @@ def approx_index_count(index: DataFrame, fraction: float = 0.01) -> int:
     return index.count()  # tiny table: exact count is cheap
 
 
+# Largest index the brute-force arm takes.  Measured on a 4-core host
+# (k=3, Q in {10k, 200k} queries, N in {250, 500, 1000, 2000, 4000}
+# index points; table in CHANGES.md): the brute arm beat the rings at
+# every point, at Q=200k by 6.5x (N=250) to 9.5x (N=4000, 1.8 s vs
+# 17.5 s), so the cutoff is the largest N measured.
+KNN_BRUTE_FORCE_MAX_INDEX = 4000
+
+
 def knn_join(
     spark: SparkSession,
     queries: DataFrame,
@@ -117,7 +140,133 @@ def knn_join(
     max_distance2: float | None = None,
     max_error2: float = 0.0,
 ) -> DataFrame:
-    """k nearest index points per query point.
+    """k nearest index points per query point, by the brute-force scan
+    when the index has at most ``KNN_BRUTE_FORCE_MAX_INDEX`` points,
+    by ring expansion otherwise (the reference's brute-vs-indexed
+    switch, S2ClosestEdgeQueryBase.cs:274-298).
+
+    The size comes from ``index_count`` when given, else from
+    ``approx_index_count``.  ``group_col`` searches always take the
+    rings.  Both arms return the same rows; see ``knn_join_rings`` for
+    the parameters.  The brute arm is exact and runs no rounds, so
+    ``seed_level``, ``max_rounds``, ``checkpoint_dir`` and
+    ``max_error2`` do not apply to it.
+    """
+    if group_col is None:
+        if index_count is None:
+            index_count = approx_index_count(index)
+        if index_count <= KNN_BRUTE_FORCE_MAX_INDEX:
+            return knn_join_brute(
+                queries, index, k, query_key=query_key,
+                index_key=index_key, max_distance2=max_distance2,
+            )
+    return knn_join_rings(
+        spark, queries, index, k, seed_level=seed_level,
+        query_key=query_key, index_key=index_key, max_rounds=max_rounds,
+        group_col=group_col, index_count=index_count,
+        checkpoint_dir=checkpoint_dir,
+        checkpoint_version=checkpoint_version,
+        max_distance2=max_distance2, max_error2=max_error2,
+    )
+
+
+def knn_join_brute(
+    queries: DataFrame,
+    index: DataFrame,
+    k: int,
+    query_key: str = "key",
+    index_key: str = "key",
+    max_distance2: float | None = None,
+) -> DataFrame:
+    """k nearest index points per query point by scanning the whole
+    index: one narrow Arrow UDF pass over the query side, same output
+    and row order as ``knn_join_rings``.
+
+    The index is normalized in the JVM (bit-identical to the ring
+    arm's values), sorted by key in one partition and collected once;
+    ``kernels.closest_point.closest_k`` ranks each Arrow batch against
+    it.  Inputs need (key, x, y, z); ``max_distance2`` keeps pairs with
+    dist2 <= bound.  Indexes above ``BROADCAST_POINT_BUDGET`` points
+    raise: use ``knn_join_rings``.
+    """
+    from pyspark.sql.functions import arrow_udf
+    from pyspark.sql.pandas.types import to_arrow_type
+    from pyspark.sql.types import (
+        ArrayType, DoubleType, StructField, StructType,
+    )
+
+    key_type = index.schema[index_key].dataType
+    rows = (
+        normalized_cols(index)
+        .select(F.col(index_key).alias("ik"), "ux", "uy", "uz")
+        .coalesce(1)
+        .sortWithinPartitions("ik")
+        .limit(BROADCAST_POINT_BUDGET + 1)
+        .collect()
+    )
+    if len(rows) > BROADCAST_POINT_BUDGET:
+        raise ValueError(
+            f"knn_join_brute: index exceeds the broadcast budget of "
+            f"{BROADCAST_POINT_BUDGET} points; use knn_join_rings"
+        )
+    ik = pa.array([r["ik"] for r in rows], type=to_arrow_type(key_type))
+    ix, iy, iz = (
+        np.array([r[c] for r in rows], dtype=np.float64)
+        for c in ("ux", "uy", "uz")
+    )
+
+    @arrow_udf(
+        ArrayType(
+            StructType(
+                [StructField("ik", key_type), StructField("dist2", DoubleType())]
+            )
+        )
+    )
+    def _closest(qx: pa.Array, qy: pa.Array, qz: pa.Array) -> pa.Array:
+        from ..kernels.closest_point import closest_k
+
+        counts, pos, d2 = closest_k(
+            *(c.to_numpy(zero_copy_only=False) for c in (qx, qy, qz)),
+            ix, iy, iz, k, max_distance2,
+        )
+        offsets = np.zeros(len(counts) + 1, dtype=np.int32)
+        np.cumsum(counts, out=offsets[1:])
+        nb = pa.StructArray.from_arrays(
+            [ik.take(pa.array(pos)), pa.array(d2)], names=["ik", "dist2"]
+        )
+        return pa.ListArray.from_arrays(pa.array(offsets), nb)
+
+    res = normalized_cols(queries).select(
+        F.col(query_key).alias("key"),
+        F.posexplode(_closest(F.col("ux"), F.col("uy"), F.col("uz"))).alias(
+            "pos", "nb"
+        ),
+    )
+    return res.select(
+        "key",
+        F.col("nb.ik").alias("neighbor_key"),
+        F.col("nb.dist2").alias("dist2"),
+        (F.col("pos") + 1).cast("long").alias("rn"),
+    )
+
+
+def knn_join_rings(
+    spark: SparkSession,
+    queries: DataFrame,
+    index: DataFrame,
+    k: int,
+    seed_level: int | None = None,
+    query_key: str = "key",
+    index_key: str = "key",
+    max_rounds: int = 8,
+    group_col: str | None = None,
+    index_count: int | None = None,
+    checkpoint_dir: str | None = None,
+    checkpoint_version: str = "v1",
+    max_distance2: float | None = None,
+    max_error2: float = 0.0,
+) -> DataFrame:
+    """k nearest index points per query point by ring expansion.
 
     Inputs need (key, x, y, z, cell_id) columns.  Returns
     (query_key, neighbor_key, dist2, rn) with rn in [1, k] ordered by
@@ -487,6 +636,7 @@ def hausdorff_undirected(
 
 BROADCAST_EDGE_BUDGET = 200_000   # edges a broadcast-evaluate arm accepts
 BROADCAST_CELL_BUDGET = 100_000   # index cells closest_cell_join accepts
+BROADCAST_POINT_BUDGET = 100_000  # index points knn_join_brute accepts
 
 
 def _check_edge_budget(n_edges: int, what: str, distributed_arm: str) -> None:
@@ -1081,29 +1231,6 @@ SELECT key, line_id FROM (
 ) WHERE m <= CAST('{radius_chord2!r}' AS DOUBLE)"""
 
 
-def hausdorff_oracle_sql(
-    a_pts_cte: str, b_pts_cte: str, group_col: str = "grp"
-) -> str:
-    """DuckDB mirror of hausdorff_directed.  The pts CTEs must provide
-    (key, grp, x, y, z)."""
-    d2 = (
-        "((a.ux-b.ux)*(a.ux-b.ux) + (a.uy-b.uy)*(a.uy-b.uy)) "
-        "+ (a.uz-b.uz)*(a.uz-b.uz)"
-    )
-    return f"""WITH {a_pts_cte},
-{b_pts_cte},
-ua AS (SELECT key, grp, x/r AS ux, y/r AS uy, z/r AS uz FROM
-       (SELECT key, grp, x, y, z, sqrt(x*x + y*y + z*z) AS r FROM apts)),
-ub AS (SELECT key, grp, x/r AS ux, y/r AS uy, z/r AS uz FROM
-       (SELECT key, grp, x, y, z, sqrt(x*x + y*y + z*z) AS r FROM bpts)),
-mins AS (
-  SELECT a.key, a.grp, MIN({d2}) AS min_d2
-  FROM ua a JOIN ub b ON a.grp = b.grp
-  GROUP BY a.key, a.grp
-)
-SELECT grp AS {group_col}, MAX(min_d2) AS hausdorff2 FROM mins GROUP BY grp"""
-
-
 def hausdorff_undirected_oracle_sql(
     a_pts_cte: str, b_pts_cte: str, group_col: str = "grp"
 ) -> str:
@@ -1175,8 +1302,10 @@ SELECT key, neighbor_key, dist2, rn FROM (
 # Furthest (max-distance) queries: S2FurthestEdgeQuery.cs +
 # S2MaxDistanceTargets.cs.  On the sphere max-distance is the antipodal
 # min-distance (dist(q, p) = pi - dist(-q, p); squared-chord form:
-# d2(q, p) = 4 - d2(-q, p)), so the same ring-expansion kNN machinery
-# runs on the negated query vectors — no new index structure needed.
+# d2(q, p) = 4 - d2(-q, p)), so the same kNN machinery (either arm of
+# knn_join) runs on the negated query vectors — no new index structure
+# needed.  The brute arm never reads the antipodal cell ids, so Spark
+# prunes their encode pUDF from its plan.
 # ---------------------------------------------------------------------
 
 def furthest_join(

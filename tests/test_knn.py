@@ -48,12 +48,21 @@ def brute_force_knn(q_pdf, i_pdf, k):
     return sorted(out)
 
 
+# knn_join dispatches a small index (the supplier table at small sf)
+# to the brute-force arm; the ring arm is called directly where a test
+# exercises ring behaviour (seed level, rounds, checkpoints, MaxError)
+BOTH_ARMS = pytest.mark.parametrize(
+    "join", [KNN.knn_join_rings, KNN.knn_join], ids=lambda f: f.__name__
+)
+
+
 class TestKnnJoin:
-    def test_matches_brute_force(self, spark, q_df, idx_df):
+    @BOTH_ARMS
+    def test_matches_brute_force(self, spark, q_df, idx_df, join):
         k = 3
         got = sorted(
             (r["key"], r["neighbor_key"], r["rn"])
-            for r in KNN.knn_join(spark, q_df, idx_df, k).collect()
+            for r in join(spark, q_df, idx_df, k).collect()
         )
         want = brute_force_knn(
             q_df.select("key", "x", "y", "z").toPandas(),
@@ -69,23 +78,67 @@ class TestKnnJoin:
         k = 2
         fine = sorted(
             (r["key"], r["neighbor_key"], r["rn"])
-            for r in KNN.knn_join(
+            for r in KNN.knn_join_rings(
                 spark, q_df.limit(200), idx_df, k, seed_level=10
             ).collect()
         )
         auto = sorted(
             (r["key"], r["neighbor_key"], r["rn"])
-            for r in KNN.knn_join(spark, q_df.limit(200), idx_df, k).collect()
+            for r in KNN.knn_join_rings(
+                spark, q_df.limit(200), idx_df, k
+            ).collect()
         )
         assert fine == auto
 
-    def test_k_larger_than_index(self, spark, q_df, idx_df):
+    @BOTH_ARMS
+    def test_k_larger_than_index(self, spark, q_df, idx_df, join):
         n_idx = idx_df.count()
-        got = KNN.knn_join(spark, q_df.limit(20), idx_df, n_idx + 5)
+        got = join(spark, q_df.limit(20), idx_df, n_idx + 5)
         per_q = (
             got.groupBy("key").count().select("count").distinct().collect()
         )
         assert [r["count"] for r in per_q] == [n_idx]
+
+
+@pytest.mark.parametrize("chunk_pairs", [1, 37 * 60, 1 << 16])
+def test_closest_k_kernel_matches_brute_force(monkeypatch, chunk_pairs):
+    """Driver-side check of the brute arm's kernel against the
+    exhaustive oracle above: raw (non-unit) directions, index keys out
+    of order, and five copies of one point under different keys so the
+    k boundary falls inside the tie for queries on that point; chunks
+    of one query, 37 queries, and the whole batch."""
+    import pandas as pd
+
+    from s2geometry_spark.kernels import closest_point as CP
+
+    monkeypatch.setattr(CP, "CHUNK_PAIRS", chunk_pairs)
+
+    rng = np.random.default_rng(11)
+    q = rng.standard_normal((400, 3)) * rng.uniform(0.5, 3.0, (400, 1))
+    i = rng.standard_normal((60, 3))
+    i[10:14] = i[3]
+    q[:20] = i[3]
+    ikeys = rng.permutation(1000)[:60]
+    q_pdf = pd.DataFrame(
+        {"key": np.arange(400), "x": q[:, 0], "y": q[:, 1], "z": q[:, 2]}
+    )
+    i_pdf = pd.DataFrame(
+        {"key": ikeys, "x": i[:, 0], "y": i[:, 1], "z": i[:, 2]}
+    )
+    # kernel inputs: unit vectors in the oracle's (and normalized_cols')
+    # expression order, index sorted by key
+    qu = q / np.sqrt((q * q).sum(axis=1))[:, None]
+    order = np.argsort(ikeys, kind="stable")
+    iu = (i / np.sqrt((i * i).sum(axis=1))[:, None])[order]
+    for k in (1, 3, 7, 60, 65):
+        counts, pos, _ = CP.closest_k(*qu.T, *iu.T, k)
+        assert counts.tolist() == [min(k, 60)] * 400
+        qk = np.repeat(np.arange(400), counts)
+        rn = np.arange(len(pos)) - np.repeat(np.cumsum(counts) - counts, counts)
+        got = sorted(
+            zip(qk.tolist(), ikeys[order][pos].tolist(), (rn + 1).tolist())
+        )
+        assert got == brute_force_knn(q_pdf, i_pdf, k), k
 
 
 class TestHausdorffKnnPath:
@@ -156,11 +209,11 @@ class TestCheckpointedRounds:
         cpdir = str(tmp_path / "knn_cp")
         plain = sorted(
             (r["key"], r["neighbor_key"], r["rn"])
-            for r in KNN.knn_join(spark, q_df, idx_df, k).collect()
+            for r in KNN.knn_join_rings(spark, q_df, idx_df, k).collect()
         )
         first = sorted(
             (r["key"], r["neighbor_key"], r["rn"])
-            for r in KNN.knn_join(
+            for r in KNN.knn_join_rings(
                 spark, q_df, idx_df, k, checkpoint_dir=cpdir
             ).collect()
         )
@@ -182,7 +235,7 @@ class TestCheckpointedRounds:
                 shutil.rmtree(os.path.join(cpdir, d))
         second = sorted(
             (r["key"], r["neighbor_key"], r["rn"])
-            for r in KNN.knn_join(
+            for r in KNN.knn_join_rings(
                 spark, q_df, idx_df, k, checkpoint_dir=cpdir
             ).collect()
         )
@@ -194,13 +247,13 @@ class TestCheckpointedRounds:
         k = 2
         got = sorted(
             (r["key"], r["neighbor_key"], r["rn"])
-            for r in KNN.knn_join(
+            for r in KNN.knn_join_rings(
                 spark, q_df, idx_df, k, index_count=idx_df.count()
             ).collect()
         )
         want = sorted(
             (r["key"], r["neighbor_key"], r["rn"])
-            for r in KNN.knn_join(spark, q_df, idx_df, k).collect()
+            for r in KNN.knn_join_rings(spark, q_df, idx_df, k).collect()
         )
         assert got == want
 
@@ -299,7 +352,7 @@ class TestMaxError:
         tolerance so early termination actually engages, then assert
         the rank-wise bound against brute-force distances."""
         k, e = 3, 1e-4
-        got = KNN.knn_join(
+        got = KNN.knn_join_rings(
             spark, q_df, idx_df, k, seed_level=10, max_error2=e
         ).collect()
         q_pdf = q_df.select("key", "x", "y", "z").toPandas()

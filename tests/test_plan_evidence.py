@@ -86,7 +86,7 @@ def test_knn_join_shuffles_only_on_query_keys(spark, sf_dir, pts):
         P.with_xyz(sup.select(F.col("s_suppkey").alias("key")))
     )
     n_idx = pq.ParquetFile(f"{sf_dir}/supplier.parquet").metadata.num_rows
-    j = KNN.knn_join(spark, pts, idx, 3, index_count=n_idx)
+    j = KNN.knn_join_rings(spark, pts, idx, 3, index_count=n_idx)
     names = [n for n, _ in _walk_plan(j)]
     assert "BroadcastExchangeExec" in names  # index side broadcast
     shuffles = _shuffles(j)
@@ -94,6 +94,36 @@ def test_knn_join_shuffles_only_on_query_keys(spark, sf_dir, pts):
     for part, _cols in shuffles:
         assert "qk" in part, f"shuffle not on query key: {part}"
         assert "ik" not in part, f"index key in shuffle keys: {part}"
+
+
+def test_knn_brute_arm_is_one_narrow_python_pass(spark, sf_dir, pts):
+    """Below the size cutoff knn_join answers every query in one Arrow
+    UDF pass over the query side: no exchange and no join of any kind.
+    furthest_join takes the same arm, and the antipodal cell-id encode
+    it adds is pruned (the brute arm never reads cell ids), so each
+    plan holds exactly one Python node."""
+    import pyarrow.parquet as pq
+
+    from s2geometry_spark.operators import knn as KNN
+    from s2geometry_spark.operators import tile as T
+    from s2geometry_spark.sources import points as P
+
+    sup = spark.read.parquet(f"{sf_dir}/supplier.parquet")
+    idx = T.assign_cellids(
+        P.with_xyz(sup.select(F.col("s_suppkey").alias("key")))
+    )
+    n_idx = pq.ParquetFile(f"{sf_dir}/supplier.parquet").metadata.num_rows
+    assert n_idx <= KNN.KNN_BRUTE_FORCE_MAX_INDEX
+    for op in (KNN.knn_join, KNN.furthest_join):
+        j = op(spark, pts, idx, 3, index_count=n_idx)
+        names = [n for n, _ in _walk_plan(j)]
+        assert "ShuffleExchangeExec" not in names, (op.__name__, names)
+        joins = [
+            n for n in names
+            if "Join" in n or n == "CartesianProductExec"
+        ]
+        assert not joins, (op.__name__, joins)
+        assert names.count("ArrowEvalPythonExec") == 1, (op.__name__, names)
 
 
 def test_doc_near_dup_shuffles_slim_rows_only(spark, sf_dir):

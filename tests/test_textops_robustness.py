@@ -93,7 +93,8 @@ def test_agg_and_projection_band_forms_agree(spark):
     bit-identical band keys to the streaming projection form
     (`_shingle_words` + `_minhash_sig_udf`) on a corpus exercising the
     edge shapes: duplicate shingles, text shorter than SHINGLE_K,
-    empty text, unicode, and exact duplicates."""
+    empty text, unicode, exact duplicates, and NULL text (dropped by
+    both forms)."""
     rows = [
         (1, "abababababababababab"),        # heavy duplicate shingles
         (2, "ab"),                           # shorter than k -> 1 shingle
@@ -101,6 +102,7 @@ def test_agg_and_projection_band_forms_agree(spark):
         (4, "das straßenfoto zeigt blauen himmel über zürich"),
         (5, "das straßenfoto zeigt blauen himmel über zürich"),
         (6, "a perfectly ordinary english sentence for banding"),
+        (7, None),                           # NULL text -> no row
     ]
     docs = spark.createDataFrame(rows, "doc_id LONG, text STRING")
 
@@ -121,6 +123,7 @@ def test_agg_and_projection_band_forms_agree(spark):
         for r in proj_sigs.select("doc_id", *band_cols).collect()
     }
 
+    # the NULL-text row is absent from both forms
     assert set(agg) == set(proj) == {1, 2, 3, 4, 5, 6}
     for doc_id in agg:
         for b in range(TX.LSH_BANDS):
@@ -129,4 +132,7 @@ def test_agg_and_projection_band_forms_agree(spark):
                 b,
             )
     # exact duplicates share every band key in both forms
-    assert all(agg[4][f"band{b}"] == agg[5][f"band{b}"] for b in range(4))
+    assert all(
+        agg[4][f"band{b}"] == agg[5][f"band{b}"]
+        for b in range(TX.LSH_BANDS)
+    )
