@@ -344,6 +344,7 @@ def bench_skew(cores: int, skew_dir: str, passes: int = 2) -> dict:
     try:
         from jobs.gen_sf_scale import METRO_REGION_ID, metro_center
         from s2geometry_spark.kernels.geom import Cap
+        from s2geometry_spark.operators import banded_join as BJ
         from s2geometry_spark.operators import similarity as SIM
         from s2geometry_spark.operators import spatial_join as SJ
         from s2geometry_spark.operators import tile as T
@@ -368,6 +369,13 @@ def bench_skew(cores: int, skew_dir: str, passes: int = 2) -> dict:
 
         NEVER_HOT = 2**31  # threshold no bucket reaches -> unsalted plan
 
+        def ann_candidates(hot_bucket_threshold: int):
+            # the embedding paths' directed band self-join
+            return BJ.banded_self_join(
+                slim, "vec_id", True, SIM.BAND_BITS, SIM.N_BANDS,
+                hot_bucket_threshold, BJ.SALT_G,
+            )
+
         def pip(auto_salt: bool):
             # the unsalted arm must defeat the operator's own hot-cell
             # auto-detection (_resolve_plan salts when >=16 regions
@@ -383,12 +391,8 @@ def bench_skew(cores: int, skew_dir: str, passes: int = 2) -> dict:
         arms = {
             "pip_salted": lambda: pip(True),
             "pip_unsalted": lambda: pip(False),
-            "ann_candidates_salted": lambda: SIM._salted_band_candidates(
-                slim, SIM.ANN_HOT_BUCKET, SIM.ANN_SALT_G
-            ),
-            "ann_candidates_unsalted": lambda: SIM._salted_band_candidates(
-                slim, NEVER_HOT, SIM.ANN_SALT_G
-            ),
+            "ann_candidates_salted": lambda: ann_candidates(BJ.HOT_BUCKET),
+            "ann_candidates_unsalted": lambda: ann_candidates(NEVER_HOT),
         }
         timings: dict[str, float] = {}
         counts: dict[str, int] = {}

@@ -119,19 +119,6 @@ cells AS (
 )"""
 
 
-def cellid_query(table: str, key_expr: str, pts_cte: str) -> str:
-    """Full statement: SELECT key, cell_id for every row of `table`."""
-    return (
-        "WITH RECURSIVE "
-        + lookup_values_sql()
-        + ", "
-        + pts_cte
-        + ", "
-        + cellid_pipeline_ctes()
-        + "\nSELECT key, cell_id FROM cells"
-    )
-
-
 def pip_loop_sql(pts_cte: str, loop_edges_cte: str) -> str:
     """Brute-force point-in-loop join: crossing-number parity of the
     edge (Origin -> P) against every loop edge, mirroring

@@ -46,25 +46,6 @@ def cell_range_max(cell_id: Column, level: int) -> Column:
     return cell_parent(cell_id, level) + F.lit(lsb - 1)
 
 
-def cell_level_expr(col_name: str) -> Column:
-    """Level of a raw-bits cell-id column by name (JVM bit trick).
-
-    lsb = id & -id; its log2 is exact for powers of two <= 2^62 (valid
-    ids have lsb <= 2^60).  For bit 63 the double conversion is still a
-    power of two (abs), so guard with the unsigned-safe formula.
-    """
-    lsb = f"(cast({col_name} as bigint) & -cast({col_name} as bigint))"
-    # shiftrightunsigned gives a non-negative value whose log2 is exact.
-    tz = (
-        f"cast(log2(cast(shiftrightunsigned({lsb}, 1) as double)) as int) + 1"
-    )
-    # lsb==1 (leaf): shiftrightunsigned -> 0, log2 undefined; special-case.
-    return F.expr(
-        f"case when {lsb} = 1 then {MAX_LEVEL} "
-        f"else {MAX_LEVEL} - (({tz}) div 2) end"
-    ).cast("int")
-
-
 def cell_token(cell_id: Column) -> Column:
     """Uppercase-hex trailing-zero-stripped token (S2CellId.cs:647-665),
     JVM-side string ops."""

@@ -255,15 +255,6 @@ def edge_or_vertex_crossing(a, b, c, d) -> bool:
 # Vectorized point-in-loop parity
 # ---------------------------------------------------------------------
 
-def _dets_fast(ax, ay, az, bx, by, bz, c):
-    """(A x B) . C with fixed evaluation order (mirrored in SQL):
-    ((t0*c0 + t1*c1) + t2*c2)."""
-    t0 = ay * bz - az * by
-    t1 = az * bx - ax * bz
-    t2 = ax * by - ay * bx
-    return (t0 * c[0] + t1 * c[1]) + t2 * c[2]
-
-
 def crossing_parity_fast(
     verts: np.ndarray, px: np.ndarray, py: np.ndarray, pz: np.ndarray
 ) -> np.ndarray:

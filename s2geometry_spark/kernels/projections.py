@@ -105,33 +105,3 @@ def tessellate_projected(
     (x0, y0), (x1, y1) = proj(a), proj(b)
     recurse(a, b, x0, y0, x1, y1, 0)
     return out
-
-
-def tessellate_unprojected(
-    xy0, xy1, projection, tolerance_rad: float = 1e-4, max_depth: int = 16
-) -> list:
-    """Planar segment -> geodesic polyline [(x,y,z)...] within tolerance
-    (AppendUnprojected semantics)."""
-
-    def unproj(x, y):
-        lat, lng = projection.unproject(np.array([x]), np.array([y]))
-        la, lo = float(lat[0]), float(lng[0])
-        c = math.cos(la)
-        return np.array([math.cos(lo) * c, math.sin(lo) * c, math.sin(la)])
-
-    p0 = unproj(*xy0)
-    out = [tuple(p0)]
-
-    def recurse(a_xy, b_xy, pa, pb, depth):
-        mid_xy = (0.5 * (a_xy[0] + b_xy[0]), 0.5 * (a_xy[1] + b_xy[1]))
-        pm = unproj(*mid_xy)
-        chord_mid = _slerp(pa, pb, 0.5)
-        err = float(np.linalg.norm(pm - chord_mid))
-        if depth >= max_depth or err <= tolerance_rad:
-            out.append(tuple(pb))
-            return
-        recurse(a_xy, mid_xy, pa, pm, depth + 1)
-        recurse(mid_xy, b_xy, pm, pb, depth + 1)
-
-    recurse(xy0, xy1, p0, unproj(*xy1), 0)
-    return out

@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .banded_join import first_agreeing_band
+
 DEFAULT_N_BANDS = 4
 
 
@@ -74,13 +76,11 @@ def first_band_filter(
     width = 64 // n_bands
     mask = (1 << width) - 1
     x = a_hash.bitwiseXOR(b_hash)
-    first = F.lit(n_bands)  # sentinel: no agreeing band
-    for b in range(n_bands - 1, -1, -1):
-        agrees = (
-            F.shiftrightunsigned(x, b * width).bitwiseAND(F.lit(mask)) == 0
-        )
-        first = F.when(agrees, F.lit(b)).otherwise(first)
-    return first
+    return first_agreeing_band(
+        lambda b: F.shiftrightunsigned(x, b * width).bitwiseAND(F.lit(mask))
+        == 0,
+        n_bands,
+    )
 
 
 def phash_near_dup(

@@ -24,6 +24,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .banded_join import HOT_BUCKET, SALT_G, banded_self_join
+
 DIM = 64
 N_PLANES = 8
 _PLANE_SEED = 20260816
@@ -32,22 +34,10 @@ _PLANE_SEED = 20260816
 CHUNK = 16  # partial-sum width: keeps each codegen'd expression small
 
 
-def _dot_terms_spark(a: str, b: str) -> str:
-    """Chunked dot product: 4 partial sums of 16 terms, combined
-    left-assoc — the SAME association tree as _dot_terms_duck, so both
-    engines produce bit-identical doubles.  (A flat 64-term chain blows
-    Spark's codegen method limit and falls back to interpreted eval.)"""
-    partials = []
-    for lo in range(0, DIM, CHUNK):
-        terms = " + ".join(
-            f"CAST({a}[{i}] AS DOUBLE) * CAST({b}[{i}] AS DOUBLE)"
-            for i in range(lo, lo + CHUNK)
-        )
-        partials.append(f"({terms})")
-    return " + ".join(partials)
-
-
 def _dot_terms_duck(a: str, b: str) -> str:
+    """Chunked dot product in DuckDB SQL: 4 partial sums of 16 terms,
+    combined left-assoc — the SAME association tree as _scalar_dot, so
+    both engines produce bit-identical doubles."""
     partials = []
     for lo in range(0, DIM, CHUNK):
         terms = " + ".join(
@@ -133,218 +123,6 @@ SELECT vec_id, neighbor_id, cosine, rn FROM (
 
 N_BANDS = 4
 BAND_BITS = 8
-ANN_HOT_BUCKET = 64  # band-bucket size above which salting engages
-ANN_SALT_G = 8       # partner groups a hot bucket's pairs spread over
-
-
-def _first_match_band(
-    a_allb: "F.Column", c_allb: "F.Column", n_bands: int, width: int
-) -> "F.Column":
-    """Index of the FIRST band on which two concatenated band-key
-    strings agree (each band key is ``width`` chars).  Keeping a joined
-    row only where its band equals this makes every pair emit exactly
-    once — the stateless pigeonhole dedup already used by the image
-    phash join (operators/image_dedup.first_band_filter), which
-    replaces a full pair-volume dropDuplicates shuffle with a per-row
-    filter evaluated in the joining task."""
-    first = F.lit(n_bands)  # sentinel: unreachable for joined rows
-    for b in range(n_bands - 1, -1, -1):
-        agrees = F.substring(a_allb, b * width + 1, width) == F.substring(
-            c_allb, b * width + 1, width
-        )
-        first = F.when(agrees, F.lit(b)).otherwise(first)
-    return first
-
-
-HOT_IMBALANCE_FACTOR = 1.5  # salt only above this multiple of the
-# ideal per-reducer pair work (TP/P): replication has real overhead
-# (extra rows through the shuffle, and a non-empty hot branch defeats
-# AQE's empty-subtree pruning), so a bucket barely above the balanced
-# share is cheaper to leave on one reducer than to split.  1.5 keeps
-# the sf1 soak's largest bucket (1.2x the ideal share on an otherwise
-# uniform table) on the unsalted plan while every genuinely dominant
-# block (boilerplate clusters measure >= 2x) salts.
-
-
-def shuffle_partitions(df: DataFrame, default: int = 200) -> int:
-    """The session's shuffle-partition count, with a sane fallback for
-    'auto'/unset — shared by the skew-salting paths here and in
-    textops so the reducer-share math and the explicit-count
-    repartition pins stay consistent."""
-    try:
-        return int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    except (TypeError, ValueError):
-        return default
-
-
-def hot_buckets(
-    slim: DataFrame,
-    hot_bucket_threshold: int,
-    key_cols: tuple = ("b", "bk"),
-    imbalance_factor: float = HOT_IMBALANCE_FACTOR,
-) -> DataFrame:
-    """(key_cols..., hot=true) rows for band buckets that would
-    straggle a reducer in the candidate self-join: big in absolute
-    terms (``n > hot_bucket_threshold``) AND with pair volume n^2 above
-    ``imbalance_factor`` x the mean per-reducer share of the total pair
-    work (sum of n_i^2 / shuffle partitions — the balanced share a
-    reducer would carry).  The relative condition keeps uniformly-loaded
-    tables (every bucket moderately sized — e.g. a corpus where
-    everything is ~10x duplicated, the sf1 soak shape) on the unsalted
-    plan, where the hash shuffle is already balanced and replication is
-    pure overhead (measured 2.5x slower salted at sf1); a planted
-    boilerplate block whose buckets dominate the pair work trips both
-    conditions and spreads over ``salt_g`` reducers (measured 1.9x
-    faster salted on the skew fixture)."""
-    n_reducers = shuffle_partitions(slim)
-    cnt = slim.groupBy(*key_cols).agg(F.count(F.lit(1)).alias("n"))
-    total_pair_work = cnt.agg(
-        F.sum(F.col("n").cast("double") * F.col("n")).alias("tp")
-    )
-    work = F.col("n").cast("double") * F.col("n")
-    return (
-        cnt.crossJoin(F.broadcast(total_pair_work))
-        .where(
-            (F.col("n") > hot_bucket_threshold)
-            & (work > F.col("tp") * F.lit(imbalance_factor / n_reducers))
-        )
-        .select(*key_cols, F.lit(True).alias("hot"))
-    )
-
-
-def _salted_band_candidates(
-    slim: DataFrame,
-    hot_bucket_threshold: int = ANN_HOT_BUCKET,
-    salt_g: int = ANN_SALT_G,
-    n_bands: int = N_BANDS,
-    band_bits: int = BAND_BITS,
-) -> DataFrame:
-    """Directed candidate pairs (qid, nid), qid != nid, from the banded
-    (vec_id, b, bk, allb) self-join — with the skew-aware hot-bucket
-    salting ported from ``textops.near_dup_pairs``.
-
-    Embedding tables at 100 TB are *more* skewed than text (boilerplate
-    images, zero vectors, template captions all collapse to identical
-    sign buckets), and the naive self-join sends every pair of a hot
-    bucket to one reducer — O(n_hot^2) on a single core.  Here a first
-    map-side-combinable count pass finds buckets above
-    ``hot_bucket_threshold``; only those rows replicate (left side x
-    ``salt_g`` partner groups, right side keeps its hash group ``g``),
-    so a hot bucket's pairs land on ``salt_g`` reducers.  Cold buckets
-    — the common case — join unsalted with zero replication.
-
-    A pair colliding in several bands is emitted exactly once, WITHOUT
-    a pair-volume dedup shuffle: each row carries the full concatenated
-    signature ``allb``, and the joined row survives only at the first
-    band where both sides agree (``_first_match_band``).  Branch
-    ownership is consistent — a collision's two rows share (b, bk), so
-    both sit in the same (hot or cold) branch, and the pair's first-
-    matching band decides which branch emits it.
-
-    Output pair SET is provably identical to the unsalted join: the
-    hot path enumerates each (qid, nid) exactly once (partner group
-    p == xxhash64(nid) % salt_g partitions the nid side).
-
-    Salting engages only for buckets that would actually STRAGGLE a
-    reducer: ``n > hot_bucket_threshold`` AND the bucket's pair volume
-    n^2 exceeds the mean per-reducer share of the total pair work
-    (sum of n_i^2 over all buckets / shuffle partitions).  The second,
-    relative condition is what keeps a uniformly-loaded table (every
-    bucket moderately sized, e.g. a corpus where EVERYTHING is
-    duplicated ~10x) on the unsalted plan — there the hash shuffle is
-    already balanced across reducers and replication is pure overhead
-    (measured 3-4x slower salted on the sf1 soak, where all 1024
-    band buckets hold ~80 rows each); a planted boilerplate block
-    whose single bucket dominates the pair work still trips both
-    conditions and spreads over ``salt_g`` reducers.
-    """
-    first_b = _first_match_band(
-        F.col("a.allb"), F.col("c.allb"), n_bands, band_bits
-    )
-    # the band rows arrive already materialized by _band_rows (the
-    # 32-plane sign-bucket projection is a huge literal expression
-    # Janino can't compile into one method, so every plan reference
-    # would re-evaluate it interpreted) — a second checkpoint here
-    # would write the whole slim table to executor storage AGAIN just
-    # to add one cheap hash column; g recomputes per read instead
-    slim = slim.withColumn(
-        "g", F.pmod(F.xxhash64("vec_id"), F.lit(salt_g))
-    )
-    # eager emptiness check on the (tiny, aggregated) hot-bucket frame:
-    # on the common unskewed path there are NO hot buckets, so the
-    # two-branch salted plan would double whole-stage-codegen size for
-    # nothing — sf1 soak measured the one-time compile of the bigger
-    # plan at ~25s of a 37s cold run.  The count pass reads the already
-    # checkpointed slim rows, and the salted path reuses the
-    # checkpointed hot frame, so no work is duplicated either way.
-    hot = hot_buckets(slim, hot_bucket_threshold).localCheckpoint()
-    if not hot.take(1):
-        return (
-            slim.drop("g")
-            .alias("a")
-            .join(
-                slim.drop("g").alias("c"),
-                (F.col("a.b") == F.col("c.b"))
-                & (F.col("a.bk") == F.col("c.bk"))
-                & (F.col("a.vec_id") != F.col("c.vec_id")),
-            )
-            .where(F.col("a.b") == first_b)
-            .select(
-                F.col("a.vec_id").alias("qid"),
-                F.col("c.vec_id").alias("nid"),
-            )
-        )
-    marked = slim.join(F.broadcast(hot), ["b", "bk"], "left")
-    cold = marked.where(F.col("hot").isNull()).drop("hot", "g")
-    hotr = marked.where(F.col("hot").isNotNull()).drop("hot")
-    cold_cand = (
-        cold.alias("a")
-        .join(
-            cold.alias("c"),
-            (F.col("a.b") == F.col("c.b"))
-            & (F.col("a.bk") == F.col("c.bk"))
-            & (F.col("a.vec_id") != F.col("c.vec_id")),
-        )
-        .where(F.col("a.b") == first_b)
-        .select(
-            F.col("a.vec_id").alias("qid"),
-            F.col("c.vec_id").alias("nid"),
-        )
-    )
-    # hot buckets: left replicates once per partner group p; the join
-    # requires p == right.g so the shuffle key (b, bk, p) splits a hot
-    # bucket's directed pairs across salt_g reducers
-    # explicit-count repartition on the join keys: AQE's partition
-    # coalescing sizes by INPUT bytes, so it would merge the hot join's
-    # few-MB band rows back into 1-2 tasks and the output-sized pair
-    # emission — the whole point of the split — would run serially
-    # anyway (measured 12.5s -> 1.8s on the skew fixture's hot block
-    # with the pin).  A user-specified repartition count is exempt
-    # from AQE coalescing; same trick BENCH.md documents for the
-    # minhash pUDF stage.
-    n_parts = shuffle_partitions(slim)
-    a = (
-        hotr.withColumn(
-            "p", F.explode(F.array(*[F.lit(i) for i in range(salt_g)]))
-        )
-        .repartition(n_parts, "b", "bk", "p")
-        .alias("a")
-    )
-    hot_cand = (
-        a.join(
-            hotr.repartition(n_parts, "b", "bk", "g").alias("c"),
-            (F.col("a.b") == F.col("c.b"))
-            & (F.col("a.bk") == F.col("c.bk"))
-            & (F.col("a.p") == F.col("c.g"))
-            & (F.col("a.vec_id") != F.col("c.vec_id")),
-        )
-        .where(F.col("a.b") == first_b)
-        .select(
-            F.col("a.vec_id").alias("qid"),
-            F.col("c.vec_id").alias("nid"),
-        )
-    )
-    return cold_cand.unionByName(hot_cand)
 
 
 def lsh_planes(n_planes: int = N_PLANES) -> np.ndarray:
@@ -426,7 +204,8 @@ def _band_rows(emb: DataFrame, bands: list[np.ndarray]) -> DataFrame:
     # materialize once: both sides of the candidate self-join read it.
     # allb (all band keys, fixed-width concat) rides along so the
     # candidate join can keep each pair only at its first matching
-    # band (_first_match_band) instead of a pair-volume dedup shuffle.
+    # band (banded_join.first_match_band) instead of a pair-volume
+    # dedup shuffle.
     return sigs.select(
         "vec_id",
         F.array_join(F.col("bks"), "").alias("allb"),
@@ -439,8 +218,8 @@ def ann_lsh_topk(
     k: int,
     n_bands: int = N_BANDS,
     band_bits: int = BAND_BITS,
-    hot_bucket_threshold: int = ANN_HOT_BUCKET,
-    salt_g: int = ANN_SALT_G,
+    hot_bucket_threshold: int = HOT_BUCKET,
+    salt_g: int = SALT_G,
 ) -> DataFrame:
     """Approximate top-k via banded (OR-amplified) sign-LSH: a pair is
     a candidate when it collides in ANY of ``n_bands`` independent
@@ -451,7 +230,7 @@ def ann_lsh_topk(
     Scale shape mirrors the near-dup LSH join: candidate generation
     shuffles only (vec_id, band, bucket) rows through the skew-aware
     salted self-join (hot buckets spread over ``salt_g`` reducers, see
-    ``_salted_band_candidates``); pairs dedup before the 64-dim scoring
+    ``banded_join.banded_self_join``); pairs dedup before the 64-dim scoring
     components re-attach once.  Recall floors are
     measured in tests/test_similarity_recall.py (>=0.9 on clustered
     corpora; the uniform-random table's analytic limit is documented
@@ -459,9 +238,9 @@ def ann_lsh_topk(
     """
     bands = _band_planes(n_bands, band_bits)
     slim = _band_rows(emb, bands)
-    cand = _salted_band_candidates(
-        slim, hot_bucket_threshold, salt_g, n_bands, band_bits
-    )
+    cand = banded_self_join(
+        slim, "vec_id", True, band_bits, n_bands, hot_bucket_threshold, salt_g
+    ).toDF("qid", "nid")
     qc = _components(emb, "qid", "q")
     ec = _components(emb, "nid", "e")
     pairs = cand.join(qc, on="qid").join(ec, on="nid")
@@ -526,8 +305,8 @@ def embed_near_dup(
     threshold: float = 0.92,
     n_bands: int = N_BANDS,
     band_bits: int = BAND_BITS,
-    hot_bucket_threshold: int = ANN_HOT_BUCKET,
-    salt_g: int = ANN_SALT_G,
+    hot_bucket_threshold: int = HOT_BUCKET,
+    salt_g: int = SALT_G,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate grouping (the embedding-space
     twin of ``textops.near_dup_pairs``): candidates from the banded
@@ -541,7 +320,7 @@ def embed_near_dup(
 
     Scale shape: identical to ``ann_lsh_topk`` — the self-join touches
     only slim (vec_id, band, bucket) rows through the skew-aware salted
-    form (``_salted_band_candidates``; hot buckets of boilerplate
+    form (``banded_join.banded_self_join``; hot buckets of boilerplate
     embeddings spread over ``salt_g`` reducers instead of one), pairs
     dedup before the 64-float components attach, and the final fold is
     a single map-side-combinable min/count agg on vec_id.  No cross
@@ -550,9 +329,9 @@ def embed_near_dup(
     """
     bands = _band_planes(n_bands, band_bits)
     slim = _band_rows(emb, bands)
-    cand = _salted_band_candidates(
-        slim, hot_bucket_threshold, salt_g, n_bands, band_bits
-    )
+    cand = banded_self_join(
+        slim, "vec_id", True, band_bits, n_bands, hot_bucket_threshold, salt_g
+    ).toDF("qid", "nid")
     qc = _components(emb, "qid", "q")
     ec = _components(emb, "nid", "e")
     cos = F.expr(f"({_scalar_dot('q', 'e')})") / (F.col("qn") * F.col("en"))

@@ -10,8 +10,8 @@ the driver's correctness oracle; the shared hash primitive is md5
 Scale notes: all operators are single-pass scans + one hash-key
 aggregation/join; minhash banding converts O(n^2) near-dup search into
 an equi-join on band keys (the standard shingle->minhash->band->bucket
-pipeline); skewed bucket keys (boilerplate docs) are bounded by
-band-key salting upstream if needed.
+pipeline); skewed bucket keys (boilerplate docs) are bounded by the
+hot-bucket salting of banded_join.banded_self_join.
 """
 
 from __future__ import annotations
@@ -19,6 +19,8 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from .banded_join import HOT_BUCKET, SALT_G, banded_self_join
 
 STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "on")
 
@@ -354,9 +356,6 @@ def minhash_signature(docs: DataFrame) -> DataFrame:
     )
 
 
-NEAR_DUP_HOT_BUCKET = 64  # band-bucket size above which salting engages
-
-
 def doc_shingles(docs: DataFrame) -> DataFrame:
     """(doc_id, shingles): distinct k-char shingles per document.
     NULL-text rows are dropped (their shingle array would be [NULL],
@@ -497,8 +496,8 @@ def doc_band_rows(
 def near_dup_pairs(
     docs: DataFrame,
     with_mutants: bool = True,
-    salt_g: int = 8,
-    hot_bucket_threshold: int = NEAR_DUP_HOT_BUCKET,
+    salt_g: int = SALT_G,
+    hot_bucket_threshold: int = HOT_BUCKET,
 ) -> DataFrame:
     """MinHash-LSH near-duplicate candidate pairs, verified by exact
     shingle Jaccard >= 0.5.
@@ -508,14 +507,12 @@ def near_dup_pairs(
     ride through the shuffle; each pair emits exactly once (first-band
     pigeonhole filter — no pair-volume dedup shuffle) and the two
     shingle sets attach once for the verification step.  Salting is
-    skew-AWARE: one cheap count pass over the slim band rows finds the
-    hot buckets (> ``hot_bucket_threshold`` members — boilerplate
-    corpora where thousands of docs share every band), and only rows in
-    those buckets pay the partner-group replication: the left side
-    replicates each hot row once per partner group and the join key
-    includes the right row's group, so a hot bucket's n^2 candidate
-    pairs land on ``salt_g`` partitions instead of one.  Cold buckets
-    (the common case) join unsalted — zero replication overhead.
+    skew-AWARE (``banded_join.banded_self_join``): only rows in hot
+    buckets (> ``hot_bucket_threshold`` members — boilerplate corpora
+    where thousands of docs share every band) pay the partner-group
+    replication, so a hot bucket's n^2 candidate pairs land on
+    ``salt_g`` partitions instead of one; cold buckets (the common
+    case) join unsalted.
 
     ``with_mutants`` unions a deterministic mutated copy of each doc
     (id -> -id - 1, text + marker suffix) so the pipeline provably
@@ -523,8 +520,6 @@ def near_dup_pairs(
     can never collide with a real non-negative doc_id (a fixed
     additive offset silently collided with corpora whose ids reached
     it)."""
-    from .similarity import _first_match_band
-
     base = docs.select("doc_id", "text")
     if with_mutants:
         mut = docs.select(
@@ -533,103 +528,27 @@ def near_dup_pairs(
         )
         base = base.unionByName(mut)
 
-    bands = _stack_bands(_with_allb(_banded(base)), "allb").select(
-        "doc_id", "allb", "b", "bk",
-        F.pmod(F.xxhash64("doc_id"), F.lit(salt_g)).alias("g"),
-    ).localCheckpoint()
-    first_b = _first_match_band(
-        F.col("a.allb"), F.col("c.allb"), LSH_BANDS, 32
+    # materialized once: the skew gate and both join sides read it
+    bands = doc_band_rows(base, with_allb=True).localCheckpoint()
+    cand = banded_self_join(
+        bands, "doc_id", False, 32, LSH_BANDS, hot_bucket_threshold, salt_g
     )
-    # skew detection: bucket sizes over the slim rows (map-side combine,
-    # tiny result).  A bucket salts only when it is big in absolute
-    # terms AND its pair volume n^2 exceeds the mean per-reducer share
-    # of the total pair work — a uniformly duplicated corpus (every
-    # bucket moderately sized, no straggler reducer) stays on the
-    # unsalted plan where the hash shuffle is already balanced and
-    # replication is pure overhead (see similarity.hot_buckets).
-    from .similarity import hot_buckets
+    return _jaccard_verified(cand, base)
 
-    # eager emptiness check, same rationale as
-    # similarity._salted_band_candidates: with no hot buckets (the
-    # common unskewed corpus) return the plain one-branch join so
-    # whole-stage codegen never pays for the salted half of the plan
-    hot = hot_buckets(bands, hot_bucket_threshold).localCheckpoint()
-    if not hot.take(1):
-        cand = (
-            bands.drop("g")
-            .alias("a")
-            .join(
-                bands.drop("g").alias("c"),
-                (F.col("a.bk") == F.col("c.bk"))
-                & (F.col("a.b") == F.col("c.b"))
-                & (F.col("a.doc_id") < F.col("c.doc_id")),
-            )
-            .where(F.col("a.b") == first_b)
-            .select(
-                F.col("a.doc_id").alias("id_a"),
-                F.col("c.doc_id").alias("id_b"),
-            )
-        )
-        return _jaccard_verified(cand, base)
-    marked = bands.join(F.broadcast(hot), ["b", "bk"], "left")
-    cold = marked.where(F.col("hot").isNull()).drop("hot", "g")
-    hotr = marked.where(F.col("hot").isNotNull()).drop("hot")
-    cold_cand = (
-        cold.alias("a")
-        .join(
-            cold.alias("c"),
-            (F.col("a.bk") == F.col("c.bk"))
-            & (F.col("a.b") == F.col("c.b"))
-            & (F.col("a.doc_id") < F.col("c.doc_id")),
-        )
-        .where(F.col("a.b") == first_b)
-        .select(
-            F.col("a.doc_id").alias("id_a"),
-            F.col("c.doc_id").alias("id_b"),
-        )
-    )
-    # hot buckets: left replicates once per partner group p; join
-    # requires p == right.g, so the shuffle key (b, bk, p) splits a hot
-    # bucket's pairs across salt_g reducers.  Explicit-count
-    # repartition pins the split through AQE, whose coalescing sizes by
-    # INPUT bytes and would otherwise merge the few-MB band rows back
-    # into 1-2 tasks, serializing the output-sized pair emission (see
-    # similarity._salted_band_candidates).
-    from .similarity import shuffle_partitions
 
-    n_parts = shuffle_partitions(bands)
-    a = (
-        hotr.withColumn(
-            "p", F.explode(F.array(*[F.lit(i) for i in range(salt_g)]))
-        )
-        .repartition(n_parts, "b", "bk", "p")
-        .alias("a")
-    )
-    hot_cand = (
-        a.join(
-            hotr.repartition(n_parts, "b", "bk", "g").alias("c"),
-            (F.col("a.bk") == F.col("c.bk"))
-            & (F.col("a.b") == F.col("c.b"))
-            & (F.col("a.p") == F.col("c.g"))
-            & (F.col("a.doc_id") < F.col("c.doc_id")),
-        )
-        .where(F.col("a.b") == first_b)
-        .select(
-            F.col("a.doc_id").alias("id_a"),
-            F.col("c.doc_id").alias("id_b"),
-        )
-    )
-    # each pair already emits exactly once (first-band filter; branch
-    # ownership is consistent because a collision's two rows share
-    # (b, bk) and therefore sit in the same hot/cold branch)
-    return _jaccard_verified(cold_cand.unionByName(hot_cand), base)
+def jaccard(a: Column, b: Column) -> Column:
+    """Exact Jaccard of two shingle sets (distinct-element arrays) as a
+    double: the ONE expression behind the batch verification and the
+    streaming dedup refine, so the two cannot drift."""
+    inter = F.size(F.array_intersect(a, b)).cast("double")
+    union = F.size(F.array_union(a, b)).cast("double")
+    return inter / union
 
 
 def _jaccard_verified(cand: DataFrame, base: DataFrame) -> DataFrame:
     """Exact-Jaccard verification of LSH candidate pairs: re-attach the
     two shingle sets once, post-candidate-dedup, and keep pairs at
-    Jaccard >= 0.5 — shared by the salted and one-branch unsalted
-    candidate plans of near_dup_pairs."""
+    Jaccard >= 0.5."""
     sh = doc_shingles(base)
     cand = cand.join(
         sh.select(
@@ -642,10 +561,8 @@ def _jaccard_verified(cand: DataFrame, base: DataFrame) -> DataFrame:
         ),
         on="id_b",
     )
-    inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b"))).cast("double")
-    union = F.size(F.array_union(F.col("sh_a"), F.col("sh_b"))).cast("double")
     return (
-        cand.withColumn("jaccard", inter / union)
+        cand.withColumn("jaccard", jaccard(F.col("sh_a"), F.col("sh_b")))
         .where(F.col("jaccard") >= 0.5)
         .select("id_a", "id_b", "jaccard")
     )

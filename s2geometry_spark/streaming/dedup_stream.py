@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from ..operators import textops as TX
-from ..operators.similarity import _first_match_band
+from ..operators.banded_join import first_match_band
 
 NEAR_DUP_TAU = 0.5
 
@@ -81,7 +81,7 @@ def _matches(
     -> first-agreeing-band pigeonhole -> exact Jaccard refine against
     the static shingle table.  Every join is stream-static."""
     bands = TX.doc_band_rows(docs, with_allb=True, with_shingles=True)
-    first_b = _first_match_band(
+    first_b = first_match_band(
         F.col("allb"), F.col("allb_s"), TX.LSH_BANDS, 32
     )
     cand = (
@@ -91,14 +91,10 @@ def _matches(
         .select("doc_id", "sid", "shingles")
     )
     pairs = cand.join(F.broadcast(shingle_index), on="sid")
-    inter = F.size(
-        F.array_intersect(F.col("shingles"), F.col("sh_s"))
-    ).cast("double")
-    union = F.size(
-        F.array_union(F.col("shingles"), F.col("sh_s"))
-    ).cast("double")
     return (
-        pairs.withColumn("jaccard", inter / union)
+        pairs.withColumn(
+            "jaccard", TX.jaccard(F.col("shingles"), F.col("sh_s"))
+        )
         .where(F.col("jaccard") >= F.lit(tau))
         .select("doc_id", F.col("sid").alias("dup_of"), "jaccard")
     )

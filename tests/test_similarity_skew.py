@@ -2,8 +2,9 @@
 (hundreds of identical embeddings sharing every sign band) must engage
 the partner-group salting, spread the hot bucket's pair volume over
 ``salt_g`` reducer keys, and produce the exact same pair set as the
-unsalted join.  Ports the textops skew guarantees (near_dup_pairs,
-textops.py:409-449) to ``similarity._salted_band_candidates``."""
+unsalted join.  The embedding and text near-dup families share one
+band self-join, ``banded_join.banded_self_join``: the embedding paths
+call it directed, ``textops.near_dup_pairs`` undirected."""
 
 from __future__ import annotations
 
@@ -12,7 +13,15 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from s2geometry_spark.operators import banded_join as BJ
 from s2geometry_spark.operators import similarity as SIM
+
+
+def _cand(slim, directed=True, **kw):
+    """The embedding paths' candidate join over (vec_id, allb, b, bk)."""
+    return BJ.banded_self_join(
+        slim, "vec_id", directed, SIM.BAND_BITS, SIM.N_BANDS, **kw
+    )
 
 
 def _emb_df(spark, n_same: int, n_rand: int):
@@ -36,18 +45,40 @@ def test_hot_bucket_salting_preserves_pair_set(spark):
     emb = _emb_df(spark, n_same=120, n_rand=40)
     bands = SIM._band_planes(SIM.N_BANDS, SIM.BAND_BITS)
     slim = SIM._band_rows(emb, bands)
-    salted = SIM._salted_band_candidates(
-        slim, hot_bucket_threshold=16, salt_g=8
-    )
-    unsalted = SIM._salted_band_candidates(
-        slim, hot_bucket_threshold=10**9, salt_g=8
-    )
+    salted = _cand(slim, hot_bucket_threshold=16, salt_g=8)
+    unsalted = _cand(slim, hot_bucket_threshold=10**9, salt_g=8)
     got = sorted(tuple(r) for r in salted.collect())
     want = sorted(tuple(r) for r in unsalted.collect())
     assert got == want
     # the planted clone block collides in every band -> 120*119 pairs
     n_same_pairs = sum(1 for a, b in got if a < 120 and b < 120)
     assert n_same_pairs == 120 * 119
+
+
+def test_directed_and_undirected_modes_agree(spark):
+    """One slim table with a planted hot bucket, both modes, salted
+    (threshold 16) and unsalted (threshold 10**9): each mode's pair
+    set is the same either way, no pair is emitted twice, and the
+    undirected set is exactly the directed set cut to id_a < id_b."""
+    emb = _emb_df(spark, n_same=120, n_rand=40)
+    slim = SIM._band_rows(emb, SIM._band_planes(SIM.N_BANDS, SIM.BAND_BITS))
+    got = {}
+    for directed in (True, False):
+        for threshold in (16, 10**9):
+            rows = [
+                tuple(r)
+                for r in _cand(
+                    slim, directed, hot_bucket_threshold=threshold, salt_g=8
+                ).collect()
+            ]
+            assert len(rows) == len(set(rows)), (directed, threshold)
+            got[directed, threshold] = set(rows)
+        assert got[directed, 16] == got[directed, 10**9]
+    directed, undirected = got[True, 16], got[False, 16]
+    assert undirected == {(a, b) for a, b in directed if a < b}
+    assert directed == undirected | {(b, a) for a, b in undirected}
+    # every pair inside the planted clone block, once
+    assert sum(1 for a, b in undirected if b < 120) == 120 * 119 // 2
 
 
 def test_hot_bucket_pairs_spread_over_salt_groups(spark):
@@ -116,12 +147,12 @@ def test_uniform_buckets_stay_unsalted(spark):
     )
     bands = SIM._band_planes(SIM.N_BANDS, SIM.BAND_BITS)
     slim = SIM._band_rows(emb, bands)
-    assert SIM.hot_buckets(slim, hot_bucket_threshold=16).count() == 0
+    assert BJ.hot_buckets(slim, hot_bucket_threshold=16).count() == 0
 
     # planted dominant block: one bucket holds most of the pair work
     hot_emb = _emb_df(spark, n_same=300, n_rand=40)
     hot_slim = SIM._band_rows(hot_emb, bands)
-    assert SIM.hot_buckets(hot_slim, hot_bucket_threshold=16).count() > 0
+    assert BJ.hot_buckets(hot_slim, hot_bucket_threshold=16).count() > 0
 
 
 def test_unskewed_corpus_compiles_one_branch_plan(spark):
@@ -134,12 +165,12 @@ def test_unskewed_corpus_compiles_one_branch_plan(spark):
     emb = _emb_df(spark, n_same=1, n_rand=60)
     bands = SIM._band_planes(SIM.N_BANDS, SIM.BAND_BITS)
     slim = SIM._band_rows(emb, bands)
-    cand = SIM._salted_band_candidates(slim, hot_bucket_threshold=16)
+    cand = _cand(slim, hot_bucket_threshold=16)
     plan = cand._jdf.queryExecution().executedPlan().toString()
     assert "explode" not in plan and "Union" not in plan
 
     hot_emb = _emb_df(spark, n_same=120, n_rand=10)
     hot_slim = SIM._band_rows(hot_emb, bands)
-    hot_cand = SIM._salted_band_candidates(hot_slim, hot_bucket_threshold=16)
+    hot_cand = _cand(hot_slim, hot_bucket_threshold=16)
     hot_plan = hot_cand._jdf.queryExecution().executedPlan().toString()
     assert "explode" in hot_plan and "Union" in hot_plan

@@ -76,6 +76,7 @@ def test_pip_salted_equals_unsalted_rows(spark, skew_dir):
 
 
 def test_embedding_hot_bucket_engages_and_matches(spark, skew_dir):
+    from s2geometry_spark.operators import banded_join as BJ
     from s2geometry_spark.operators import similarity as SIM
 
     emb = spark.read.parquet(f"{skew_dir}/embeddings.parquet")
@@ -86,12 +87,17 @@ def test_embedding_hot_bucket_engages_and_matches(spark, skew_dir):
     hot_n = (
         slim.groupBy("b", "bk")
         .count()
-        .where(F.col("count") > SIM.ANN_HOT_BUCKET)
+        .where(F.col("count") > BJ.HOT_BUCKET)
         .count()
     )
     assert hot_n >= SIM.N_BANDS  # one hot bucket per band
-    salted = SIM._salted_band_candidates(slim, SIM.ANN_HOT_BUCKET, 8)
-    unsalted = SIM._salted_band_candidates(slim, 2**31, 8)
+    def cand(threshold):
+        return BJ.banded_self_join(
+            slim, "vec_id", True, SIM.BAND_BITS, SIM.N_BANDS, threshold, 8
+        )
+
+    salted = cand(BJ.HOT_BUCKET)
+    unsalted = cand(2**31)
     got = sorted(tuple(r) for r in salted.collect())
     assert got == sorted(tuple(r) for r in unsalted.collect())
     hot = SIZES["hot_emb"]
