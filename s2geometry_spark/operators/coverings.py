@@ -1,17 +1,18 @@
-"""Region dim-table -> exploded covering DataFrame.
+"""Region dim-table -> exploded covering table.
 
 Driver-side coverer over the (small) region side, exploded into rows
-(region_id, cell_id, is_interior, level) for the covering-term
-equi-join (SURVEY.md §2.4, after Index/S2RegionTermIndexer.cs:80-135).
-The covering table is broadcast; at 10^12-image scale the probe side
-streams through a hash join with zero shuffle of the fact table.
+(region_id, cov_cell, level, is_interior) for the covering-term
+equi-join ``spatial_join.covering_join`` (SURVEY.md §2.4, after
+Index/S2RegionTermIndexer.cs:80-135).  The covering table is
+broadcast; at 10^12-image scale the probe side streams through a hash
+join with zero shuffle of the fact table.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 from ..kernels import cellid as CI
 from ..kernels import cellunion as CU
@@ -26,7 +27,7 @@ def build_covering_rows(
 ) -> pd.DataFrame:
     """Compute coverings for (region_id, Region) pairs on the driver.
 
-    Returns pandas DataFrame (region_id, cell_id int64 raw bits, level,
+    Returns pandas DataFrame (region_id, cov_cell int64 raw bits, level,
     is_interior).  For exterior coverings is_interior marks covering
     cells that are entirely contained in the region (cheap PIP skip at
     refine time, mirroring MutableS2ShapeIndex contains_center).
@@ -46,61 +47,8 @@ def build_covering_rows(
             is_int = bool(region.contains_cell(Cell(cid)))
             rows.append((region_id, CI.as_i64(np.array([cid], np.uint64))[0], lv, is_int))
     return pd.DataFrame(
-        rows, columns=["region_id", "cell_id", "level", "is_interior"]
-    ).astype({"cell_id": "int64", "level": "int32", "is_interior": "bool"})
-
-
-def covering_df(
-    spark: SparkSession,
-    regions: list[tuple[object, Region]],
-    options: CovererOptions | None = None,
-    extra_cols: pd.DataFrame | None = None,
-) -> DataFrame:
-    """Spark DataFrame of covering rows, optionally joined with extra
-    per-region columns (e.g. cap parameters for the refine step)."""
-    pdf = build_covering_rows(regions, options)
-    if extra_cols is not None:
-        pdf = pdf.merge(extra_cols, on="region_id", how="left")
-    return spark.createDataFrame(pdf, schema=_schema_of(pdf, regions))
-
-
-def _schema_of(pdf: pd.DataFrame, regions):
-    """Explicit schema so empty coverings (empty/degenerate regions)
-    still produce a valid empty DataFrame.
-
-    Each column is typed from its OWN dtype; only ``region_id`` (which
-    pandas upcasts to object for string keys, or to float64 when a
-    left merge introduces NaN) falls back to the region-key sample.
-    An extra_cols column with an unsupported dtype fails loudly rather
-    than silently inheriting the region key's type."""
-    from pyspark.sql import types as T
-
-    mapping = {
-        "int64": T.LongType(), "int32": T.IntegerType(),
-        "int16": T.ShortType(), "int8": T.ByteType(),
-        "float64": T.DoubleType(), "float32": T.FloatType(),
-        "bool": T.BooleanType(), "object": T.StringType(),
-    }
-    fields = []
-    for col, dtype in pdf.dtypes.items():
-        dt = str(dtype)
-        if col == "region_id":
-            sample = regions[0][0] if regions else ""
-            t = T.LongType() if isinstance(sample, int) else T.StringType()
-        else:
-            t = mapping.get(dt)
-            if t is None:
-                raise TypeError(
-                    f"covering extra column {col!r} has unsupported "
-                    f"pandas dtype {dt}; cast it before covering_df"
-                )
-            if dt == "object":
-                vals = [v for v in pdf[col] if v is not None and v == v]
-                if vals and all(isinstance(v, bool) for v in vals):
-                    # bool column turned object by a left merge's NaN
-                    t = T.BooleanType()
-        fields.append(T.StructField(str(col), t, True))
-    return T.StructType(fields)
+        rows, columns=["region_id", "cov_cell", "level", "is_interior"]
+    ).astype({"cov_cell": "int64", "level": "int32", "is_interior": "bool"})
 
 
 def covering_levels(pdf_or_df) -> list[int]:

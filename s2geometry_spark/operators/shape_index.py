@@ -26,8 +26,8 @@ Spark plan shape:
   ``build_index_df`` distributed over regions via applyInPandas — each
   region's covering/clipping is independent, so the build parallelizes
   by region (the 100-TB fact side never participates).
-- candidate generation: identical covering-term equi-join as
-  spatial_join.point_in_loop_join (index cells are disjoint: at most
+- candidate generation: the shared covering-term equi-join
+  ``spatial_join.covering_join`` (index cells are disjoint: at most
   one candidate row per (point, region), no dedup shuffle).
 - refine: vectorized pUDF over Arrow batches grouped by index cell —
   O(edges-in-cell) per point instead of O(all edges).
@@ -45,6 +45,7 @@ from ..kernels import cellid as CI
 from ..kernels import edges as E
 from ..kernels.coverer import CovererOptions, RegionCoverer
 from ..kernels.geom import Cell
+from . import coverings as COV
 from . import spatial_join as SJ
 
 
@@ -189,26 +190,20 @@ def point_in_loop_index_join(
     options: CovererOptions | None = None,
     point_key: str = "key",
 ) -> DataFrame:
-    """Point-in-polygon join via the broadcast shape index: candidate
-    generation identical to spatial_join.point_in_loop_join, refine
+    """Point-in-polygon join via the broadcast shape index: candidates
+    from ``spatial_join.covering_join`` over the index cells, refine
     O(edges-in-cell) per candidate.  Output rows equal the brute-force
     (all-edges) join exactly on general-position inputs."""
     entries, cov_pdf = build_loop_index_entries(loops, options)
-    levels = sorted(int(v) for v in cov_pdf["level"].unique())
-    cov = spark.createDataFrame(cov_pdf).withColumnRenamed(
-        "cov_cell", "idx_cell"
-    )
-    probe = SJ.explode_ancestors(points, levels)
-    joined = probe.join(
-        F.broadcast(cov), probe["anc_cell"] == cov["idx_cell"], "inner"
+    cov = SJ.typed_cov_df(spark, cov_pdf, "region_id", [rid for rid, _ in loops])
+    joined = SJ.covering_join(
+        points, cov, COV.covering_levels(cov_pdf), point_key=point_key
     )
     contains = cell_parity_udf(entries)
     pred = contains(
-        F.col("region_id"), F.col("idx_cell"),
+        F.col("region_id"), F.col("cov_cell"),
         F.col("x"), F.col("y"), F.col("z"),
     )
-    # index cells are disjoint per region -> at most one candidate row
-    # per (point, region); no dedup needed.
     return joined.where(pred).select(F.col(point_key), F.col("region_id"))
 
 
@@ -330,8 +325,9 @@ def point_in_polygon_index_df_join(
     the plan for region tables too large to broadcast (10^6 admin
     polygons with 10^5-edge boundaries):
 
-    1. points explode ancestors at the index's levels; shuffle
-       equi-join on (cell id) against the index-edge rows;
+    1. ``spatial_join.covering_join`` without a broadcast hint: points
+       explode ancestors at the index's levels; shuffle equi-join on
+       (cell id) against the index-edge rows;
     2. the refine is PURE JVM column arithmetic: each candidate row
        tests whether the geodesic [cell_center -> point] crosses its
        one edge (the same fixed-order sign expression the crossing
@@ -341,18 +337,14 @@ def point_in_polygon_index_df_join(
     3. index cells are disjoint per region, so each point contributes
        to exactly one cell's parity group.
     """
-    from . import spatial_join as SJ
     from ..operators.crossing import crossing_condition_sql
 
-    levels = sorted(
-        r["level"]
-        for r in index_edges.select("level").distinct().collect()
-    )
-    probe = SJ.explode_ancestors(points, levels)
-    cand = probe.join(
-        index_edges.withColumnRenamed("cell_id", "idx_cell"),
-        probe["anc_cell"] == F.col("idx_cell"),
-        "inner",
+    cand = SJ.covering_join(
+        points,
+        index_edges.withColumnRenamed("cell_id", "cov_cell"),
+        COV.covering_levels(index_edges),
+        broadcast=False,
+        point_key=point_key,
     )
     # A = cell center, B = the point (bare x/y/z columns), (C, D) = edge
     crossed = F.when(

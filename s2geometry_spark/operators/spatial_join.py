@@ -1,12 +1,18 @@
 """Distributed point-in-region joins.
 
-Pattern (SURVEY.md §2.4, after Index/S2RegionTermIndexer.cs): the
-region side explodes to covering cells (small, broadcast); the point
-side explodes each leaf cell to its ancestors at exactly the covering's
-distinct levels; a hash equi-join on the cell id yields candidates
-(a superset, at most one covering cell matches per region since
-covering cells are disjoint); an exact vectorized refine predicate
-keeps true containments.
+Pattern (SURVEY.md §2.4, after Index/S2RegionTermIndexer.cs and
+Index/S2CellIndex.cs): every region join is a driver-side coverer, one
+of two candidate joins below, and an exact vectorized refine predicate
+that keeps true containments.
+
+- ``covering_join``: the region side is a covering-cell table; the
+  point side explodes each leaf cell to its ancestors at exactly the
+  covering's distinct levels; a hash equi-join on the cell id yields
+  candidates (a superset; at most one covering cell matches per region
+  since covering cells are disjoint).
+- ``leaf_range_join``: the region side is a table of disjoint leaf
+  ranges on *biased* ids; a broadcast range predicate yields the
+  candidates.
 
 Scale notes:
 - Broadcast path: zero shuffle of the fact table; candidate explosion
@@ -14,15 +20,19 @@ Scale notes:
 - Shuffle path (region side too big to broadcast): hash join on
   (cell_id) with explicit salting for hot cells — replicate each
   covering row SALT_K times, probe picks pmod(hash(key), SALT_K); plus
-  AQE skew-join as backstop.
+  AQE skew-join as backstop.  ``_resolve_plan`` makes the choice.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import sparkfns as S
+from ..kernels import cellid as CI
+from ..kernels import cellunion as CU
 from ..kernels.coverer import CovererOptions
 from ..kernels.geom import Cap
 from . import coverings as COV
@@ -36,52 +46,55 @@ def normalized_cols(df: DataFrame, x="x", y="y", z="z") -> DataFrame:
     )
 
 
-def explode_ancestors(
-    points: DataFrame, levels: list[int], cell_col: str = "cell_id"
-) -> DataFrame:
-    """One row per (point, level) with the ancestor cell at that level.
-
-    Pure-JVM: array of bit-arithmetic parents + explode; stays in
-    whole-stage codegen.  An empty ``levels`` (empty/degenerate region
-    list) yields a valid zero-row frame rather than an un-typeable
-    empty array expression."""
-    if not levels:
-        return points.withColumn(
-            "anc_cell", F.lit(None).cast("long")
-        ).where(F.lit(False))
-    arr = F.array(*[S.cell_parent(F.col(cell_col), lv) for lv in levels])
-    return points.withColumn("anc_cell", F.explode(arr))
-
-
-def typed_cov_df(spark, pdf, id_col, ids, numeric):
-    """createDataFrame with an EXPLICIT schema: an empty region list
-    produces an all-object empty pandas frame that Spark cannot infer
-    a schema from (the covering_df path solves this with _schema_of;
-    this is the same guarantee for the ad-hoc covering/range frames).
-    ``numeric`` maps every non-id column to its Spark type; the id
-    column is typed from a sample id (LongType default)."""
+def typed_cov_df(spark, pdf: pd.DataFrame, id_col: str, ids) -> DataFrame:
+    """createDataFrame with an EXPLICIT schema — the one path every
+    covering and range frame takes.  An empty region list produces an
+    all-object empty pandas frame that Spark cannot infer a schema
+    from, so each column is typed from its OWN dtype (the row functions cast
+    their columns, so empty frames keep them; object columns hold
+    strings, such as query terms) and an unsupported dtype fails
+    loudly.  The id column, which pandas leaves object for
+    string or empty keys, is typed from a sample id (LongType unless
+    the ids are strings)."""
     from pyspark.sql import types as T
 
-    id_t = (
-        T.StringType()
-        if ids and isinstance(ids[0], str)
-        else T.LongType()
-    )
-    fields = [
-        T.StructField(c, id_t if c == id_col else numeric[c], True)
-        for c in pdf.columns
-    ]
+    spark_types = {
+        "int64": T.LongType(), "int32": T.IntegerType(),
+        "float64": T.DoubleType(), "bool": T.BooleanType(),
+        "object": T.StringType(),
+    }
+    fields = []
+    for col, dtype in pdf.dtypes.items():
+        if col == id_col:
+            t = T.StringType() if ids and isinstance(ids[0], str) else T.LongType()
+        elif str(dtype) in spark_types:
+            t = spark_types[str(dtype)]
+        else:
+            raise TypeError(
+                f"covering column {col!r} has unsupported pandas dtype "
+                f"{dtype}; cast it before building the frame"
+            )
+        fields.append(T.StructField(str(col), t, True))
     return spark.createDataFrame(pdf, schema=T.StructType(fields))
 
 
-def cap_refine_predicate(
-    ux: Column, uy: Column, uz: Column, cx: Column, cy: Column, cz: Column, r2: Column
-) -> Column:
-    """Exact cap containment: squared chord length <= radius2
+def cap_refine_predicate() -> Column:
+    """Exact containment of the unit point (ux, uy, uz) in the cap
+    (cx, cy, cz, r2): squared chord length <= radius2
     (S2Cap.cs:480-486).  min(4, |p-c|^2) like S1ChordAngle ctor."""
-    dx, dy, dz = ux - cx, uy - cy, uz - cz
+    dx, dy, dz = (F.col(f"u{a}") - F.col(f"c{a}") for a in "xyz")
     chord2 = dx * dx + dy * dy + dz * dz
-    return F.least(chord2, F.lit(4.0)) <= r2
+    return F.least(chord2, F.lit(4.0)) <= F.col("r2")
+
+
+def with_cap_params(pdf: pd.DataFrame, caps) -> pd.DataFrame:
+    """Attach each cap's refine parameters (cx, cy, cz, r2) to its
+    covering or range rows."""
+    params = pd.DataFrame(
+        [(rid, *c.center, c.radius2) for rid, c in caps],
+        columns=["region_id", "cx", "cy", "cz", "r2"],
+    ).astype({c: "float64" for c in ("cx", "cy", "cz", "r2")})
+    return pdf.merge(params, on="region_id", how="left")
 
 
 BROADCAST_COVERING_LIMIT = 100_000  # rows; ~a few MB broadcast
@@ -96,10 +109,91 @@ def _resolve_plan(cov_pdf, broadcast, salt_k):
     if broadcast == "auto":
         broadcast = len(cov_pdf) <= BROADCAST_COVERING_LIMIT
     if not broadcast and salt_k == 0:
-        hot = int(cov_pdf.groupby("cell_id").size().max()) if len(cov_pdf) else 0
+        hot = int(cov_pdf.groupby("cov_cell").size().max()) if len(cov_pdf) else 0
         if hot >= HOT_CELL_SALT_THRESHOLD:
             salt_k = 8
     return broadcast, salt_k
+
+
+def covering_join(
+    points: DataFrame,
+    cov: DataFrame,
+    levels: list[int],
+    broadcast: bool = True,
+    salt_k: int = 0,
+    point_key: str = "key",
+) -> DataFrame:
+    """The candidate join of every covering-term region join: each
+    point's leaf ``cell_id`` explodes to its ancestor ``anc_cell`` at
+    exactly the covering's ``levels`` (pure-JVM bit arithmetic, stays
+    in whole-stage codegen), then equi-joins ``anc_cell == cov_cell``
+    against the covering frame ``cov``.  Covering cells are disjoint
+    per region, so each (point, region) pair is at most one candidate
+    row — no dedup shuffle.
+
+    ``broadcast`` hints the covering side.  On the shuffle path,
+    ``salt_k > 0`` spreads hot covering cells (urban tiles) over K
+    reducers: covering rows replicate K times and the probe picks one
+    salt bucket (SURVEY.md §4 skew row).  An empty ``levels``
+    (empty/degenerate region list) yields a valid zero-row frame
+    rather than an un-typeable empty array expression."""
+    if levels:
+        arr = F.array(*[S.cell_parent(F.col("cell_id"), lv) for lv in levels])
+        probe = points.withColumn("anc_cell", F.explode(arr))
+    else:
+        probe = points.withColumn(
+            "anc_cell", F.lit(None).cast("long")
+        ).where(F.lit(False))
+    if salt_k and not broadcast:
+        cov = cov.withColumn(
+            "salt", F.explode(F.array(*[F.lit(i) for i in range(salt_k)]))
+        )
+        probe = probe.withColumn(
+            "salt", F.pmod(F.hash(F.col(point_key)), F.lit(salt_k))
+        )
+        return probe.join(
+            cov,
+            (probe["anc_cell"] == cov["cov_cell"])
+            & (probe["salt"] == cov["salt"]),
+            "inner",
+        )
+    if broadcast:
+        cov = F.broadcast(cov)
+    return probe.join(cov, probe["anc_cell"] == cov["cov_cell"], "inner")
+
+
+def _biased_bounds(pdf: pd.DataFrame) -> pd.DataFrame:
+    """Raw inclusive leaf bounds (lo, hi) -> biased signed bounds, in
+    one vectorized ``CI.bias`` call."""
+    b = CI.bias(pdf[["lo", "hi"]].to_numpy(np.uint64).reshape(-1, 2))
+    return pdf.assign(lo=b[:, 0], hi=b[:, 1])
+
+
+def leaf_range_join(points: DataFrame, ranges: DataFrame) -> DataFrame:
+    """The S2CellIndex candidate join (Index/S2CellIndex.cs:56-71):
+    broadcast range predicate ``bias(leaf) BETWEEN lo AND hi`` against
+    a table of disjoint leaf ranges on *biased* ids (order-isomorphic
+    to unsigned cell-id order).  The fact side never shuffles."""
+    probe = points.withColumn("leaf_biased", S.cell_bias(F.col("cell_id")))
+    cond = (F.col("leaf_biased") >= F.col("lo")) & (
+        F.col("leaf_biased") <= F.col("hi")
+    )
+    return probe.join(F.broadcast(ranges), on=cond, how="inner")
+
+
+def _normalized_cover_rows(id_col: str, coverings) -> pd.DataFrame:
+    """(id_col, cov_cell, level) rows of each region's normalized
+    covering, from [(id, covering cells)] — disjoint cells, so each
+    (point, region) pair matches at most one row."""
+    ids, cells = [], []
+    for rid, cov in coverings:
+        cov = CU.normalize(cov)
+        ids += [rid] * len(cov)
+        cells += cov
+    u = np.array(cells, dtype=np.uint64)
+    return pd.DataFrame(
+        {id_col: ids, "cov_cell": CI.as_i64(u), "level": CI.level(u)}
+    )
 
 
 def point_in_cap_join(
@@ -118,48 +212,19 @@ def point_in_cap_join(
     ``broadcast="auto"`` picks the broadcast plan for dim-sized
     coverings and the salted shuffle plan otherwise.
     """
-    import pandas as pd
-
-    extra = pd.DataFrame(
-        [
-            (rid, c.center[0], c.center[1], c.center[2], c.radius2)
-            for rid, c in caps
-        ],
-        columns=["region_id", "cx", "cy", "cz", "r2"],
+    cov_pdf = COV.build_covering_rows(caps, options)
+    broadcast, salt_k = _resolve_plan(cov_pdf, broadcast, salt_k)
+    cov = typed_cov_df(
+        spark, with_cap_params(cov_pdf, caps), "region_id",
+        [rid for rid, _ in caps],
     )
-    cov_rows = COV.build_covering_rows(caps, options)
-    broadcast, salt_k = _resolve_plan(cov_rows, broadcast, salt_k)
-    # reuse the rows already built for plan resolution — covering_df
-    # would re-run the full RegionCoverer search per cap on the driver
-    pdf = cov_rows.merge(extra, on="region_id", how="left")
-    cov = spark.createDataFrame(pdf, schema=COV._schema_of(pdf, caps))
-    levels = COV.covering_levels(cov_rows)
-    probe = explode_ancestors(normalized_cols(points), levels)
-    cov = cov.withColumnRenamed("cell_id", "cov_cell")
-    if salt_k and not broadcast:
-        # replicate region rows K times; probe picks one salt bucket
-        cov = cov.withColumn(
-            "salt", F.explode(F.array(*[F.lit(i) for i in range(salt_k)]))
-        )
-        probe = probe.withColumn(
-            "salt", F.pmod(F.hash(F.col(point_key)), F.lit(salt_k))
-        )
-        join_cond = (F.col("anc_cell") == F.col("cov_cell")) & (
-            probe["salt"] == cov["salt"]
-        )
-        joined = probe.join(cov, on=join_cond, how="inner")
-    else:
-        right = F.broadcast(cov) if broadcast else cov
-        joined = probe.join(right, probe["anc_cell"] == right["cov_cell"], "inner")
-    refined = joined.where(
-        cap_refine_predicate(
-            F.col("ux"), F.col("uy"), F.col("uz"),
-            F.col("cx"), F.col("cy"), F.col("cz"), F.col("r2"),
-        )
+    joined = covering_join(
+        normalized_cols(points), cov, COV.covering_levels(cov_pdf),
+        broadcast, salt_k, point_key,
     )
-    # covering cells are disjoint -> at most one candidate row per
-    # (point, region); no dedup needed.
-    return refined.select(F.col(point_key), F.col("region_id"))
+    return joined.where(cap_refine_predicate()).select(
+        F.col(point_key), F.col("region_id")
+    )
 
 
 def point_in_loop_join(
@@ -175,9 +240,8 @@ def point_in_loop_join(
     """Join points (x,y,z + cell_id columns) to containing loop regions.
 
     Pattern (SURVEY.md §2.4): region loops -> driver-side coverer ->
-    broadcast covering table; probe explodes leaf ancestors at the
-    covering's levels; hash equi-join; crossing-number parity refine
-    (vectorized pUDF, S2Loop.cs Contains semantics).
+    ``covering_join``; crossing-number parity refine (vectorized pUDF,
+    S2Loop.cs Contains semantics).
 
     ``skip_interior=True`` skips the parity test for candidates whose
     covering cell is provably interior (MutableS2ShapeIndex
@@ -189,30 +253,10 @@ def point_in_loop_join(
 
     cov_pdf = COV.build_covering_rows(loops, options)
     broadcast, salt_k = _resolve_plan(cov_pdf, broadcast, salt_k)
-    levels = COV.covering_levels(cov_pdf)
-    cov = spark.createDataFrame(
-        cov_pdf, schema=COV._schema_of(cov_pdf, loops)
-    ).withColumnRenamed("cell_id", "cov_cell")
-    probe = explode_ancestors(points, levels)
-    if salt_k and not broadcast:
-        # hot covering cells (urban tiles): replicate covering rows K
-        # times, probe picks one salt bucket — the shuffle join spreads
-        # a hot cell over K reducers (SURVEY.md §4 skew row).
-        cov = cov.withColumn(
-            "salt", F.explode(F.array(*[F.lit(i) for i in range(salt_k)]))
-        )
-        probe = probe.withColumn(
-            "salt", F.pmod(F.hash(F.col(point_key)), F.lit(salt_k))
-        )
-        joined = probe.join(
-            cov,
-            (probe["anc_cell"] == cov["cov_cell"])
-            & (probe["salt"] == cov["salt"]),
-            "inner",
-        )
-    else:
-        right = F.broadcast(cov) if broadcast else cov
-        joined = probe.join(right, probe["anc_cell"] == right["cov_cell"], "inner")
+    cov = typed_cov_df(spark, cov_pdf, "region_id", [rid for rid, _ in loops])
+    joined = covering_join(
+        points, cov, COV.covering_levels(cov_pdf), broadcast, salt_k, point_key
+    )
     loops_by_id = {
         rid: (rg.edges, rg.origin_inside) for rid, rg in loops
     }
@@ -231,64 +275,32 @@ def point_in_cap_range_join(
     point_key: str = "key",
 ) -> DataFrame:
     """Point-in-cap join via the S2CellIndex pattern (SURVEY.md §2.4
-    cell-range join, Index/S2CellIndex.cs:56-71): coverings decomposed
-    into disjoint leaf ranges on *biased* ids; candidates from a
-    broadcast range predicate `bias(leaf) BETWEEN lo AND hi`; exact
-    chord refine.  Result rows are identical to point_in_cap_join.
+    cell-range join): coverings decomposed into disjoint leaf ranges
+    -> ``leaf_range_join``; exact chord refine.  Result rows are
+    identical to point_in_cap_join.
 
     Scale note: the range form suits few-large-regions workloads (ranges
     << covering cells); for many regions the equi-join form wins.
     """
-    import numpy as np
-    import pandas as pd
-
-    from ..kernels import cellid as CI
-    from ..kernels import cellunion as CU
     from ..kernels.coverer import RegionCoverer
 
     rc = RegionCoverer(options)
-    rows = []
-    for rid, cap in caps:
-        cov = CU.normalize(rc.get_covering(cap))
-        for lo, hi in CU.leaf_ranges(cov):
-            rows.append(
-                (
-                    rid,
-                    int(CI.bias(np.array([lo], np.uint64))[0]),
-                    int(CI.bias(np.array([hi], np.uint64))[0]),
-                    cap.center[0], cap.center[1], cap.center[2], cap.radius2,
-                )
-            )
-    from pyspark.sql import types as T
-
+    rows = [
+        (rid, lo, hi)
+        for rid, cap in caps
+        for lo, hi in CU.leaf_ranges(CU.normalize(rc.get_covering(cap)))
+    ]
+    ranges = _biased_bounds(
+        pd.DataFrame(rows, columns=["region_id", "lo", "hi"])
+    )
     ranges = typed_cov_df(
-        spark,
-        pd.DataFrame(
-            rows,
-            columns=["region_id", "lo", "hi", "cx", "cy", "cz", "r2"],
-        ),
-        "region_id",
+        spark, with_cap_params(ranges, caps), "region_id",
         [rid for rid, _ in caps],
-        {
-            "lo": T.LongType(), "hi": T.LongType(),
-            "cx": T.DoubleType(), "cy": T.DoubleType(),
-            "cz": T.DoubleType(), "r2": T.DoubleType(),
-        },
     )
-    probe = normalized_cols(points).withColumn(
-        "leaf_biased", S.cell_bias(F.col("cell_id"))
+    joined = leaf_range_join(normalized_cols(points), ranges)
+    return joined.where(cap_refine_predicate()).select(
+        F.col(point_key), F.col("region_id")
     )
-    cond = (F.col("leaf_biased") >= F.col("lo")) & (
-        F.col("leaf_biased") <= F.col("hi")
-    )
-    joined = probe.join(F.broadcast(ranges), on=cond, how="inner")
-    refined = joined.where(
-        cap_refine_predicate(
-            F.col("ux"), F.col("uy"), F.col("uz"),
-            F.col("cx"), F.col("cy"), F.col("cz"), F.col("r2"),
-        )
-    )
-    return refined.select(F.col(point_key), F.col("region_id"))
 
 
 def point_near_loop_join(
@@ -305,41 +317,21 @@ def point_near_loop_join(
     (kernels.buffered_region, the S2ShapeIndexBufferedRegion pattern —
     cell-to-edge distances drive the coverer, no buffer polygon is
     ever built and no whole-parent-cell over-covering as with
-    S2CellUnion.Expand); the refine predicate is crossing parity OR
-    min boundary edge distance (vectorized)."""
-    import math
-
-    import pandas as pd
-
+    S2CellUnion.Expand) through ``covering_join``; the refine
+    predicate is crossing parity OR min boundary edge distance
+    (vectorized)."""
     from ..functions import udfs as U
-    from ..kernels import cellid as CI
-    from ..kernels import cellunion as CU
     from ..kernels.buffered_region import buffered_loop_covering
 
-    import numpy as np
-
-    rows = []
-    for rid, lp in loops:
-        cov = CU.normalize(
-            buffered_loop_covering(lp, radius_rad, options)
-        )
-        for cid in cov:
-            rows.append(
-                (rid, int(CI.as_i64(np.array([cid], np.uint64))[0]), CU._level(cid))
-            )
-    from pyspark.sql import types as T
-
-    cov_pdf = pd.DataFrame(rows, columns=["region_id", "cov_cell", "level"])
-    levels = sorted(int(v) for v in cov_pdf["level"].unique())
-    cov = typed_cov_df(
-        spark, cov_pdf, "region_id", [rid for rid, _ in loops],
-        {"cov_cell": T.LongType(), "level": T.LongType()},
+    cov_pdf = _normalized_cover_rows(
+        "region_id",
+        ((rid, buffered_loop_covering(lp, radius_rad, options))
+         for rid, lp in loops),
     )
-    probe = explode_ancestors(normalized_cols(points), levels)
-    # expanded coverings are normalized (disjoint), so each (point,
-    # region) matches at most one covering cell — no dedup shuffle.
-    joined = probe.join(
-        F.broadcast(cov), probe["anc_cell"] == cov["cov_cell"], "inner"
+    cov = typed_cov_df(spark, cov_pdf, "region_id", [rid for rid, _ in loops])
+    joined = covering_join(
+        normalized_cols(points), cov, COV.covering_levels(cov_pdf),
+        point_key=point_key,
     )
     radius_chord2 = near_chord2(radius_rad)  # the ONE shared definition
     loops_by_id = {rid: (lp.verts, lp.origin_inside) for rid, lp in loops}
@@ -348,33 +340,6 @@ def point_near_loop_join(
         near(F.col("region_id"), F.col("ux"), F.col("uy"), F.col("uz"))
     )
     return refined.select(F.col(point_key), F.col("region_id"))
-
-
-def polyline_covering_rows(
-    polylines: list, radius_rad: float, options=None
-):
-    """(line_id, cov_cell, level) pandas frame of normalized buffered-
-    polyline covering cells — the broadcast index side shared by the
-    batch join below and the stream-static route matcher
-    (streaming/route_stream.py)."""
-    import numpy as np
-    import pandas as pd
-
-    from ..kernels import cellid as CI
-    from ..kernels import cellunion as CU
-    from ..kernels.buffered_region import buffered_polyline_covering
-
-    rows = []
-    for lid, verts in polylines:
-        cov = CU.normalize(
-            buffered_polyline_covering(verts, radius_rad, options)
-        )
-        for cid in cov:
-            rows.append(
-                (lid, int(CI.as_i64(np.array([cid], np.uint64))[0]),
-                 CU._level(cid))
-            )
-    return pd.DataFrame(rows, columns=["line_id", "cov_cell", "level"])
 
 
 def near_chord2(radius_rad: float) -> float:
@@ -389,34 +354,6 @@ def near_chord2(radius_rad: float) -> float:
     return min(4.0, 4 * s * s)
 
 
-def near_polyline_refine(
-    points: DataFrame,
-    cov: DataFrame,
-    levels: list[int],
-    lines_by_id: dict,
-    radius_chord2: float,
-    point_key: str = "key",
-) -> DataFrame:
-    """The candidate-join + exact-refine core of the within-distance
-    polyline join, shared VERBATIM by the batch operator below and the
-    streaming twin (streaming/route_stream) so their plans cannot
-    drift: leaf-encoded points -> ancestor terms at the covering
-    levels -> broadcast covering equi-join -> vectorized
-    min-edge-distance predicate.  Normalized coverings are disjoint
-    per line, so each (point, line) candidate appears once — no dedup
-    shuffle."""
-    from ..functions import udfs as U
-
-    probe = explode_ancestors(normalized_cols(points), levels)
-    joined = probe.join(
-        F.broadcast(cov), probe["anc_cell"] == cov["cov_cell"], "inner"
-    )
-    near = U.polyline_near_udf(lines_by_id, radius_chord2)
-    return joined.where(
-        near(F.col("line_id"), F.col("ux"), F.col("uy"), F.col("uz"))
-    ).select(F.col(point_key), F.col("line_id"))
-
-
 def point_near_polyline_join(
     spark: SparkSession,
     points: DataFrame,
@@ -428,25 +365,32 @@ def point_near_polyline_join(
     """Within-distance join against POLYLINE dim geometry ("points
     within d of a route"): candidates from the distance-callback
     buffered-polyline covering (kernels.buffered_region — cell-to-edge
-    distances drive the coverer, no stadium polygon is built), refined
-    by the exact vectorized min-edge-distance predicate.
+    distances drive the coverer, no stadium polygon is built) through
+    ``covering_join``, refined by the exact vectorized min-edge-distance
+    predicate.  The streaming twin (streaming/route_stream) runs this
+    same operator over each micro-batch, so their plans cannot drift.
 
     ``polylines``: [(line_id, verts (m,3))].  Output (key, line_id)."""
-    import numpy as np
+    from ..functions import udfs as U
+    from ..kernels.buffered_region import buffered_polyline_covering
 
-    from pyspark.sql import types as T
-
-    cov_pdf = polyline_covering_rows(polylines, radius_rad, options)
-    levels = sorted(int(v) for v in cov_pdf["level"].unique())
-    cov = typed_cov_df(
-        spark, cov_pdf, "line_id", [lid for lid, _ in polylines],
-        {"cov_cell": T.LongType(), "level": T.LongType()},
+    cov_pdf = _normalized_cover_rows(
+        "line_id",
+        ((lid, buffered_polyline_covering(verts, radius_rad, options))
+         for lid, verts in polylines),
     )
-    lines_by_id = {lid: np.asarray(v, dtype=float) for lid, v in polylines}
-    return near_polyline_refine(
-        points, cov, levels, lines_by_id, near_chord2(radius_rad),
+    cov = typed_cov_df(
+        spark, cov_pdf, "line_id", [lid for lid, _ in polylines]
+    )
+    joined = covering_join(
+        normalized_cols(points), cov, COV.covering_levels(cov_pdf),
         point_key=point_key,
     )
+    lines_by_id = {lid: np.asarray(v, dtype=float) for lid, v in polylines}
+    near = U.polyline_near_udf(lines_by_id, near_chord2(radius_rad))
+    return joined.where(
+        near(F.col("line_id"), F.col("ux"), F.col("uy"), F.col("uz"))
+    ).select(F.col(point_key), F.col("line_id"))
 
 
 def point_in_cap_semi(
@@ -477,39 +421,23 @@ def label_range_join(
 
     The driver sweeps the entries into disjoint leaf ranges
     (kernels.cell_index), so each point matches exactly one range row
-    per label — no dedup shuffle; the fact side never shuffles (the
-    range table broadcasts)."""
-    import pandas as pd
-
-    from ..kernels import cellid as CI
+    per label — no dedup shuffle; ``leaf_range_join`` broadcasts the
+    range table, so the fact side never shuffles.  Labels are an
+    opaque caller type (S2CellIndex allows arbitrary labels); only the
+    range bounds are cast."""
     from ..kernels.cell_index import CellIndex
 
-    import numpy as np
-
-    idx = CellIndex(entries)
-    rows = []
-    for lo, hi, labels in idx.range_rows():
-        lo_b = int(CI.bias(np.array([lo], dtype=np.uint64))[0])
-        hi_b = int(CI.bias(np.array([hi], dtype=np.uint64))[0])
-        for lab in labels:
-            rows.append((lo_b, hi_b, lab))
-    from pyspark.sql import types as T
-
-    # cast only the range bounds: labels are an opaque caller type
-    # (S2CellIndex allows arbitrary labels), and an empty entry list
-    # still needs an explicit schema
+    rows = [
+        (lo, hi, lab)
+        for lo, hi, labels in CellIndex(entries).range_rows()
+        for lab in labels
+    ]
     ranges = typed_cov_df(
         spark,
-        pd.DataFrame(rows, columns=["lo", "hi", "label"]).astype(
-            {"lo": "int64", "hi": "int64"}
-        ),
+        _biased_bounds(pd.DataFrame(rows, columns=["lo", "hi", "label"])),
         "label",
         [lab for _cid, lab in entries],
-        {"lo": T.LongType(), "hi": T.LongType()},
     )
-    probe = points.withColumn("leaf_biased", S.cell_bias(F.col("cell_id")))
-    cond = (F.col("leaf_biased") >= F.col("lo")) & (
-        F.col("leaf_biased") <= F.col("hi")
+    return leaf_range_join(points, ranges).select(
+        F.col(point_key), F.col("label")
     )
-    joined = probe.join(F.broadcast(ranges), on=cond, how="inner")
-    return joined.select(F.col(point_key), F.col("label"))

@@ -23,12 +23,16 @@ from dataclasses import replace
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, StringType
 
 from ..kernels.term_indexer import TermOptions, region_query_terms
-from .spatial_join import cap_refine_predicate, normalized_cols
+from .spatial_join import (
+    cap_refine_predicate,
+    normalized_cols,
+    typed_cov_df,
+    with_cap_params,
+)
 
 
 def point_index_terms_udf(opts: TermOptions):
@@ -70,35 +74,16 @@ def term_index_cap_join(
     # ~2x the broadcast rows for zero extra candidates
     # (Index/S2RegionTermIndexer.cs index_contains_points_only)
     qopts = replace(opts, index_contains_points_only=True)
-    qrows = []
-    for rid, cap in caps:
-        for t in sorted(set(region_query_terms(qopts, cap))):
-            qrows.append(
-                (rid, t, cap.center[0], cap.center[1], cap.center[2],
-                 cap.radius2)
-            )
-    rid_t = (
-        T.LongType()
-        if (caps and isinstance(caps[0][0], int)) or not caps
-        else T.StringType()
-    )
-    qschema = T.StructType(
-        [
-            T.StructField("region_id", rid_t, True),
-            T.StructField("term", T.StringType(), True),
-            T.StructField("cx", T.DoubleType(), True),
-            T.StructField("cy", T.DoubleType(), True),
-            T.StructField("cz", T.DoubleType(), True),
-            T.StructField("r2", T.DoubleType(), True),
-        ]
-    )
-    # explicit schema: caps=[] must yield an empty result, not an
-    # unable-to-infer-schema error
-    qterms = spark.createDataFrame(
-        pd.DataFrame(
-            qrows, columns=["region_id", "term", "cx", "cy", "cz", "r2"]
-        ),
-        schema=qschema,
+    qrows = [
+        (rid, t)
+        for rid, cap in caps
+        for t in sorted(set(region_query_terms(qopts, cap)))
+    ]
+    qterms = typed_cov_df(
+        spark,
+        with_cap_params(pd.DataFrame(qrows, columns=["region_id", "term"]), caps),
+        "region_id",
+        [rid for rid, _ in caps],
     )
     idx = normalized_cols(points).select(
         point_key,
@@ -113,10 +98,5 @@ def term_index_cap_join(
     # index terms are one-per-level and query terms dedup'd, but a
     # region's covering can still match a point at several levels —
     # dedup (point, region) before the refine output
-    refined = cand.where(
-        cap_refine_predicate(
-            F.col("ux"), F.col("uy"), F.col("uz"),
-            F.col("cx"), F.col("cy"), F.col("cz"), F.col("r2"),
-        )
-    )
+    refined = cand.where(cap_refine_predicate())
     return refined.select(F.col(point_key), F.col("region_id")).distinct()

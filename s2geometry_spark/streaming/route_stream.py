@@ -5,33 +5,34 @@ operators/spatial_join.point_near_polyline_join.
 
 Production shape at 100 TB ingestion: the routes' buffered coverings
 (kernels.buffered_region distance-callback coverer) are a slim
-precomputed broadcast index (line_id, cov_cell, level); each
-micro-batch Arrow-encodes its points to leaf cells, explodes ancestor
-terms at the covering levels, equi-joins the broadcast index, and
-refines with the exact vectorized min-edge-distance predicate.  The
-stream never shuffles, every batch does O(batch x matching-cells)
-work, and the output is append-mode — no unbounded state.
+broadcast table (line_id, cov_cell, level); each micro-batch
+Arrow-encodes its points to leaf cells and runs the batch operator
+itself — ``spatial_join.covering_join`` (ancestor terms at the covering
+levels, broadcast equi-join) plus the exact vectorized
+min-edge-distance refine.  The stream never shuffles, every batch does
+O(batch x matching-cells) work, and the output is append-mode — no
+unbounded state.
 
-Both forms delegate their candidate-join + refine body to
-``spatial_join.near_polyline_refine`` — ONE plan fragment, so the
-stream, the batch replay, and the batch join operator cannot drift.
-Batch twin ``batch_route_matches`` replays the same plan over the
-directory; trigger=availableNow equality is asserted in
+The covering table is built from a tiny driver-side frame — cheap to
+recompute, so it is deliberately NOT checkpointed (localCheckpoint
+blocks are non-reliable: losing the executor that held them would
+kill a long-running stream that plain lineage recomputes for free).
+
+Both forms are ``spatial_join.point_near_polyline_join`` over
+leaf-encoded points — ONE plan, so the stream, the batch replay, and
+the batch join operator cannot drift.  Batch twin
+``batch_route_matches`` replays the same plan over the directory;
+trigger=availableNow equality is asserted in
 tests/test_route_stream.py.
 """
 
 from __future__ import annotations
 
-import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 from ..operators import tile as T
-from ..operators.spatial_join import (
-    near_chord2,
-    near_polyline_refine,
-    polyline_covering_rows,
-)
+from ..operators.spatial_join import point_near_polyline_join
 
 # the documented ingestion contract: (key, x, y, z) direction rows.
 # Declared, not inferred — a file-source stream must be startable
@@ -48,32 +49,13 @@ POINT_SCHEMA = StructType(
 )
 
 
-def route_cover_index(
-    spark: SparkSession, polylines: list, radius_rad: float, options=None
-) -> tuple[DataFrame, list[int]]:
-    """Precompute the static side once: the slim broadcastable
-    (line_id, cov_cell) index plus the covering levels the probe side
-    must explode.  Built from a tiny driver-side frame — cheap to
-    recompute, so it is deliberately NOT checkpointed (localCheckpoint
-    blocks are non-reliable: losing the executor that held them would
-    kill a long-running stream that plain lineage recomputes for
-    free)."""
-    cov_pdf = polyline_covering_rows(polylines, radius_rad, options)
-    levels = sorted(cov_pdf["level"].unique().tolist())
-    return spark.createDataFrame(cov_pdf), levels
-
-
 def _matches(
-    points: DataFrame,
-    cov: DataFrame,
-    levels: list[int],
-    lines_by_id: dict,
-    radius_chord2: float,
+    spark: SparkSession, points: DataFrame, polylines: list, radius_rad: float
 ) -> DataFrame:
-    """Shared stream/batch plan: leaf encode, then the exact same
-    candidate-join + refine fragment as the batch join operator."""
-    return near_polyline_refine(
-        T.assign_cellids(points), cov, levels, lines_by_id, radius_chord2
+    """Shared stream/batch plan: leaf encode, then the batch join
+    operator."""
+    return point_near_polyline_join(
+        spark, T.assign_cellids(points), polylines, radius_rad
     )
 
 
@@ -89,13 +71,7 @@ def streaming_route_matches(
     parquet batches of (key, x, y, z) direction rows; pass ``schema``
     if a producer writes extra columns."""
     stream = spark.readStream.schema(schema).parquet(pts_path)
-    cov, levels = route_cover_index(spark, polylines, radius_rad)
-    lines_by_id = {
-        lid: np.asarray(v, dtype=float) for lid, v in polylines
-    }
-    return _matches(
-        stream, cov, levels, lines_by_id, near_chord2(radius_rad)
-    )
+    return _matches(spark, stream, polylines, radius_rad)
 
 
 def batch_route_matches(
@@ -105,11 +81,4 @@ def batch_route_matches(
     radius_rad: float,
 ) -> DataFrame:
     """Batch replay twin of streaming_route_matches."""
-    pts = spark.read.parquet(pts_path)
-    cov, levels = route_cover_index(spark, polylines, radius_rad)
-    lines_by_id = {
-        lid: np.asarray(v, dtype=float) for lid, v in polylines
-    }
-    return _matches(
-        pts, cov, levels, lines_by_id, near_chord2(radius_rad)
-    )
+    return _matches(spark, spark.read.parquet(pts_path), polylines, radius_rad)

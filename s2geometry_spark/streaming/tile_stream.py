@@ -125,37 +125,16 @@ def run_available_now(query_df: DataFrame, name: str, checkpoint: str):
 def _region_joined(
     spark: SparkSession, df: DataFrame, caps: list, tile_level: int
 ) -> DataFrame:
-    """Shared plan: event points -> covering-term stream-static
-    broadcast join -> exact chord refine -> (ts, region_id)."""
-    import pandas as pd
-
-    from ..operators import coverings as COV
+    """Shared plan: event points -> ``spatial_join.point_in_cap_join``
+    (covering-term stream-static broadcast join, exact chord refine)
+    -> (ts, region_id).  The event timestamp rides through the join as
+    the carried point-key column."""
     from ..operators import spatial_join as SJ
 
-    pts = event_tiles(df, tile_level)
-    extra = pd.DataFrame(
-        [
-            (rid, c.center[0], c.center[1], c.center[2], c.radius2)
-            for rid, c in caps
-        ],
-        columns=["region_id", "cx", "cy", "cz", "r2"],
+    return SJ.point_in_cap_join(
+        spark, event_tiles(df, tile_level), caps, broadcast=True,
+        point_key="ts",
     )
-    cov_rows = COV.build_covering_rows(caps)
-    cov = COV.covering_df(spark, caps, extra_cols=extra).withColumnRenamed(
-        "cell_id", "cov_cell"
-    )
-    levels = COV.covering_levels(cov_rows)
-    probe = SJ.explode_ancestors(SJ.normalized_cols(pts), levels)
-    joined = probe.join(
-        F.broadcast(cov), probe["anc_cell"] == cov["cov_cell"], "inner"
-    )
-    refined = joined.where(
-        SJ.cap_refine_predicate(
-            F.col("ux"), F.col("uy"), F.col("uz"),
-            F.col("cx"), F.col("cy"), F.col("cz"), F.col("r2"),
-        )
-    )
-    return refined.select("ts", "region_id")
 
 
 def streaming_region_counts(
