@@ -31,13 +31,29 @@ Both arms compute dist2 as ``_dist2``'s ``(dx*dx + dy*dy) + dz*dz`` on
 JVM-normalized unit vectors and order results by (dist2, neighbor_key),
 so they return identical rows.
 
-Scale notes (ring arm):
-- the fact-side never shuffles: the ring explode (x9) feeds a hash
-  equi-join on (level, cell); the per-round unfinished set shrinks
-  geometrically.
-- distance arithmetic is plain JVM column math (whole-stage codegen,
-  bit-identical to the DuckDB oracle's SQL); only the neighbor-ring
-  expansion is an Arrow pUDF.
+One ring loop, ``_ring_search``, serves both ring-expansion operators:
+``knn_join_rings`` (points) and ``closest_edge_join`` (a cell-keyed
+edge index).  It owns the rounds, the per-round guarantee and
+``max_distance2`` short-circuit, the done-agg and semi/anti split, the
+residual pass, the materialization (localCheckpoint, or durable
+``checkpoint_dir`` stages) and the union; each operator supplies its
+side projections and a ``ranked(unfinished, idx, level)`` step ending
+in the shared ``_top_k`` window (``level=None`` is the residual).
+
+Scale notes (ring loop):
+- a round is an equi-join on the ring cell: the query-side ring
+  explode (x9) against the index re-keyed by a pure-JVM ``parent()``.
+  Neither operator hints a broadcast; the only shuffles keyed by
+  query are the window top-k and the done split, and the per-round
+  unfinished set shrinks geometrically.  A point index under the
+  auto-broadcast threshold is broadcast by Spark; a fact-scale edge
+  table is above it and shuffle-joins.
+- each round materializes its ranked rows, done set and unfinished
+  set once, so the several actions per round (isEmpty, done-agg,
+  semi and anti joins) never re-run the upstream pUDFs.
+- point distance arithmetic is plain JVM column math (whole-stage
+  codegen, bit-identical to the DuckDB oracle's SQL); only the
+  neighbor-ring expansion and the edge distance are Arrow pUDFs.
 """
 
 from __future__ import annotations
@@ -315,6 +331,7 @@ def knn_join_rings(
         seed_level = default_seed_level(index_count, k)
 
     grp = [F.col(group_col).alias("gg")] if group_col else []
+    gcols = ["gg"] if group_col else []
     q = (
         normalized_cols(queries)
         .select(
@@ -334,10 +351,106 @@ def knn_join_rings(
         )
     )
 
+    def ranked(unfinished: DataFrame, idx: DataFrame, level: int | None):
+        if level is None:
+            # residual pass (exact; tiny fraction by construction)
+            pairs = (
+                unfinished.join(idx, on=gcols, how="inner")
+                if group_col
+                else unfinished.crossJoin(idx)
+            )
+        else:
+            ring = _ring_udf(level)
+            probe = unfinished.withColumn(
+                "jcell", F.explode(ring(F.col("qcell")))
+            )
+            iside = idx.withColumn(
+                "jcell", S.cell_parent(F.col("icell_leaf"), level)
+            )
+            pairs = probe.join(iside, on=["jcell", *gcols], how="inner")
+        cand = pairs.select(
+            "qk", *gcols, "ik",
+            _dist2(
+                F.col("qux"), F.col("quy"), F.col("quz"),
+                F.col("iux"), F.col("iuy"), F.col("iuz"),
+            ).alias("dist2"),
+        )
+        return _top_k(cand, k, "ik", gcols, max_distance2)
+
+    result = _ring_search(
+        spark, q, idx, k, seed_level, max_rounds, ranked, "ik", gcols,
+        max_distance2, max_error2, checkpoint_dir,
+        params={
+            "version": checkpoint_version,
+            "k": k,
+            "seed_level": seed_level,
+            "group_col": group_col or "",
+            "max_distance2": repr(max_distance2),
+            "max_error2": repr(max_error2),
+        },
+    )
+    out_grp = (
+        [F.col("gg").alias(group_col)] if group_col else []
+    )
+    return result.select(
+        F.col("qk").alias("key"),
+        *out_grp,
+        F.col("ik").alias("neighbor_key"),
+        "dist2",
+        F.col("rn").cast("long").alias("rn"),
+    )
+
+
+def _top_k(
+    cand: DataFrame, k: int, nb: str, gcols: list,
+    max_distance2: float | None,
+) -> DataFrame:
+    """The k nearest candidates per query (and group), ranked by
+    (dist2, ``nb``): the reference's (distance, id) result order made
+    deterministic on ties.  ``max_distance2`` drops candidates past the
+    bound before ranking."""
+    if max_distance2 is not None:
+        cand = cand.where(F.col("dist2") <= F.lit(max_distance2))
+    w = Window.partitionBy("qk", *gcols).orderBy("dist2", nb)
+    return (
+        cand.withColumn("rn", F.row_number().over(w))
+        .where(F.col("rn") <= k)
+    )
+
+
+def _ring_search(
+    spark: SparkSession,
+    q: DataFrame,
+    idx: DataFrame,
+    k: int,
+    level: int,
+    max_rounds: int,
+    ranked,
+    nb: str,
+    gcols: list,
+    max_distance2: float | None,
+    max_error2: float,
+    checkpoint_dir: str | None,
+    params: dict,
+) -> DataFrame:
+    """The ring-expansion loop both kNN operators run
+    (S2ClosestEdgeQueryBase.cs:211-363): per round, rank the unfinished
+    queries' candidates at ``level``, emit the queries whose k-th
+    distance is inside the ring guarantee, coarsen by one level, and
+    send what is left after ``max_rounds`` through one exact residual
+    pass over the whole index.
+
+    ``q`` carries (qk, qcell, *gcols, ...), ``idx`` the index side.
+    ``ranked(unfinished, idx, level)`` returns (qk, *gcols, nb, dist2,
+    rn) with rn <= k, ordered by ``_top_k``; ``level=None`` asks for
+    the residual all-index pass.  Returns the union of every finished
+    part with those columns.  ``checkpoint_dir`` and ``params`` as in
+    ``knn_join_rings`` (``params`` joins each stage fingerprint).
+    """
     # Materialize both sides once: the rounds below drive several
     # actions each (join, guarantee agg, isEmpty), and without a
-    # checkpoint every action would re-run the upstream leaf-encode
-    # pUDF over the full fact table.
+    # checkpoint every action would re-run the upstream pUDFs over the
+    # full fact table.
     from ..plans.checkpoint import CheckpointedPipeline, StageResult
 
     cp = (
@@ -345,20 +458,11 @@ def knn_join_rings(
         if checkpoint_dir
         else None
     )
-    base_params = {
-        "version": checkpoint_version,
-        "k": k,
-        "seed_level": seed_level,
-        "group_col": group_col or "",
-        "max_distance2": repr(max_distance2),
-        "max_error2": repr(max_error2),
-    }
 
-    def mat(name: str, fn, inputs=(), params=None) -> StageResult:
+    def mat(name: str, fn, inputs=(), extra=None) -> StageResult:
         if cp is not None:
             return cp.stage(
-                name, fn, inputs=inputs,
-                params={**base_params, **(params or {})},
+                name, fn, inputs=inputs, params={**params, **(extra or {})}
             )
         df = fn(*[r.df for r in inputs])
         return StageResult(name, df.localCheckpoint(), "", False, 0.0, -1)
@@ -367,56 +471,13 @@ def knn_join_rings(
         # resumed checkpoint stages know their row count from _meta
         return st.rows == 0 if st.rows >= 0 else st.df.isEmpty()
 
-    q_st = mat("knn_q", lambda: q)
-    idx_st = mat("knn_idx", lambda: idx)
-    q, idx = q_st.df, idx_st.df
-
-    # Per round: rank this round's candidates, emit final top-k for
-    # queries whose kth distance is inside the ring guarantee, and loop
-    # only the unfinished remainder at a coarser level.  A coarser 3x3
-    # ring is a superset of a finer one, so superseded candidates are
-    # simply discarded — no cross-round dedup or accumulation.
-    unfinished_st = q_st
-    finished_parts: list[DataFrame] = []
-    level = seed_level
-    gcols = ["gg"] if group_col else []
-    w = Window.partitionBy("qk", *gcols).orderBy("dist2", "ik")
-
-    def build_ranked(level: int):
-        def fn(unfinished: DataFrame, idx: DataFrame) -> DataFrame:
-            ring = _ring_udf(level)
-            probe = unfinished.withColumn(
-                "jcell", F.explode(ring(F.col("qcell")))
-            )
-            iside = idx.withColumn(
-                "jcell", S.cell_parent(F.col("icell_leaf"), level)
-            )
-            cand = (
-                probe.join(iside, on=["jcell", *gcols], how="inner")
-                .select(
-                    "qk", *gcols, "ik",
-                    _dist2(
-                        F.col("qux"), F.col("quy"), F.col("quz"),
-                        F.col("iux"), F.col("iuy"), F.col("iuz"),
-                    ).alias("dist2"),
-                )
-            )
-            if max_distance2 is not None:
-                cand = cand.where(F.col("dist2") <= F.lit(max_distance2))
-            return (
-                cand.withColumn("rn", F.row_number().over(w))
-                .where(F.col("rn") <= k)
-            )
-
-        return fn
-
-    def done_queries(ranked: DataFrame, guarantee: float) -> DataFrame:
+    def done_queries(top: DataFrame, guarantee: float) -> DataFrame:
         # max_error2 relaxes the finish line (Options.MaxError): any
         # unexamined neighbor has dist2 >= guarantee, so a query whose
         # kth is within the tolerance of the guarantee cannot improve
         # any reported distance by max_error2 or more
         return (
-            ranked.groupBy("qk", *gcols)
+            top.groupBy("qk", *gcols)
             .agg(F.max("dist2").alias("kth"), F.count(F.lit(1)).alias("nk"))
             .where(
                 (F.col("nk") >= k)
@@ -425,6 +486,14 @@ def knn_join_rings(
             .select("qk", *gcols)
         )
 
+    q_st = mat("knn_q", lambda: q)
+    idx_st = mat("knn_idx", lambda: idx)
+
+    # A coarser 3x3 ring is a superset of a finer one, so superseded
+    # candidates are simply discarded — no cross-round dedup or
+    # accumulation.
+    unfinished_st = q_st
+    finished_parts: list[DataFrame] = []
     bound_covered = False
     for rnd in range(max_rounds):
         if level < MIN_LEVEL_FLOOR or is_empty(unfinished_st):
@@ -432,9 +501,9 @@ def knn_join_rings(
         # <= k rows per query; reused twice below
         ranked_st = mat(
             f"knn_r{rnd}_ranked",
-            build_ranked(level),
+            lambda unfinished, idx: ranked(unfinished, idx, level),
             inputs=(unfinished_st, idx_st),
-            params={"level": level},
+            extra={"level": level},
         )
         guarantee = _chord2_from_radians(KMIN_WIDTH.get_value(level))
         if max_distance2 is not None and guarantee > max_distance2:
@@ -453,9 +522,9 @@ def knn_join_rings(
         # groupBy shuffle twice per round
         done_st = mat(
             f"knn_r{rnd}_done",
-            lambda ranked: done_queries(ranked, guarantee),
+            lambda top: done_queries(top, guarantee),
             inputs=(ranked_st,),
-            params={"level": level},
+            extra={"level": level},
         )
         finished_parts.append(
             ranked_st.df.join(done_st.df, on=["qk", *gcols], how="left_semi")
@@ -466,7 +535,7 @@ def knn_join_rings(
                 done, on=["qk", *gcols], how="left_anti"
             ),
             inputs=(unfinished_st, done_st),
-            params={"level": level},
+            extra={"level": level},
         )
         # coarsen by one level: ring area x4 per round, and a query
         # whose kth distance just missed guarantee(L) almost always
@@ -474,36 +543,16 @@ def knn_join_rings(
         level -= 1
 
     if not bound_covered and not is_empty(unfinished_st):
-        # residual cross join (exact; tiny fraction by construction)
-        unfinished = unfinished_st.df
-        residual = (
-            unfinished.join(idx, on=gcols, how="inner")
-            if group_col
-            else unfinished.crossJoin(idx)
-        )
-        cand = residual.select(
-            "qk", *gcols, "ik",
-            _dist2(
-                F.col("qux"), F.col("quy"), F.col("quz"),
-                F.col("iux"), F.col("iuy"), F.col("iuz"),
-            ).alias("dist2"),
-        )
-        if max_distance2 is not None:
-            cand = cand.where(F.col("dist2") <= F.lit(max_distance2))
-        ranked = (
-            cand.withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") <= k)
-        )
-        finished_parts.append(ranked)
+        finished_parts.append(ranked(unfinished_st.df, idx_st.df, None))
 
     if not finished_parts:
         # empty query side: no round ever ran — return a typed empty
         # result instead of crashing on finished_parts[0]
         finished_parts.append(
-            q.limit(0)
-            .crossJoin(idx.limit(0).select("ik"))
+            q_st.df.limit(0)
+            .crossJoin(idx_st.df.limit(0).select(nb))
             .select(
-                "qk", *gcols, "ik",
+                "qk", *gcols, nb,
                 F.lit(0.0).alias("dist2"),
                 F.lit(1).alias("rn"),
             )
@@ -511,16 +560,7 @@ def knn_join_rings(
     result = finished_parts[0]
     for part in finished_parts[1:]:
         result = result.unionByName(part)
-    out_grp = (
-        [F.col("gg").alias(group_col)] if group_col else []
-    )
-    return result.select(
-        F.col("qk").alias("key"),
-        *out_grp,
-        F.col("ik").alias("neighbor_key"),
-        "dist2",
-        F.col("rn").cast("long").alias("rn"),
-    )
+    return result
 
 
 def hausdorff_directed_knn(
@@ -787,38 +827,49 @@ def _edge_dist2_udf():
 
 
 def ranked_edge_lines(
-    unfin: DataFrame, idx: DataFrame, level: int, k: int,
+    unfin: DataFrame, idx: DataFrame, level: int | None, k: int,
     index_level: int | None = None,
 ) -> DataFrame:
-    """One ring-expansion round of the distributed closest-edge query:
+    """The closest-edge query's ``ranked`` step for ``_ring_search``:
     3x3 neighborhood explode on the query side, pure-JVM ``parent()``
     re-key on the index side, shuffle equi-join on the ring cell, exact
     row-vectorized edge distances min-folded per (query, line), then
-    the per-query (dist2, line_id) window.  Module-level so the plan
-    tests can assert the join strategy directly (the edge table must
-    never broadcast at fact scale)."""
+    the per-query (dist2, line_id) window.  ``level=None`` is the
+    residual pass against the whole edge table.  Module-level so the
+    plan tests can assert the join strategy directly (the edge table
+    must never broadcast at fact scale)."""
     d2 = _edge_dist2_udf()
-    w = Window.partitionBy("qk").orderBy("dist2", "line_id")
-    ring = _ring_udf(level)
-    probe = unfin.withColumn("jcell", F.explode(ring(F.col("qcell"))))
-    iside = idx.withColumn("jcell", S.cell_parent(F.col("cov_cell"), level))
-    if index_level is not None and level < index_level:
-        # the parent() re-key collapses every level-``index_level``
-        # covering cell of one edge under the same coarse jcell — at a
-        # coarse round the duplicate factor is 4^(index_level-level) in
-        # the worst case, and every duplicate index row multiplies the
-        # candidate join's output (each one re-evaluates the pUDF
-        # distance per matching query).  A dedup here is a shuffle
-        # bounded by INDEX size; the candidate rows it saves scale with
-        # QUERY x duplicate-factor — measured 8x fewer pUDF rows on the
-        # sf1 polyline arm (744 -> 94 index rows at the level-2 seed).
-        # At level == index_level the cov_cells are already distinct
-        # per edge, so the dedup exchange is skipped entirely.
-        iside = iside.dropDuplicates(["jcell", "line_id", "edge_idx"])
-    # remaining duplicates (same edge via several ring cells of one
-    # query) are absorbed by the min-fold — cheaper than a dedup
-    # shuffle on the candidate rows
-    cand = probe.join(iside, on="jcell", how="inner").select(
+    if level is None:
+        # residual exact pass (tiny fraction by construction): every
+        # remaining query against the full edge table — still a join,
+        # not a broadcast/collect
+        pairs = unfin.crossJoin(
+            idx.dropDuplicates(["line_id", "edge_idx"]).drop("cov_cell")
+        )
+    else:
+        ring = _ring_udf(level)
+        probe = unfin.withColumn("jcell", F.explode(ring(F.col("qcell"))))
+        iside = idx.withColumn(
+            "jcell", S.cell_parent(F.col("cov_cell"), level)
+        )
+        if index_level is not None and level < index_level:
+            # the parent() re-key collapses every level-``index_level``
+            # covering cell of one edge under the same coarse jcell — at a
+            # coarse round the duplicate factor is 4^(index_level-level) in
+            # the worst case, and every duplicate index row multiplies the
+            # candidate join's output (each one re-evaluates the pUDF
+            # distance per matching query).  A dedup here is a shuffle
+            # bounded by INDEX size; the candidate rows it saves scale with
+            # QUERY x duplicate-factor — measured 8x fewer pUDF rows on the
+            # sf1 polyline arm (744 -> 94 index rows at the level-2 seed).
+            # At level == index_level the cov_cells are already distinct
+            # per edge, so the dedup exchange is skipped entirely.
+            iside = iside.dropDuplicates(["jcell", "line_id", "edge_idx"])
+        # remaining duplicates (same edge via several ring cells of one
+        # query) are absorbed by the min-fold — cheaper than a dedup
+        # shuffle on the candidate rows
+        pairs = probe.join(iside, on="jcell", how="inner")
+    cand = pairs.select(
         "qk", "line_id",
         d2(
             F.col("qux"), F.col("quy"), F.col("quz"),
@@ -826,11 +877,9 @@ def ranked_edge_lines(
             F.col("ibx"), F.col("iby"), F.col("ibz"),
         ).alias("ed2"),
     )
-    return (
-        cand.groupBy("qk", "line_id")
-        .agg(F.min("ed2").alias("dist2"))
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= k)
+    return _top_k(
+        cand.groupBy("qk", "line_id").agg(F.min("ed2").alias("dist2")),
+        k, "line_id", [], None,
     )
 
 
@@ -851,14 +900,16 @@ def closest_edge_join(
     indexed edges): a 100M-edge road network never broadcasts and never
     moves; only query-side ring rows and slim candidate rows shuffle.
 
-    round r: every unfinished query joins its 3x3 level-L_r cell
-    neighborhood against the index re-keyed by ``parent(cov_cell,
-    L_r)`` (pure JVM); candidate distances are the exact row-vectorized
-    edge kernel, min-folded per (query, line); a query finishes when
-    its k-th line distance is inside the ring guarantee chord2
-    (kMinWidth(L_r)) — valid for edges because the covering is
-    conservative: an edge with no covering cell in the ring lies
-    entirely outside it, hence at least one cell min-width away.
+    The loop is ``_ring_search``, shared with ``knn_join_rings``; each
+    round ranks with ``ranked_edge_lines``: every unfinished query
+    joins its 3x3 level-L_r cell neighborhood against the index
+    re-keyed by ``parent(cov_cell, L_r)`` (pure JVM); candidate
+    distances are the exact row-vectorized edge kernel, min-folded per
+    (query, line); a query finishes when its k-th line distance is
+    inside the ring guarantee chord2 (kMinWidth(L_r)) — valid for edges
+    because the covering is conservative: an edge with no covering cell
+    in the ring lies entirely outside it, hence at least one cell
+    min-width away.  Rounds materialize with localCheckpoint.
 
     ``edge_index``: output of ``edge_covering_index`` built at
     ``index_level`` (rounds only coarsen, so ``parent()`` re-keying is
@@ -884,14 +935,10 @@ def closest_edge_join(
         seed_level = default_seed_level(edge_count, k)
     seed_level = min(int(seed_level), int(index_level))
 
-    q = (
-        normalized_cols(points)
-        .select(
-            F.col("key").alias("qk"),
-            F.col("ux").alias("qux"), F.col("uy").alias("quy"),
-            F.col("uz").alias("quz"), F.col("cell_id").alias("qcell"),
-        )
-        .localCheckpoint()
+    q = normalized_cols(points).select(
+        F.col("key").alias("qk"),
+        F.col("ux").alias("qux"), F.col("uy").alias("quy"),
+        F.col("uz").alias("quz"), F.col("cell_id").alias("qcell"),
     )
     idx = edge_index.select(
         "line_id", "edge_idx",
@@ -899,74 +946,14 @@ def closest_edge_join(
         F.col("az").alias("iaz"), F.col("bx").alias("ibx"),
         F.col("by").alias("iby"), F.col("bz").alias("ibz"),
         "cov_cell",
-    ).localCheckpoint()
-
-    w = Window.partitionBy("qk").orderBy("dist2", "line_id")
-    unfinished = q
-    finished_parts: list[DataFrame] = []
-    level = seed_level
-
-    for _rnd in range(max_rounds):
-        if level < MIN_LEVEL_FLOOR or unfinished.isEmpty():
-            break
-        ranked = ranked_edge_lines(
-            unfinished, idx, level, k, index_level=index_level
-        ).localCheckpoint()
-        guarantee = _chord2_from_radians(KMIN_WIDTH.get_value(level))
-        done_q = (
-            ranked.groupBy("qk")
-            .agg(F.max("dist2").alias("kth"), F.count(F.lit(1)).alias("nk"))
-            .where(
-                (F.col("nk") >= k)
-                & (F.col("kth") < F.lit(guarantee + max_error2))
-            )
-            .select("qk")
-            # one slim row per finished query, consumed by BOTH joins
-            # below — checkpointing runs its agg once, not twice
-            .localCheckpoint()
-        )
-        finished_parts.append(ranked.join(done_q, on="qk", how="left_semi"))
-        unfinished = unfinished.join(
-            done_q, on="qk", how="left_anti"
-        ).localCheckpoint()
-        level -= 1
-
-    if not unfinished.isEmpty():
-        # residual exact pass (tiny fraction by construction): every
-        # remaining query against the full edge table — still a join,
-        # not a broadcast/collect
-        d2 = _edge_dist2_udf()
-        cand = unfinished.crossJoin(
-            idx.dropDuplicates(["line_id", "edge_idx"]).drop("cov_cell")
-        ).select(
-            "qk", "line_id",
-            d2(
-                F.col("qux"), F.col("quy"), F.col("quz"),
-                F.col("iax"), F.col("iay"), F.col("iaz"),
-                F.col("ibx"), F.col("iby"), F.col("ibz"),
-            ).alias("ed2"),
-        )
-        finished_parts.append(
-            cand.groupBy("qk", "line_id")
-            .agg(F.min("ed2").alias("dist2"))
-            .withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") <= k)
-        )
-
-    if not finished_parts:
-        # empty query side: typed empty result, same guard as knn_join
-        finished_parts.append(
-            q.limit(0)
-            .crossJoin(idx.limit(0).select("line_id"))
-            .select(
-                "qk", "line_id",
-                F.lit(0.0).alias("dist2"),
-                F.lit(1).alias("rn"),
-            )
-        )
-    result = finished_parts[0]
-    for part in finished_parts[1:]:
-        result = result.unionByName(part)
+    )
+    result = _ring_search(
+        spark, q, idx, k, seed_level, max_rounds,
+        lambda unfin, idx, level: ranked_edge_lines(
+            unfin, idx, level, k, index_level=index_level
+        ),
+        "line_id", [], None, max_error2, None, params={},
+    )
     return result.select(
         F.col("qk").alias("key"),
         "line_id",
@@ -1072,45 +1059,12 @@ def closest_polygon_oracle_sql(
     _require_loop_edges_cte(loop_edges_cte)
     from ..functions.duckdb_oracle import pip_loop_sql
 
-    eps1 = repr(4.75 * 2.220446049250313e-16)
-    eps2 = repr(8 * 2.220446049250313e-16 * 2.220446049250313e-16)
     ins = pip_loop_sql(pts_cte, loop_edges_cte)
     return f"""WITH {pts_cte},
 {upts_cte},
 {loop_edges_cte},
 ins AS ({ins}),
-ed AS (
-  SELECT region_id, cx AS ax, cy AS ay, cz AS az,
-         dx AS bx, dy AS by, dz AS bz,
-         (cy-dy)*(cz+dz) - (cz-dz)*(cy+dy) AS scx,
-         (cz-dz)*(cx+dx) - (cx-dx)*(cz+dz) AS scy,
-         (cx-dx)*(cy+dy) - (cy-dy)*(cx+dx) AS scz,
-         ((cx-dx)*(cx-dx) + (cy-dy)*(cy-dy)) + (cz-dz)*(cz-dz) AS ab2
-  FROM loop_edges
-),
-ed2 AS (SELECT *, ((scx*scx + scy*scy) + scz*scz) AS c2 FROM ed),
-pair AS (
-  SELECT p.key, e.region_id,
-    ((p.ux-e.ax)*(p.ux-e.ax) + (p.uy-e.ay)*(p.uy-e.ay)) + (p.uz-e.az)*(p.uz-e.az) AS xa2,
-    ((p.ux-e.bx)*(p.ux-e.bx) + (p.uy-e.by)*(p.uy-e.by)) + (p.uz-e.bz)*(p.uz-e.bz) AS xb2,
-    ((p.ux*e.scx + p.uy*e.scy) + p.uz*e.scz) AS x_dot_c,
-    e.scy*p.uz - e.scz*p.uy AS cxx,
-    e.scz*p.ux - e.scx*p.uz AS cxy,
-    e.scx*p.uy - e.scy*p.ux AS cxz,
-    e.ax - p.ux AS dax, e.ay - p.uy AS day, e.az - p.uz AS daz,
-    e.bx - p.ux AS dbx, e.by - p.uy AS dby, e.bz - p.uz AS dbz,
-    e.ab2, e.c2
-  FROM upts p CROSS JOIN ed2 e
-),
-de AS (
-  SELECT key, region_id,
-    CASE WHEN abs(xa2 - xb2) < ab2 + (CAST('{eps1}' AS DOUBLE)*((xa2 + xb2) + ab2) + CAST('{eps2}' AS DOUBLE))
-              AND ((dax*cxx + day*cxy) + daz*cxz) < 0
-              AND ((dbx*cxx + dby*cxy) + dbz*cxz) > 0
-         THEN (x_dot_c*x_dot_c/c2) + (1 - sqrt(((cxx*cxx + cxy*cxy) + cxz*cxz)/c2))*(1 - sqrt(((cxx*cxx + cxy*cxy) + cxz*cxz)/c2))
-         ELSE least(xa2, xb2) END AS d2
-  FROM pair
-),
+{_edge_distance_ctes("region_id", "c", "d")},
 mind AS (SELECT key, region_id, MIN(d2) AS min_d2 FROM de GROUP BY key, region_id),
 alld AS (
   SELECT m.key, m.region_id,
@@ -1137,25 +1091,30 @@ def _require_loop_edges_cte(edges_cte: str) -> None:
         )
 
 
-def closest_polyline_oracle_sql(upts_cte: str, edges_cte: str) -> str:
-    """DuckDB mirror: per (point, edge) the identical squared-chord
-    distance expression (as near_loop_sql), min per line, argmin per
-    point with (dist2, line_id) tie order.  ``edges_cte`` MUST be
-    named loop_edges (enforced)."""
-    _require_loop_edges_cte(edges_cte)
-    return f"""WITH {upts_cte},
-{edges_cte},
-ed AS (
-  SELECT line_id, ax, ay, az, bx, by, bz,
-         (ay-by)*(az+bz) - (az-bz)*(ay+by) AS scx,
-         (az-bz)*(ax+bx) - (ax-bx)*(az+bz) AS scy,
-         (ax-bx)*(ay+by) - (ay-by)*(ax+bx) AS scz,
-         ((ax-bx)*(ax-bx) + (ay-by)*(ay-by)) + (az-bz)*(az-bz) AS ab2
+def _edge_distance_ctes(id_col: str, a: str = "a", b: str = "b") -> str:
+    """The ed, ed2, pair and de CTEs of the polyline and polygon
+    oracles: de(key, ``id_col``, d2) holds the exact squared-chord
+    distance from every upts point to every loop_edges edge, with
+    endpoints ``a``x..``a``z and ``b``x..``b``z, in the IEEE evaluation
+    order of kernels.polyline.edge_distance2_batch (as near_loop_sql)."""
+    ends = (
+        "ax, ay, az, bx, by, bz" if (a, b) == ("a", "b")
+        else f"{a}x AS ax, {a}y AS ay, {a}z AS az,\n"
+        f"         {b}x AS bx, {b}y AS by, {b}z AS bz"
+    )
+    eps1 = repr(4.75 * 2.220446049250313e-16)
+    eps2 = repr(8 * 2.220446049250313e-16 * 2.220446049250313e-16)
+    return f"""ed AS (
+  SELECT {id_col}, {ends},
+         ({a}y-{b}y)*({a}z+{b}z) - ({a}z-{b}z)*({a}y+{b}y) AS scx,
+         ({a}z-{b}z)*({a}x+{b}x) - ({a}x-{b}x)*({a}z+{b}z) AS scy,
+         ({a}x-{b}x)*({a}y+{b}y) - ({a}y-{b}y)*({a}x+{b}x) AS scz,
+         (({a}x-{b}x)*({a}x-{b}x) + ({a}y-{b}y)*({a}y-{b}y)) + ({a}z-{b}z)*({a}z-{b}z) AS ab2
   FROM loop_edges
 ),
 ed2 AS (SELECT *, ((scx*scx + scy*scy) + scz*scz) AS c2 FROM ed),
 pair AS (
-  SELECT p.key, e.line_id,
+  SELECT p.key, e.{id_col},
     ((p.ux-e.ax)*(p.ux-e.ax) + (p.uy-e.ay)*(p.uy-e.ay)) + (p.uz-e.az)*(p.uz-e.az) AS xa2,
     ((p.ux-e.bx)*(p.ux-e.bx) + (p.uy-e.by)*(p.uy-e.by)) + (p.uz-e.bz)*(p.uz-e.bz) AS xb2,
     ((p.ux*e.scx + p.uy*e.scy) + p.uz*e.scz) AS x_dot_c,
@@ -1168,14 +1127,45 @@ pair AS (
   FROM upts p CROSS JOIN ed2 e
 ),
 de AS (
-  SELECT key, line_id,
-    CASE WHEN abs(xa2 - xb2) < ab2 + (CAST('{repr(4.75 * 2.220446049250313e-16)}' AS DOUBLE)*((xa2 + xb2) + ab2) + CAST('{repr(8 * 2.220446049250313e-16 * 2.220446049250313e-16)}' AS DOUBLE))
+  SELECT key, {id_col},
+    CASE WHEN abs(xa2 - xb2) < ab2 + (CAST('{eps1}' AS DOUBLE)*((xa2 + xb2) + ab2) + CAST('{eps2}' AS DOUBLE))
               AND ((dax*cxx + day*cxy) + daz*cxz) < 0
               AND ((dbx*cxx + dby*cxy) + dbz*cxz) > 0
          THEN (x_dot_c*x_dot_c/c2) + (1 - sqrt(((cxx*cxx + cxy*cxy) + cxz*cxz)/c2))*(1 - sqrt(((cxx*cxx + cxy*cxy) + cxz*cxz)/c2))
          ELSE least(xa2, xb2) END AS d2
   FROM pair
-)
+)"""
+
+
+def _unit_cte(name: str, src: str, cols: str = "key", neg: bool = False) -> str:
+    """``name``(cols, ux, uy, uz): the ``src`` points as unit vectors in
+    normalized_cols' IEEE order, negated first when ``neg`` (the
+    antipodal furthest search)."""
+    ux, uy, uz = (f"(-({c}))/r" if neg else f"{c}/r" for c in "xyz")
+    return (
+        f"{name} AS (SELECT {cols}, {ux} AS ux, {uy} AS uy, {uz} AS uz FROM\n"
+        f"       (SELECT {cols}, x, y, z, sqrt(x*x + y*y + z*z) AS r "
+        f"FROM {src}))"
+    )
+
+
+def _d2_sql(p: str, q: str) -> str:
+    """``_dist2`` over the unit columns of aliases ``p`` and ``q``."""
+    return (
+        f"(({p}.ux-{q}.ux)*({p}.ux-{q}.ux) + ({p}.uy-{q}.uy)*({p}.uy-{q}.uy)) "
+        f"+ ({p}.uz-{q}.uz)*({p}.uz-{q}.uz)"
+    )
+
+
+def closest_polyline_oracle_sql(upts_cte: str, edges_cte: str) -> str:
+    """DuckDB mirror: per (point, edge) the identical squared-chord
+    distance expression (as near_loop_sql), min per line, argmin per
+    point with (dist2, line_id) tie order.  ``edges_cte`` MUST be
+    named loop_edges (enforced)."""
+    _require_loop_edges_cte(edges_cte)
+    return f"""WITH {upts_cte},
+{edges_cte},
+{_edge_distance_ctes("line_id")}
 SELECT key, line_id, dist2 FROM (
   SELECT key, line_id, MIN(d2) AS dist2,
          row_number() OVER (PARTITION BY key ORDER BY MIN(d2), line_id) AS rn
@@ -1191,41 +1181,9 @@ def near_polyline_oracle_sql(
     closest_polyline_oracle_sql), kept when <= radius_chord2.
     ``edges_cte`` MUST be named loop_edges (enforced)."""
     _require_loop_edges_cte(edges_cte)
-    eps1 = repr(4.75 * 2.220446049250313e-16)
-    eps2 = repr(8 * 2.220446049250313e-16 * 2.220446049250313e-16)
     return f"""WITH {upts_cte},
 {edges_cte},
-ed AS (
-  SELECT line_id, ax, ay, az, bx, by, bz,
-         (ay-by)*(az+bz) - (az-bz)*(ay+by) AS scx,
-         (az-bz)*(ax+bx) - (ax-bx)*(az+bz) AS scy,
-         (ax-bx)*(ay+by) - (ay-by)*(ax+bx) AS scz,
-         ((ax-bx)*(ax-bx) + (ay-by)*(ay-by)) + (az-bz)*(az-bz) AS ab2
-  FROM loop_edges
-),
-ed2 AS (SELECT *, ((scx*scx + scy*scy) + scz*scz) AS c2 FROM ed),
-pair AS (
-  SELECT p.key, e.line_id,
-    ((p.ux-e.ax)*(p.ux-e.ax) + (p.uy-e.ay)*(p.uy-e.ay)) + (p.uz-e.az)*(p.uz-e.az) AS xa2,
-    ((p.ux-e.bx)*(p.ux-e.bx) + (p.uy-e.by)*(p.uy-e.by)) + (p.uz-e.bz)*(p.uz-e.bz) AS xb2,
-    ((p.ux*e.scx + p.uy*e.scy) + p.uz*e.scz) AS x_dot_c,
-    e.scy*p.uz - e.scz*p.uy AS cxx,
-    e.scz*p.ux - e.scx*p.uz AS cxy,
-    e.scx*p.uy - e.scy*p.ux AS cxz,
-    e.ax - p.ux AS dax, e.ay - p.uy AS day, e.az - p.uz AS daz,
-    e.bx - p.ux AS dbx, e.by - p.uy AS dby, e.bz - p.uz AS dbz,
-    e.ab2, e.c2
-  FROM upts p CROSS JOIN ed2 e
-),
-de AS (
-  SELECT key, line_id,
-    CASE WHEN abs(xa2 - xb2) < ab2 + (CAST('{eps1}' AS DOUBLE)*((xa2 + xb2) + ab2) + CAST('{eps2}' AS DOUBLE))
-              AND ((dax*cxx + day*cxy) + daz*cxz) < 0
-              AND ((dbx*cxx + dby*cxy) + dbz*cxz) > 0
-         THEN (x_dot_c*x_dot_c/c2) + (1 - sqrt(((cxx*cxx + cxy*cxy) + cxz*cxz)/c2))*(1 - sqrt(((cxx*cxx + cxy*cxy) + cxz*cxz)/c2))
-         ELSE least(xa2, xb2) END AS d2
-  FROM pair
-)
+{_edge_distance_ctes("line_id")}
 SELECT key, line_id FROM (
   SELECT key, line_id, MIN(d2) AS m FROM de GROUP BY key, line_id
 ) WHERE m <= CAST('{radius_chord2!r}' AS DOUBLE)"""
@@ -1236,16 +1194,11 @@ def hausdorff_undirected_oracle_sql(
 ) -> str:
     """DuckDB mirror of hausdorff_undirected: both directed maxes plus
     their greatest, joined per group."""
-    d2_ab = (
-        "((a.ux-b.ux)*(a.ux-b.ux) + (a.uy-b.uy)*(a.uy-b.uy)) "
-        "+ (a.uz-b.uz)*(a.uz-b.uz)"
-    )
+    d2_ab = _d2_sql("a", "b")
     return f"""WITH {a_pts_cte},
 {b_pts_cte},
-ua AS (SELECT key, grp, x/r AS ux, y/r AS uy, z/r AS uz FROM
-       (SELECT key, grp, x, y, z, sqrt(x*x + y*y + z*z) AS r FROM apts)),
-ub AS (SELECT key, grp, x/r AS ux, y/r AS uy, z/r AS uz FROM
-       (SELECT key, grp, x, y, z, sqrt(x*x + y*y + z*z) AS r FROM bpts)),
+{_unit_cte("ua", "apts", "key, grp")},
+{_unit_cte("ub", "bpts", "key, grp")},
 mins_ab AS (
   SELECT a.key, a.grp, MIN({d2_ab}) AS min_d2
   FROM ua a JOIN ub b ON a.grp = b.grp GROUP BY a.key, a.grp
@@ -1270,10 +1223,7 @@ def knn_oracle_sql(
     ties broken by (dist2, neighbor_key) as in the reference's result
     ordering.  ``max_distance2`` mirrors the bounded form (Options
     MaxDistance): pairs past the bound drop before ranking."""
-    d2 = (
-        "((q.ux-i.ux)*(q.ux-i.ux) + (q.uy-i.uy)*(q.uy-i.uy)) "
-        "+ (q.uz-i.uz)*(q.uz-i.uz)"
-    )
+    d2 = _d2_sql("q", "i")
     bound = (
         f"\nWHERE dist2 <= CAST('{max_distance2!r}' AS DOUBLE)"
         if max_distance2 is not None
@@ -1281,10 +1231,8 @@ def knn_oracle_sql(
     )
     return f"""WITH {q_pts_cte},
 {i_pts_cte},
-uq AS (SELECT key, x/r AS ux, y/r AS uy, z/r AS uz FROM
-       (SELECT key, x, y, z, sqrt(x*x + y*y + z*z) AS r FROM qpts)),
-ui AS (SELECT key, x/r AS ux, y/r AS uy, z/r AS uz FROM
-       (SELECT key, x, y, z, sqrt(x*x + y*y + z*z) AS r FROM ipts)),
+{_unit_cte("uq", "qpts")},
+{_unit_cte("ui", "ipts")},
 pairs AS (
   SELECT q.key AS key, i.key AS neighbor_key, {d2} AS dist2
   FROM uq q CROSS JOIN ui i
@@ -1352,16 +1300,11 @@ def furthest_oracle_sql(q_pts_cte: str, i_pts_cte: str, k: int) -> str:
     normalization + antipodal-distance arithmetic, ranked by the
     antipodal distance ascending (NOT by 4-d2 descending, which could
     collapse distinct doubles)."""
-    d2 = (
-        "((q.ux-i.ux)*(q.ux-i.ux) + (q.uy-i.uy)*(q.uy-i.uy)) "
-        "+ (q.uz-i.uz)*(q.uz-i.uz)"
-    )
+    d2 = _d2_sql("q", "i")
     return f"""WITH {q_pts_cte},
 {i_pts_cte},
-uq AS (SELECT key, (-(x))/r AS ux, (-(y))/r AS uy, (-(z))/r AS uz FROM
-       (SELECT key, x, y, z, sqrt(x*x + y*y + z*z) AS r FROM qpts)),
-ui AS (SELECT key, x/r AS ux, y/r AS uy, z/r AS uz FROM
-       (SELECT key, x, y, z, sqrt(x*x + y*y + z*z) AS r FROM ipts)),
+{_unit_cte("uq", "qpts", neg=True)},
+{_unit_cte("ui", "ipts")},
 pairs AS (
   SELECT q.key AS key, i.key AS neighbor_key, {d2} AS anti_d2
   FROM uq q CROSS JOIN ui i

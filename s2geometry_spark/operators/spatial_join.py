@@ -134,7 +134,13 @@ def covering_join(
     ``broadcast`` hints the covering side.  On the shuffle path,
     ``salt_k > 0`` spreads hot covering cells (urban tiles) over K
     reducers: covering rows replicate K times and the probe picks one
-    salt bucket (SURVEY.md §4 skew row).  An empty ``levels``
+    salt bucket (SURVEY.md §4 skew row).  ``broadcast=False`` only
+    drops the hint: a covering under the session's
+    ``spark.sql.autoBroadcastJoinThreshold`` (64 MB in
+    ``plans.session.build_session``) is still planned as a
+    BroadcastHashJoin, and on the salted path Spark then broadcasts
+    all K replicas.  The shuffle plan runs only with the threshold at
+    -1 or a covering above it.  An empty ``levels``
     (empty/degenerate region list) yields a valid zero-row frame
     rather than an un-typeable empty array expression."""
     if levels:

@@ -48,6 +48,11 @@ def brute_force_knn(q_pdf, i_pdf, k):
     return sorted(out)
 
 
+def _knn_rows(df):
+    """Result rows with dist2 compared bit for bit."""
+    return sorted(tuple(r) for r in df.collect())
+
+
 # knn_join dispatches a small index (the supplier table at small sf)
 # to the brute-force arm; the ring arm is called directly where a test
 # exercises ring behaviour (seed level, rounds, checkpoints, MaxError)
@@ -243,6 +248,64 @@ class TestCheckpointedRounds:
         # round 0 was resumed, not recomputed
         assert os.path.getmtime(meta0) == mtime0
 
+    def test_abort_midway_resumes_bit_equal(
+        self, spark, q_df, idx_df, tmp_path, monkeypatch
+    ):
+        """A run that dies inside round 1 (after round 0 committed)
+        resumes from round 0: the re-run returns the un-checkpointed
+        rows with dist2 bit-equal, and rewrites no committed stage."""
+        import json
+        import os
+
+        from s2geometry_spark.plans.checkpoint import CheckpointedPipeline
+
+        k, level = 2, 10
+        cpdir = str(tmp_path / "knn_cp")
+        plain = _knn_rows(
+            KNN.knn_join_rings(spark, q_df, idx_df, k, seed_level=level)
+        )
+
+        real_stage = CheckpointedPipeline.stage
+
+        def dying_stage(self, name, *a, **kw):
+            if name == "knn_r1_ranked":
+                raise RuntimeError("killed in round 1")
+            return real_stage(self, name, *a, **kw)
+
+        monkeypatch.setattr(CheckpointedPipeline, "stage", dying_stage)
+        with pytest.raises(RuntimeError, match="killed in round 1"):
+            KNN.knn_join_rings(
+                spark, q_df, idx_df, k, seed_level=level,
+                checkpoint_dir=cpdir,
+            ).collect()
+        monkeypatch.setattr(CheckpointedPipeline, "stage", real_stage)
+
+        committed = sorted(
+            d for d in os.listdir(cpdir)
+            if d in ("knn_q", "knn_idx") or d.startswith("knn_r0_")
+        )
+        assert committed == [
+            "knn_idx", "knn_q", "knn_r0_done", "knn_r0_ranked",
+            "knn_r0_unfinished",
+        ]
+        assert not any(d.startswith("knn_r1_") for d in os.listdir(cpdir))
+        with open(os.path.join(cpdir, "knn_r0_unfinished", "_meta.json")) as fh:
+            assert json.load(fh)["rows"] > 0  # round 1 had work to do
+
+        def meta_stat(d):
+            st = os.stat(os.path.join(cpdir, d, "_meta.json"))
+            return st.st_ino, st.st_mtime_ns, st.st_size
+
+        before = {d: meta_stat(d) for d in committed}
+        resumed = _knn_rows(
+            KNN.knn_join_rings(
+                spark, q_df, idx_df, k, seed_level=level,
+                checkpoint_dir=cpdir,
+            )
+        )
+        assert resumed == plain
+        assert {d: meta_stat(d) for d in committed} == before
+
     def test_passed_in_count_skips_sampling(self, spark, q_df, idx_df):
         k = 2
         got = sorted(
@@ -433,3 +496,125 @@ def test_empty_query_side_returns_typed_empty(spark, q_df, idx_df):
     out = KNN.knn_join(spark, q_df.limit(0), idx_df, 3)
     assert out.columns == ["key", "neighbor_key", "dist2", "rn"]
     assert out.count() == 0
+
+
+# ---------------------------------------------------------------------
+# The residual all-index pass after the last ring round: max_rounds=0
+# sends every query there, max_rounds=1 with a fine seed level leaves
+# most queries open after round 0.  Rows must equal the exact arms with
+# dist2 bit-equal.
+# ---------------------------------------------------------------------
+
+# kMinWidth(4) chord2 is ~3.5e-3, far below the typical 3rd-neighbor
+# chord2 (~0.02 over the ~500-point index), so round 0 finishes few
+# queries; the bound sits below that round-0 guarantee
+RESIDUAL_SEED = 4
+RESIDUAL_BOUND = 3e-3
+EDGE_LEVEL = 7
+
+
+@pytest.fixture(scope="module")
+def residual_sides(q_df):
+    key = F.col("key")
+    q = q_df.where(key % 7 == 0).withColumn("grp", key % 2).localCheckpoint()
+    i = q_df.where(key % 3 == 1).withColumn("grp", key % 2).localCheckpoint()
+    return q, i
+
+
+def _point_exact(q, i, k, group, bound):
+    if not group:
+        return _knn_rows(
+            KNN.knn_join_brute(q, i, k, max_distance2=bound)
+        )
+    rows = []
+    for g in sorted(r["grp"] for r in q.select("grp").distinct().collect()):
+        part = KNN.knn_join_brute(
+            q.where(F.col("grp") == g), i.where(F.col("grp") == g), k,
+            max_distance2=bound,
+        )
+        rows += [(r[0], g, *r[1:]) for r in part.collect()]
+    return sorted(rows)
+
+
+def _edge_exact(q, lines, k):
+    """Per-line min edge distance with the broadcast arm's kernel over
+    the JVM-normalized points, ranked by (dist2, line_id)."""
+    from s2geometry_spark.kernels import polyline as PL
+    from s2geometry_spark.operators.spatial_join import normalized_cols
+
+    pts = normalized_cols(q).select("key", "ux", "uy", "uz").collect()
+    px, py, pz = (np.array([r[c] for r in pts]) for c in ("ux", "uy", "uz"))
+    per_line = []
+    for lid, edges in lines:
+        d2 = np.full(len(pts), np.inf)
+        for a, b in edges:
+            d2 = np.minimum(d2, PL.edge_distance2_batch(px, py, pz, a, b))
+        per_line.append((lid, d2))
+    out = []
+    for j, r in enumerate(pts):
+        ranked = sorted((float(d2[j]), lid) for lid, d2 in per_line)
+        out += [
+            (r["key"], lid, d2, rn)
+            for rn, (d2, lid) in enumerate(ranked[:k], 1)
+        ]
+    return sorted(out)
+
+
+@pytest.mark.parametrize("max_rounds", [0, 1])
+@pytest.mark.parametrize(
+    "case", ["plain", "group", "bounded", "edge_k1", "edge_k3"]
+)
+def test_residual_pass_matches_exact_arms(
+    spark, residual_sides, case, max_rounds
+):
+    from s2geometry_spark.sources import regions_src as R
+
+    q, i = residual_sides
+    group = case == "group"
+    if not group:
+        q, i = q.drop("grp"), i.drop("grp")
+    if case.startswith("edge"):
+        k = int(case[-1])
+        edge_rows = R.polyline_edges(range(12))
+        edges = spark.createDataFrame(
+            [(lid, eid, *a, *b) for lid, eid, a, b in edge_rows],
+            "line_id long, edge_idx long, ax double, ay double, az double, "
+            "bx double, by double, bz double",
+        )
+        got = _knn_rows(
+            KNN.closest_edge_join(
+                spark, q, KNN.edge_covering_index(edges, EDGE_LEVEL),
+                index_level=EDGE_LEVEL, k=k, seed_level=EDGE_LEVEL,
+                max_rounds=max_rounds,
+            )
+        )
+        lines = {}
+        for lid, _eid, a, b in edge_rows:
+            lines.setdefault(lid, []).append((a, b))
+        lines = sorted(lines.items())
+        want = _edge_exact(q, lines, k)
+        if k == 1:
+            assert want == sorted(
+                (*r, 1) for r in KNN.closest_polyline(q, lines).collect()
+            )
+        assert got == want
+        return
+
+    k = 3
+    bound = RESIDUAL_BOUND if case == "bounded" else None
+    got = _knn_rows(
+        KNN.knn_join_rings(
+            spark, q, i, k, seed_level=RESIDUAL_SEED, max_rounds=max_rounds,
+            group_col="grp" if group else None, max_distance2=bound,
+        )
+    )
+    want = _point_exact(q, i, k, group, bound)
+    assert got == want
+    per_q = {}
+    for r in want:
+        per_q[r[0]] = per_q.get(r[0], 0) + 1
+    if bound is None:
+        assert set(per_q.values()) == {k}
+    else:
+        # the bound cuts some queries short and leaves others whole
+        assert min(per_q.values()) < k and k in per_q.values()
