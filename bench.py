@@ -2,8 +2,8 @@
 
 Run:    python bench.py                       # one JSON line on stdout
         python bench.py --scaling             # local[8] vs local[32] evidence
-        python bench.py --skew [dir]          # salted-vs-unsalted A/B on
-                                              # the planted-skew fixture
+        python bench.py --skew [dir]          # salted-vs-unsalted LSH A/B
+                                              # on the planted-skew fixture
 Env:    SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1)
         SPARK_GRAFT_CPUS   (default 32)
 
@@ -299,36 +299,22 @@ def bench_scaling(sf_dir: str, lo: int | None = None, hi: int | None = None, pas
     return out
 
 
-N_METRO_CAPS = 32  # overlapping regions piled on the hot cell
-
-
 def bench_skew(cores: int, skew_dir: str, passes: int = 2) -> dict:
-    """Salted-vs-unsalted A/B on the planted-skew fixture
-    (jobs/gen_sf_scale.py --skew), in the regime the salting knobs
-    exist for — OUTPUT-side key blowup that AQE's skew-join split
-    cannot see (AQE splits oversized *input* partitions of a
-    sort-merge join; a hot key whose join *emits* n_left x n_right
-    rows from small inputs is invisible to it):
+    """Salted-vs-unsalted A/B of the directed embedding LSH self-join
+    on the planted-skew fixture (jobs/gen_sf_scale.py --skew), in the
+    regime its salting exists for — OUTPUT-side key blowup that AQE's
+    skew-join split cannot see (AQE splits oversized *input*
+    partitions of a sort-merge join; a hot key whose join *emits*
+    n_left x n_right rows from small inputs is invisible to it): a 6k
+    boilerplate-embedding block shares every sign-LSH band bucket, so
+    the unsalted self-join emits 36M directed pairs per band from one
+    task each.  Auto-broadcast is OFF for this bench session, so no
+    join bypasses the shuffle under test.
 
-    - pip: 30% of points carry one geotag (default-geotag pile-up) and
-      32 overlapping metro regions (nested admin/delivery zones — the
-      canonical hot-cell case) share that covering cell, so the
-      unsalted shuffle join emits 0.3*N*32 rows from ONE reducer.
-      ``point_in_cap_join`` auto-detects this (>=16 regions on one
-      cell -> salt) — the unsalted arm forcibly disables the
-      auto-detection to show what it saves.  Auto-broadcast is OFF for
-      this bench session: at fact scale the covering table exceeds any
-      broadcast threshold, and a broadcast join would bypass the
-      shuffle entirely (explicit F.broadcast hints inside operators
-      are still honored).
-    - ann candidates: a 6k boilerplate-embedding block shares every
-      sign-LSH band bucket, so the unsalted self-join emits 36M
-      directed pairs per band from one task each.
-
-    Each pair of arms runs the SAME operator with only the salting
-    knob flipped; row counts must agree exactly (salting is a plan
-    change, never a result change).  Arms are interleaved across
-    ``passes`` and the min per arm is kept (the noisy-host protocol of
+    Both arms run the SAME operator with only the hot-bucket threshold
+    flipped; row counts must agree exactly (salting is a plan change,
+    never a result change).  Arms are interleaved across ``passes``
+    and the min per arm is kept (the noisy-host protocol of
     bench_scaling).
     """
     import gc
@@ -342,24 +328,11 @@ def bench_skew(cores: int, skew_dir: str, passes: int = 2) -> dict:
         extra_conf={"spark.sql.autoBroadcastJoinThreshold": "-1"},
     )
     try:
-        from jobs.gen_sf_scale import METRO_REGION_ID, metro_center
-        from s2geometry_spark.kernels.geom import Cap
         from s2geometry_spark.operators import banded_join as BJ
         from s2geometry_spark.operators import similarity as SIM
-        from s2geometry_spark.operators import spatial_join as SJ
-        from s2geometry_spark.operators import tile as T
-        from s2geometry_spark.sources import regions_src as R
 
-        # fixed inputs, materialized once so every arm times only the
-        # join/self-join under test (encode cost is identical anyway)
-        pts = T.assign_cellids(
-            spark.read.parquet(f"{skew_dir}/points.parquet")
-        ).localCheckpoint()
-        n_points = pts.count()
-        caps = R.synthetic_caps(range(1, 25)) + [
-            (METRO_REGION_ID + j, Cap(metro_center(), 1e-4))
-            for j in range(N_METRO_CAPS)
-        ]
+        # fixed input, materialized once so every arm times only the
+        # self-join under test
         emb = spark.read.parquet(
             f"{skew_dir}/embeddings.parquet"
         ).localCheckpoint()
@@ -376,21 +349,7 @@ def bench_skew(cores: int, skew_dir: str, passes: int = 2) -> dict:
                 hot_bucket_threshold, BJ.SALT_G,
             )
 
-        def pip(auto_salt: bool):
-            # the unsalted arm must defeat the operator's own hot-cell
-            # auto-detection (_resolve_plan salts when >=16 regions
-            # share a covering cell — exactly this fixture)
-            saved = SJ.HOT_CELL_SALT_THRESHOLD
-            SJ.HOT_CELL_SALT_THRESHOLD = saved if auto_salt else NEVER_HOT
-            try:
-                return SJ.point_in_cap_join(
-                    spark, pts, caps, broadcast=False, salt_k=0
-                )
-            finally:
-                SJ.HOT_CELL_SALT_THRESHOLD = saved
         arms = {
-            "pip_salted": lambda: pip(True),
-            "pip_unsalted": lambda: pip(False),
             "ann_candidates_salted": lambda: ann_candidates(BJ.HOT_BUCKET),
             "ann_candidates_unsalted": lambda: ann_candidates(NEVER_HOT),
         }
@@ -406,27 +365,24 @@ def bench_skew(cores: int, skew_dir: str, passes: int = 2) -> dict:
                     raise AssertionError(f"{name}: {counts[name]} != {c}")
                 counts[name] = c
                 timings[name] = min(timings.get(name, math.inf), dt)
-        for base in ("pip", "ann_candidates"):
-            if counts[f"{base}_salted"] != counts[f"{base}_unsalted"]:
-                raise AssertionError(
-                    f"{base}: salted/unsalted row counts differ "
-                    f"({counts[f'{base}_salted']} vs "
-                    f"{counts[f'{base}_unsalted']}) — salting changed "
-                    "the result, not just the plan"
-                )
+        if counts["ann_candidates_salted"] != counts["ann_candidates_unsalted"]:
+            raise AssertionError(
+                f"salted/unsalted row counts differ ({counts}) — "
+                "salting changed the result, not just the plan"
+            )
         return {
             "metric": "s2_skew_salting_ab",
             "unit": "sec",
             "arms": {k: round(v, 3) for k, v in timings.items()},
             "counts": counts,
             "speedup": {
-                base: round(
-                    timings[f"{base}_unsalted"] / timings[f"{base}_salted"],
+                "ann_candidates": round(
+                    timings["ann_candidates_unsalted"]
+                    / timings["ann_candidates_salted"],
                     2,
                 )
-                for base in ("pip", "ann_candidates")
             },
-            "fixture": {"dir": skew_dir, "points": n_points},
+            "fixture": {"dir": skew_dir},
             "cores": cores,
             "passes": passes,
             "probe_mrows_per_sec": probe,

@@ -14,14 +14,15 @@ Usage:  python jobs/gen_sf_scale.py [src_dir] [dst_dir] [factor]
 Default: /root/testdata/sf0.1 -> <repo>/.soak/sf1 x10
          --skew -> <repo>/.soak/skew
 
-The --skew mode writes the clustered/hot-key fixture for the
-salted-vs-unsalted benchmark (bench.py --skew): a point table where
-30% of rows carry the SAME geotag (the camera-default / null-island
-pile-up every real photo corpus has — the worst hot-cell case for the
-covering shuffle join), an embedding table with one boilerplate block
-sharing every sign-LSH band bucket, and a document table with one
-boilerplate text block sharing every minhash band.  All three are
-seeded-deterministic.
+The --skew mode writes the clustered/hot-key fixture: a point table
+where 30% of rows carry the SAME geotag (the camera-default /
+null-island pile-up every real photo corpus has — the worst hot-cell
+case for the covering join's shuffle plan, checked against its
+broadcast plan in tests/test_skew_fixture.py), an embedding table with
+one boilerplate block sharing every sign-LSH band bucket (the
+salted-vs-unsalted LSH A/B of bench.py --skew), and a document table
+with one boilerplate text block sharing every minhash band.  All three
+are seeded-deterministic.
 """
 
 from __future__ import annotations

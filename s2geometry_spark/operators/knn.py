@@ -69,16 +69,9 @@ from pyspark.sql.window import Window
 
 from ..constants import KMIN_WIDTH
 from ..functions import sparkfns as S
-from ..operators.spatial_join import normalized_cols
+from ..operators.spatial_join import near_chord2, normalized_cols
 
 MIN_LEVEL_FLOOR = 1  # below this, fall back to cross join
-
-
-def _chord2_from_radians(radians: float) -> float:
-    if radians >= math.pi:
-        return 4.0
-    s = math.sin(0.5 * radians)
-    return 4 * s * s
 
 
 def _ring_udf(level: int):
@@ -505,7 +498,7 @@ def _ring_search(
             inputs=(unfinished_st, idx_st),
             extra={"level": level},
         )
-        guarantee = _chord2_from_radians(KMIN_WIDTH.get_value(level))
+        guarantee = near_chord2(KMIN_WIDTH.get_value(level))
         if max_distance2 is not None and guarantee > max_distance2:
             # the ring already covers the whole search radius: a point
             # outside the ring has dist2 >= guarantee > bound, so

@@ -196,9 +196,7 @@ def point_in_loop_index_join(
     (all-edges) join exactly on general-position inputs."""
     entries, cov_pdf = build_loop_index_entries(loops, options)
     cov = SJ.typed_cov_df(spark, cov_pdf, "region_id", [rid for rid, _ in loops])
-    joined = SJ.covering_join(
-        points, cov, COV.covering_levels(cov_pdf), point_key=point_key
-    )
+    joined = SJ.covering_join(points, cov, COV.covering_levels(cov_pdf))
     contains = cell_parity_udf(entries)
     pred = contains(
         F.col("region_id"), F.col("cov_cell"),
@@ -325,9 +323,9 @@ def point_in_polygon_index_df_join(
     the plan for region tables too large to broadcast (10^6 admin
     polygons with 10^5-edge boundaries):
 
-    1. ``spatial_join.covering_join`` without a broadcast hint: points
-       explode ancestors at the index's levels; shuffle equi-join on
-       (cell id) against the index-edge rows;
+    1. ``spatial_join.covering_join``: points explode ancestors at the
+       index's levels; equi-join on (cell id) against the index-edge
+       rows, a shuffle join once they exceed the broadcast threshold;
     2. the refine is PURE JVM column arithmetic: each candidate row
        tests whether the geodesic [cell_center -> point] crosses its
        one edge (the same fixed-order sign expression the crossing
@@ -343,8 +341,6 @@ def point_in_polygon_index_df_join(
         points,
         index_edges.withColumnRenamed("cell_id", "cov_cell"),
         COV.covering_levels(index_edges),
-        broadcast=False,
-        point_key=point_key,
     )
     # A = cell center, B = the point (bare x/y/z columns), (C, D) = edge
     crossed = F.when(

@@ -14,13 +14,11 @@ that keeps true containments.
   ranges on *biased* ids; a broadcast range predicate yields the
   candidates.
 
-Scale notes:
-- Broadcast path: zero shuffle of the fact table; candidate explosion
-  factor == number of distinct covering levels (typically 4-8).
-- Shuffle path (region side too big to broadcast): hash join on
-  (cell_id) with explicit salting for hot cells — replicate each
-  covering row SALT_K times, probe picks pmod(hash(key), SALT_K); plus
-  AQE skew-join as backstop.  ``_resolve_plan`` makes the choice.
+Scale notes: the covering side broadcasts under the session's
+``spark.sql.autoBroadcastJoinThreshold`` (zero shuffle of the fact
+table; candidate explosion factor == number of distinct covering
+levels, typically 4-8); above it the join is a shuffled sort-merge
+join on the cell id with AQE skew-join splitting.
 """
 
 from __future__ import annotations
@@ -97,31 +95,8 @@ def with_cap_params(pdf: pd.DataFrame, caps) -> pd.DataFrame:
     return pdf.merge(params, on="region_id", how="left")
 
 
-BROADCAST_COVERING_LIMIT = 100_000  # rows; ~a few MB broadcast
-HOT_CELL_SALT_THRESHOLD = 16        # max regions sharing one cell
-
-
-def _resolve_plan(cov_pdf, broadcast, salt_k):
-    """Size-based brute-vs-indexed switch (the S2ClosestEdgeQueryBase
-    cost-model analogue for the covering join): broadcast while the
-    covering table is dim-sized; on the shuffle path, salt
-    automatically when some covering cell is shared by many regions."""
-    if broadcast == "auto":
-        broadcast = len(cov_pdf) <= BROADCAST_COVERING_LIMIT
-    if not broadcast and salt_k == 0:
-        hot = int(cov_pdf.groupby("cov_cell").size().max()) if len(cov_pdf) else 0
-        if hot >= HOT_CELL_SALT_THRESHOLD:
-            salt_k = 8
-    return broadcast, salt_k
-
-
 def covering_join(
-    points: DataFrame,
-    cov: DataFrame,
-    levels: list[int],
-    broadcast: bool = True,
-    salt_k: int = 0,
-    point_key: str = "key",
+    points: DataFrame, cov: DataFrame, levels: list[int]
 ) -> DataFrame:
     """The candidate join of every covering-term region join: each
     point's leaf ``cell_id`` explodes to its ancestor ``anc_cell`` at
@@ -131,16 +106,12 @@ def covering_join(
     per region, so each (point, region) pair is at most one candidate
     row — no dedup shuffle.
 
-    ``broadcast`` hints the covering side.  On the shuffle path,
-    ``salt_k > 0`` spreads hot covering cells (urban tiles) over K
-    reducers: covering rows replicate K times and the probe picks one
-    salt bucket (SURVEY.md §4 skew row).  ``broadcast=False`` only
-    drops the hint: a covering under the session's
+    The join carries no hint, so Spark's
     ``spark.sql.autoBroadcastJoinThreshold`` (64 MB in
-    ``plans.session.build_session``) is still planned as a
-    BroadcastHashJoin, and on the salted path Spark then broadcasts
-    all K replicas.  The shuffle plan runs only with the threshold at
-    -1 or a covering above it.  An empty ``levels``
+    ``plans.session.build_session``) picks the plan: below it Spark
+    broadcasts the smaller side (the covering, unless the fact side is
+    estimated smaller still); above it the join shuffles on the cell
+    id, with AQE skew-join splitting for hot cells.  An empty ``levels``
     (empty/degenerate region list) yields a valid zero-row frame
     rather than an un-typeable empty array expression."""
     if levels:
@@ -150,21 +121,6 @@ def covering_join(
         probe = points.withColumn(
             "anc_cell", F.lit(None).cast("long")
         ).where(F.lit(False))
-    if salt_k and not broadcast:
-        cov = cov.withColumn(
-            "salt", F.explode(F.array(*[F.lit(i) for i in range(salt_k)]))
-        )
-        probe = probe.withColumn(
-            "salt", F.pmod(F.hash(F.col(point_key)), F.lit(salt_k))
-        )
-        return probe.join(
-            cov,
-            (probe["anc_cell"] == cov["cov_cell"])
-            & (probe["salt"] == cov["salt"]),
-            "inner",
-        )
-    if broadcast:
-        cov = F.broadcast(cov)
     return probe.join(cov, probe["anc_cell"] == cov["cov_cell"], "inner")
 
 
@@ -207,26 +163,22 @@ def point_in_cap_join(
     points: DataFrame,
     caps: list[tuple[object, Cap]],
     options: CovererOptions | None = None,
-    broadcast: bool | str = "auto",
-    salt_k: int = 0,
     point_key: str = "key",
 ) -> DataFrame:
     """Join points (with x,y,z and cell_id columns) to containing caps.
 
     Returns (point_key, region_id) pairs, exactly the brute-force
-    result set (refine predicate is bit-identical arithmetic).
-    ``broadcast="auto"`` picks the broadcast plan for dim-sized
-    coverings and the salted shuffle plan otherwise.
+    result set (refine predicate is bit-identical arithmetic).  The
+    candidate join is ``covering_join``, so Spark's broadcast threshold
+    picks broadcast or shuffle.
     """
     cov_pdf = COV.build_covering_rows(caps, options)
-    broadcast, salt_k = _resolve_plan(cov_pdf, broadcast, salt_k)
     cov = typed_cov_df(
         spark, with_cap_params(cov_pdf, caps), "region_id",
         [rid for rid, _ in caps],
     )
     joined = covering_join(
-        normalized_cols(points), cov, COV.covering_levels(cov_pdf),
-        broadcast, salt_k, point_key,
+        normalized_cols(points), cov, COV.covering_levels(cov_pdf)
     )
     return joined.where(cap_refine_predicate()).select(
         F.col(point_key), F.col("region_id")
@@ -238,16 +190,15 @@ def point_in_loop_join(
     points: DataFrame,
     loops: list,
     options: CovererOptions | None = None,
-    broadcast: bool | str = "auto",
     skip_interior: bool = False,
-    salt_k: int = 0,
     point_key: str = "key",
 ) -> DataFrame:
     """Join points (x,y,z + cell_id columns) to containing loop regions.
 
     Pattern (SURVEY.md §2.4): region loops -> driver-side coverer ->
-    ``covering_join``; crossing-number parity refine (vectorized pUDF,
-    S2Loop.cs Contains semantics).
+    ``covering_join`` (broadcast or shuffle by Spark's threshold);
+    crossing-number parity refine (vectorized pUDF, S2Loop.cs Contains
+    semantics).
 
     ``skip_interior=True`` skips the parity test for candidates whose
     covering cell is provably interior (MutableS2ShapeIndex
@@ -258,11 +209,8 @@ def point_in_loop_join(
     from ..functions import udfs as U
 
     cov_pdf = COV.build_covering_rows(loops, options)
-    broadcast, salt_k = _resolve_plan(cov_pdf, broadcast, salt_k)
     cov = typed_cov_df(spark, cov_pdf, "region_id", [rid for rid, _ in loops])
-    joined = covering_join(
-        points, cov, COV.covering_levels(cov_pdf), broadcast, salt_k, point_key
-    )
+    joined = covering_join(points, cov, COV.covering_levels(cov_pdf))
     loops_by_id = {
         rid: (rg.edges, rg.origin_inside) for rid, rg in loops
     }
@@ -325,10 +273,12 @@ def point_near_loop_join(
     ever built and no whole-parent-cell over-covering as with
     S2CellUnion.Expand) through ``covering_join``; the refine
     predicate is crossing parity OR min boundary edge distance
-    (vectorized)."""
+    (vectorized).  A negative or NaN radius raises ValueError."""
     from ..functions import udfs as U
     from ..kernels.buffered_region import buffered_loop_covering
 
+    # the ONE shared definition; it rejects a bad radius before the coverer
+    radius_chord2 = near_chord2(radius_rad)
     cov_pdf = _normalized_cover_rows(
         "region_id",
         ((rid, buffered_loop_covering(lp, radius_rad, options))
@@ -336,10 +286,8 @@ def point_near_loop_join(
     )
     cov = typed_cov_df(spark, cov_pdf, "region_id", [rid for rid, _ in loops])
     joined = covering_join(
-        normalized_cols(points), cov, COV.covering_levels(cov_pdf),
-        point_key=point_key,
+        normalized_cols(points), cov, COV.covering_levels(cov_pdf)
     )
-    radius_chord2 = near_chord2(radius_rad)  # the ONE shared definition
     loops_by_id = {rid: (lp.verts, lp.origin_inside) for rid, lp in loops}
     near = U.loop_near_udf(loops_by_id, radius_chord2)
     refined = joined.where(
@@ -353,9 +301,12 @@ def near_chord2(radius_rad: float) -> float:
     within-distance refines.  ONE definition shared by the Spark
     predicates and the DuckDB oracle literals — the exact IEEE
     expression must match on both sides or boundary-distance rows
-    diverge."""
+    diverge.  A negative or NaN radius raises ValueError (the coverer
+    would clamp it to 0 while sin^2 here turns -r into +r)."""
     import math
 
+    if not radius_rad >= 0:
+        raise ValueError(f"radius_rad must be >= 0, got {radius_rad!r}")
     s = math.sin(0.5 * min(radius_rad, math.pi))
     return min(4.0, 4 * s * s)
 
@@ -376,10 +327,12 @@ def point_near_polyline_join(
     predicate.  The streaming twin (streaming/route_stream) runs this
     same operator over each micro-batch, so their plans cannot drift.
 
-    ``polylines``: [(line_id, verts (m,3))].  Output (key, line_id)."""
+    ``polylines``: [(line_id, verts (m,3))].  Output (key, line_id).
+    A negative or NaN radius raises ValueError."""
     from ..functions import udfs as U
     from ..kernels.buffered_region import buffered_polyline_covering
 
+    radius_chord2 = near_chord2(radius_rad)  # before the coverer runs
     cov_pdf = _normalized_cover_rows(
         "line_id",
         ((lid, buffered_polyline_covering(verts, radius_rad, options))
@@ -389,11 +342,10 @@ def point_near_polyline_join(
         spark, cov_pdf, "line_id", [lid for lid, _ in polylines]
     )
     joined = covering_join(
-        normalized_cols(points), cov, COV.covering_levels(cov_pdf),
-        point_key=point_key,
+        normalized_cols(points), cov, COV.covering_levels(cov_pdf)
     )
     lines_by_id = {lid: np.asarray(v, dtype=float) for lid, v in polylines}
-    near = U.polyline_near_udf(lines_by_id, near_chord2(radius_rad))
+    near = U.polyline_near_udf(lines_by_id, radius_chord2)
     return joined.where(
         near(F.col("line_id"), F.col("ux"), F.col("uy"), F.col("uz"))
     ).select(F.col(point_key), F.col("line_id"))

@@ -10,7 +10,7 @@ invariants (decoded pixels allclose / PSNR>=40dB, caption byte-equal,
 phash unchanged) after any shuffle/join.
 
 Geotags: 80% uniform-ish over the sphere, 20% clustered around 8
-fixed hot spots (FIXTURES.md §1) to exercise skew/salting in the
+fixed hot spots (FIXTURES.md §1) to exercise hot cells in the
 covering-term join.
 """
 

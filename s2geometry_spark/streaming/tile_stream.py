@@ -132,8 +132,7 @@ def _region_joined(
     from ..operators import spatial_join as SJ
 
     return SJ.point_in_cap_join(
-        spark, event_tiles(df, tile_level), caps, broadcast=True,
-        point_key="ts",
+        spark, event_tiles(df, tile_level), caps, point_key="ts"
     )
 
 
@@ -146,10 +145,11 @@ def streaming_region_counts(
     watermark: str = "2 hours",
 ) -> DataFrame:
     """Streaming spatial join: event stream -> covering-term broadcast
-    join against region caps (a stream-static join: the dim side is a
-    plain broadcast table, so the stream never shuffles) -> exact chord
-    refine -> watermarked windowed counts per region.  The streaming
-    twin of operators.spatial_join.point_in_cap_join + count."""
+    join against region caps (a stream-static join: the covering is
+    broadcast under Spark's threshold, so the stream never shuffles)
+    -> exact chord refine -> watermarked windowed counts per region.
+    The streaming twin of operators.spatial_join.point_in_cap_join +
+    count."""
     stream = spark.readStream.schema(EVENT_SCHEMA).parquet(events_path)
     pairs = _region_joined(spark, stream, caps, tile_level)
     return (

@@ -29,3 +29,25 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture
+def shuffle_join_rows(spark):
+    """Build a frame with ``spark.sql.autoBroadcastJoinThreshold`` at
+    -1, so its unhinted equi-joins plan as shuffle joins; assert the
+    plan holds no broadcast hash join and return its sorted rows.  The
+    threshold is restored afterwards."""
+
+    def run(build):
+        conf = "spark.sql.autoBroadcastJoinThreshold"
+        saved = spark.conf.get(conf)
+        spark.conf.set(conf, "-1")
+        try:
+            df = build()
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            assert "BroadcastHashJoin" not in plan, plan
+            return sorted(tuple(r) for r in df.collect())
+        finally:
+            spark.conf.set(conf, saved)
+
+    return run

@@ -105,6 +105,22 @@ class TestKnnJoin:
         assert [r["count"] for r in per_q] == [n_idx]
 
 
+def test_ring_guarantee_is_near_chord2_of_min_width():
+    """The ring loop's per-round guarantee, ``near_chord2`` of
+    kMinWidth(level), is bit-equal to 4 sin^2(r / 2) on every level:
+    each kMinWidth is below pi, so near_chord2's clamps never bite."""
+    import math
+
+    from s2geometry_spark.constants import KMIN_WIDTH
+    from s2geometry_spark.operators.spatial_join import near_chord2
+
+    for level in range(31):
+        r = KMIN_WIDTH.get_value(level)
+        assert 0 < r < math.pi
+        s = math.sin(0.5 * r)
+        assert near_chord2(r).hex() == (4 * s * s).hex(), level
+
+
 @pytest.mark.parametrize("chunk_pairs", [1, 37 * 60, 1 << 16])
 def test_closest_k_kernel_matches_brute_force(monkeypatch, chunk_pairs):
     """Driver-side check of the brute arm's kernel against the

@@ -176,19 +176,15 @@ class TestLoopJoin:
         assert got == sorted(want)
         assert len(got) > 0
 
-    def test_salted_shuffle_path_same_result(self, spark, pts_df):
+    def test_shuffle_plan_same_result(self, spark, pts_df, shuffle_join_rows):
         loops = R.synthetic_loops(range(12))
         base = sorted(
-            (r["key"], r["region_id"])
-            for r in SJ.point_in_loop_join(spark, pts_df, loops).collect()
+            tuple(r) for r in SJ.point_in_loop_join(spark, pts_df, loops).collect()
         )
-        salted = sorted(
-            (r["key"], r["region_id"])
-            for r in SJ.point_in_loop_join(
-                spark, pts_df, loops, broadcast=False, salt_k=4
-            ).collect()
+        shuffled = shuffle_join_rows(
+            lambda: SJ.point_in_loop_join(spark, pts_df, loops)
         )
-        assert base == salted
+        assert base == shuffled
 
     def test_interior_skip_same_result(self, spark, pts_df):
         loops = R.synthetic_loops(range(12))

@@ -56,19 +56,62 @@ def pts(spark, sf_dir):
     )
 
 
-def test_pip_cap_join_broadcasts_and_never_shuffles_facts(spark, sf_dir, pts):
-    """The covering-term spatial join must be a BroadcastHashJoin with
-    ZERO shuffle exchanges — the fact side flows scan -> Arrow encode
-    -> ancestor explode -> broadcast join -> refine without ever
-    repartitioning (the property that makes it survive 100x data)."""
+def _region_join(spark, pts, kind):
+    from s2geometry_spark.operators import shape_index as SI
     from s2geometry_spark.operators import spatial_join as SJ
     from s2geometry_spark.sources import regions_src as R
 
-    j = SJ.point_in_cap_join(spark, pts, R.synthetic_caps(range(25)))
-    names = [n for n, _ in _walk_plan(j)]
+    if kind == "cap":
+        return SJ.point_in_cap_join(spark, pts, R.synthetic_caps(range(25)))
+    loops = R.synthetic_loops(range(25))
+    if kind == "loop":
+        return SJ.point_in_loop_join(spark, pts, loops)
+    if kind == "near_loop":
+        return SJ.point_near_loop_join(spark, pts, loops, 0.08)
+    return SI.point_in_loop_index_join(spark, pts, loops)
+
+
+@pytest.mark.parametrize("kind", ["cap", "loop", "near_loop", "loop_index"])
+def test_region_join_broadcasts_and_never_shuffles_facts(spark, pts, kind):
+    """Each covering-term region join must be a BroadcastHashJoin with
+    ZERO shuffle exchanges — the fact side flows scan -> Arrow encode
+    -> ancestor explode -> broadcast join -> refine without ever
+    repartitioning (the property that makes it survive 100x data).
+    The join carries no hint: the session's broadcast threshold alone
+    picks this plan."""
+    names = [n for n, _ in _walk_plan(_region_join(spark, pts, kind))]
     assert "BroadcastHashJoinExec" in names
     assert "ShuffleExchangeExec" not in names
     assert "CartesianProductExec" not in names
+
+
+def test_stream_static_region_join_broadcasts(spark, sf_dir, tmp_path):
+    """The streaming region join is a stream-static BroadcastHashJoin
+    under the session's broadcast threshold, read from the executed
+    micro-batch plan of the query."""
+    import os
+
+    from s2geometry_spark.sources import regions_src as R
+    from s2geometry_spark.streaming import tile_stream as TS
+
+    events = tmp_path / "events"
+    events.mkdir()
+    os.symlink(f"{sf_dir}/events.parquet", events / "events.parquet")
+    counts = TS.streaming_region_counts(
+        spark, str(events), R.synthetic_caps(range(25))
+    )
+    q = (
+        counts.writeStream.format("memory")
+        .queryName("plan_evidence_region_stream")
+        .outputMode("complete")
+        .option("checkpointLocation", str(tmp_path / "ck"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    plan = q._jsq.explainInternal(False)
+    assert "BroadcastHashJoin" in plan, plan
+    assert "CartesianProduct" not in plan
 
 
 def test_knn_join_shuffles_only_on_query_keys(spark, sf_dir, pts):

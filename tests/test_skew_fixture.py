@@ -1,9 +1,11 @@
 """The planted-skew fixture (jobs/gen_sf_scale.py --skew) and the
-salted-vs-unsalted invariant it exists to demonstrate: flipping the
-salting knob changes the PLAN (hot keys spread over salt partitions),
-never the RESULT.  bench.py --skew asserts count equality at full
-size; these tests assert full row-set equality at miniature size,
-through the same parquet fixture path the bench reads."""
+invariant it exists to demonstrate: a plan change never changes the
+RESULT.  The covering join's shuffle plan returns its broadcast
+plan's rows on the hot geotag, and flipping the LSH self-joins'
+salting knob spreads hot buckets over salt partitions with the same
+pairs.  bench.py --skew asserts the ANN count equality at full size;
+these tests assert full row-set equality at miniature size, through
+the same parquet fixture path the bench reads."""
 
 from __future__ import annotations
 
@@ -51,7 +53,9 @@ def test_generator_deterministic_and_hot_fractions(skew_dir, tmp_path):
     assert n_text == 1
 
 
-def test_pip_salted_equals_unsalted_rows(spark, skew_dir):
+def test_pip_shuffle_plan_equals_broadcast_rows(
+    spark, skew_dir, shuffle_join_rows
+):
     from s2geometry_spark.kernels.geom import Cap
     from s2geometry_spark.operators import spatial_join as SJ
     from s2geometry_spark.operators import tile as T
@@ -63,10 +67,10 @@ def test_pip_salted_equals_unsalted_rows(spark, skew_dir):
     caps = R.synthetic_caps(range(1, 25)) + [
         (METRO_REGION_ID, Cap(metro_center(), 1e-6))
     ]
-    salted = SJ.point_in_cap_join(spark, pts, caps, broadcast=False, salt_k=8)
-    unsalted = SJ.point_in_cap_join(spark, pts, caps, broadcast=False, salt_k=0)
-    got = sorted(tuple(r) for r in salted.collect())
-    want = sorted(tuple(r) for r in unsalted.collect())
+    want = sorted(
+        tuple(r) for r in SJ.point_in_cap_join(spark, pts, caps).collect()
+    )
+    got = shuffle_join_rows(lambda: SJ.point_in_cap_join(spark, pts, caps))
     assert got == want
     # every metro point lands in the metro cap: the hot key is real
     n_metro = sum(1 for _, rid in got if rid == METRO_REGION_ID)

@@ -53,19 +53,25 @@ class TestCapJoin:
         assert got == want
         assert len(got) > 0
 
-    def test_salted_shuffle_path_same_result(self, spark, pts_df, pts_np):
-        caps = R.synthetic_caps(range(12))
-        broadcast = sorted(
-            (r["key"], r["region_id"])
-            for r in SJ.point_in_cap_join(spark, pts_df, caps).collect()
-        )
-        salted = sorted(
-            (r["key"], r["region_id"])
-            for r in SJ.point_in_cap_join(
-                spark, pts_df, caps, broadcast=False, salt_k=4
-            ).collect()
-        )
-        assert broadcast == salted
+    def test_shuffle_plan_same_result(
+        self, spark, pts_df, pts_np, shuffle_join_rows
+    ):
+        """The shuffle join (covering above the broadcast threshold)
+        returns the broadcast plan's rows, with 16 caps sharing one
+        covering cell (a hot cell) among them."""
+        from s2geometry_spark.kernels.geom import Cap
+
+        _keys, unit = pts_np
+        center = tuple(float(v) for v in unit[0])
+        hot = [(1000 + i, Cap(center, 1e-3 * (1 + i / 100))) for i in range(16)]
+        caps = R.synthetic_caps(range(12)) + hot
+        auto = SJ.point_in_cap_join(spark, pts_df, caps)
+        plan = auto._jdf.queryExecution().executedPlan().toString()
+        assert "BroadcastHashJoin" in plan
+        want = sorted(tuple(r) for r in auto.collect())
+        got = shuffle_join_rows(lambda: SJ.point_in_cap_join(spark, pts_df, caps))
+        assert got == want
+        assert sum(1 for _, rid in got if rid >= 1000) >= len(hot)
 
     def test_semi_and_anti(self, spark, pts_df):
         caps = R.synthetic_caps(range(12))
@@ -166,66 +172,27 @@ def test_tile_stream_runs_the_coverer_once_per_cap(
     assert len(calls) == len(caps)
 
 
-def _plan_nodes(df):
-    """Physical plan nodes before AQE re-optimization."""
-    out = []
+@pytest.mark.parametrize("radius", [-0.01, float("nan")])
+def test_near_joins_reject_negative_or_nan_radius(
+    spark, pts_df, radius, monkeypatch
+):
+    """The buffered covering clamps a negative radius to 0 while the
+    refine's sin^2 turns -r into +r, so the two halves of a near join
+    would disagree: both near joins refuse such a radius before any
+    coverer runs."""
+    from s2geometry_spark.kernels import buffered_region as BR
 
-    def walk(node):
-        if node.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
-            return walk(node.initialPlan())
-        out.append(node)
-        for i in range(node.children().size()):
-            walk(node.children().apply(i))
+    def no_cover(*_args, **_kw):
+        raise AssertionError("the coverer ran")
 
-    walk(df._jdf.queryExecution().executedPlan())
-    return out
-
-
-def test_hot_covering_cell_auto_salts_the_shuffle_plan(spark, pts_df, pts_np):
-    """The auto-salt branch of _resolve_plan: when at least
-    HOT_CELL_SALT_THRESHOLD regions share one covering cell and the
-    covering side is not broadcast, the shuffle join salts (covering
-    rows replicated by a Generate, no broadcast) and returns exactly
-    the broadcast plan's rows."""
-    from s2geometry_spark.kernels.geom import Cap
-    from s2geometry_spark.operators import coverings as COV
-
-    _keys, unit = pts_np
-    center = tuple(float(v) for v in unit[0])
-    caps = [
-        (rid, Cap(center, 1e-3 * (1 + rid / 100)))
-        for rid in range(SJ.HOT_CELL_SALT_THRESHOLD)
-    ] + R.synthetic_caps(range(100, 104))
-    assert SJ._resolve_plan(COV.build_covering_rows(caps), False, 0) == (False, 8)
-
-    def rows(df):
-        return sorted((r["key"], r["region_id"]) for r in df.collect())
-
-    conf = "spark.sql.autoBroadcastJoinThreshold"
-    saved = spark.conf.get(conf)
-    # a covering too big to broadcast: no size-based broadcast either
-    spark.conf.set(conf, "-1")
-    try:
-        salted = SJ.point_in_cap_join(spark, pts_df, caps, broadcast=False)
-        nodes = _plan_nodes(salted)
-        names = [n.getClass().getSimpleName() for n in nodes]
-        gen_out = [
-            [n.generatorOutput().apply(i).name()
-             for i in range(n.generatorOutput().size())]
-            for n in nodes if n.getClass().getSimpleName() == "GenerateExec"
-        ]
-        assert ["salt"] in gen_out
-        assert "BroadcastHashJoinExec" not in names
-        auto = SJ.point_in_cap_join(spark, pts_df, caps)
-        auto_names = [n.getClass().getSimpleName() for n in _plan_nodes(auto)]
-        assert "BroadcastHashJoinExec" in auto_names
-        got, want = rows(salted), rows(auto)
-    finally:
-        spark.conf.set(conf, saved)
-    assert got == want
-    assert sum(1 for _, rid in got if rid < SJ.HOT_CELL_SALT_THRESHOLD) >= (
-        SJ.HOT_CELL_SALT_THRESHOLD
-    )
+    monkeypatch.setattr(BR, "buffered_loop_covering", no_cover)
+    monkeypatch.setattr(BR, "buffered_polyline_covering", no_cover)
+    loops = R.synthetic_loops(range(2))
+    lines = [(k, R.polyline_vertices(k)) for k in range(2)]
+    with pytest.raises(ValueError, match="radius"):
+        SJ.point_near_loop_join(spark, pts_df, loops, radius)
+    with pytest.raises(ValueError, match="radius"):
+        SJ.point_near_polyline_join(spark, pts_df, lines, radius)
 
 
 def test_vectorized_cover_rows_match_scalar_kernels():
