@@ -14,6 +14,8 @@ to an order-isomorphic signed key for range predicates.
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 
 from ..constants import (
@@ -26,7 +28,7 @@ from ..constants import (
     SENTINEL_ID,
 )
 from . import coords
-from .hilbert import U, from_face_ij, to_face_ij
+from .hilbert import U, from_face_ij, from_face_ij_int, to_face_ij, to_face_ij_int
 
 
 def as_u64(cell_id: np.ndarray) -> np.ndarray:
@@ -416,20 +418,35 @@ def edge_neighbors(cell_id: np.ndarray) -> np.ndarray:
     return np.stack([down, right, up, left], axis=1)
 
 
+def _edge_neighbors_one(cid: int) -> list[int]:
+    """``edge_neighbors`` of one cell in Python ints."""
+    f, i, j, _ = to_face_ij_int(cid)
+    lsb = cid & -cid
+    size = 1 << ((lsb.bit_length() - 1) // 2)
+    return [
+        (_from_face_ij_same_one(f, ii, jj, same) & -lsb) | lsb
+        for ii, jj, same in (
+            (i, j - size, j - size >= 0),
+            (i + size, j, i + size < MAX_SIZE),
+            (i, j + size, j + size < MAX_SIZE),
+            (i - size, j, i - size >= 0),
+        )
+    ]
+
+
 def vertex_neighbors(cell_id: np.ndarray, nbr_level) -> list[np.ndarray]:
     """Neighbors of the closest vertex at nbr_level < level(id); 3 or 4
     cells per row (AppendVertexNeighbors, S2CellId.cs:710-755)."""
     cid = as_u64(np.atleast_1d(cell_id))
-    out = []
-    for idx in range(cid.shape[0]):
-        out.append(_vertex_neighbors_one(cid[idx], int(nbr_level)))
-    return out
+    return [
+        np.array(_vertex_neighbors_one(c, int(nbr_level)), np.uint64)
+        for c in cid.tolist()
+    ]
 
 
-def _vertex_neighbors_one(cid: np.uint64, lv: int) -> np.ndarray:
-    one = np.array([cid], np.uint64)
-    f, i, j = to_face_ij(one)
-    f, i, j = int(f[0]), int(i[0]), int(j[0])
+def _vertex_neighbors_one(cid: int, lv: int) -> list[int]:
+    """``vertex_neighbors`` of one cell in Python ints."""
+    f, i, j, _ = to_face_ij_int(cid)
     halfsize = 1 << (MAX_LEVEL - (lv + 1))
     size = halfsize << 1
     if i & halfsize:
@@ -440,19 +457,75 @@ def _vertex_neighbors_one(cid: np.uint64, lv: int) -> np.ndarray:
         joffset, jsame = size, (j + size) < MAX_SIZE
     else:
         joffset, jsame = -size, (j - size) >= 0
-    fs = [f, f, f]
-    iis = [i, i + ioffset, i]
-    jjs = [j, j, j + joffset]
-    sames = [True, isame, jsame]
+    nbrs = [
+        (i, j, True), (i + ioffset, j, isame), (i, j + joffset, jsame)
+    ]
     if isame or jsame:
-        fs.append(f)
-        iis.append(i + ioffset)
-        jjs.append(j + joffset)
-        sames.append(isame and jsame)
-    ids = _from_face_ij_same(
-        np.asarray(fs, np.int64), np.asarray(iis, np.int64),
-        np.asarray(jjs, np.int64), np.asarray(sames, bool))
-    return parent(ids, lv)
+        nbrs.append((i + ioffset, j + joffset, isame and jsame))
+    new_lsb = 1 << (2 * (MAX_LEVEL - lv))
+    return [
+        (_from_face_ij_same_one(f, ii, jj, same) & -new_lsb) | new_lsb
+        for ii, jj, same in nbrs
+    ]
+
+
+def _from_face_ij_same_one(f: int, i: int, j: int, same: bool) -> int:
+    """``_from_face_ij_same`` of one (face, i, j) in Python ints."""
+    if same:
+        return from_face_ij_int(f, i, j)
+    return _from_face_ij_wrap_one(f, i, j)
+
+
+def _from_face_ij_wrap_one(f: int, i: int, j: int) -> int:
+    """``_from_face_ij_wrap`` of one (face, i, j) in Python ints and
+    floats (same op order, so bit-identical)."""
+    from .geom import _face_uv_to_xyz
+
+    i = min(max(i, -1), MAX_SIZE)
+    j = min(max(j, -1), MAX_SIZE)
+    k_scale = 1.0 / MAX_SIZE
+    k_limit = math.nextafter(1.0, 2.0)  # 1 + DBL_EPSILON
+    u = min(max(k_scale * (2 * (i - MAX_SIZE // 2) + 1), -k_limit), k_limit)
+    v = min(max(k_scale * (2 * (j - MAX_SIZE // 2) + 1), -k_limit), k_limit)
+    face, nu, nv = _xyz_to_face_uv_one(*_face_uv_to_xyz(f, u, v))
+
+    def st_to_ij(s):
+        return min(max(round(LIMIT_IJ * s - 0.5), 0), LIMIT_IJ - 1)
+
+    return from_face_ij_int(
+        face, st_to_ij(0.5 * (nu + 1)), st_to_ij(0.5 * (nv + 1))
+    )
+
+
+def _xyz_to_face_uv_one(x: float, y: float, z: float):
+    """(face, u, v) of one direction vector: the face of the
+    largest-abs component (ties to the later axis, as ``coords.get_face``)
+    and its projection, whose ``-a / b`` equals the vectorized
+    ``(-1.0 * a) / b`` bit for bit."""
+    from .geom import _valid_face_xyz_to_uv
+
+    ax, ay, az = abs(x), abs(y), abs(z)
+    if ax > ay and ax > az:
+        face = 0 if x >= 0.0 else 3
+    elif ay > az:
+        face = 1 if y >= 0.0 else 4
+    else:
+        face = 2 if z >= 0.0 else 5
+    return (face, *_valid_face_xyz_to_uv(face, (x, y, z)))
+
+
+def xyz_to_cellid_one(x: float, y: float, z: float) -> int:
+    """Leaf cell id of one direction vector in Python ints and floats,
+    bit-identical to ``xyz_to_cellid`` (same face choice, same op
+    order as ``_uv_to_ij32``)."""
+    face, u, v = _xyz_to_face_uv_one(float(x), float(y), float(z))
+
+    def uv_to_ij(q):
+        r = math.sqrt(abs(q) * 3.0 + 1.0) * 0.5
+        st = r if q >= 0.0 else 1.0 - r
+        return min(max(round(st * LIMIT_IJ - 0.5), 0), LIMIT_IJ - 1)
+
+    return from_face_ij_int(face, uv_to_ij(u), uv_to_ij(v))
 
 
 def ring_neighbors(cell_id: np.ndarray, lv: int) -> np.ndarray:

@@ -9,6 +9,13 @@ coverings are bit-identical to the reference for the same region.
 
 Regions are the small dim side; this never runs distributed.  The
 output feeds the broadcast covering table of the spatial join.
+
+Coverer cells are plain-int ``geom.Cell`` values and the cell-id
+arithmetic here (levels, parents, neighbors, validity) is in Python
+ints, so neither makes a numpy call per cell: 1-element ufunc dispatch
+would cost far more than the arithmetic.  Only a region's own
+predicate may (``loop.Loop`` tests a cell against all its edges in one
+vectorized pass).
 """
 
 from __future__ import annotations
@@ -17,7 +24,8 @@ import heapq
 import itertools
 from dataclasses import dataclass, field
 
-from ..constants import MAX_LEVEL
+from ..constants import MAX_LEVEL, NUM_FACES, POS_BITS
+from . import cellid as CI
 from . import cellunion as CU
 from .geom import Cell, Region
 
@@ -226,12 +234,11 @@ class RegionCoverer:
         too_many = len(covering) > self.options.max_cells
         same_parent_count = 1
         prev: int | None = None
-        import numpy as np
-
-        from . import cellid as CI
-
         for cid in covering:
-            if not CI.is_valid(np.array([cid], np.uint64))[0]:
+            # S2CellId.IsValid: a face below 6 and an even-position lsb
+            if (cid >> POS_BITS) >= NUM_FACES or not (
+                CU._lsb(cid) & 0x1555555555555555
+            ):
                 return False
             level = CU._level(cid)
             if level < min_level or level > max_level:
@@ -349,14 +356,7 @@ class _CellUnionRegion(Region):
         return CU.intersects_id(self.ids, cell.id)
 
     def contains_point(self, p) -> bool:
-        import numpy as np
-
-        from . import cellid as CI
-
-        leaf = int(CI.xyz_to_cellid(
-            np.array([p[0]]), np.array([p[1]]), np.array([p[2]])
-        )[0])
-        return CU.contains_id(self.ids, leaf)
+        return CU.contains_id(self.ids, CI.xyz_to_cellid_one(*p))
 
 
 def _common_ancestor_level(a: int, b: int) -> int:
@@ -377,10 +377,6 @@ def flood_fill(region: Region, start: int) -> list[int]:
     """All edge-connected cells at start's level that intersect the
     region, BFS from `start` (S2RegionCoverer.FloodFill).  Returns
     sorted uint64-valued cell ids."""
-    import numpy as np
-
-    from . import cellid as CI
-
     visited = {int(start)}
     frontier = [int(start)]
     out: list[int] = []
@@ -389,9 +385,7 @@ def flood_fill(region: Region, start: int) -> list[int]:
         if not region.may_intersect_cell(Cell(cid)):
             continue
         out.append(cid)
-        nbrs = CI.edge_neighbors(np.array([cid], dtype=np.uint64))[0]
-        for nbr in nbrs:
-            nbr = int(nbr)
+        for nbr in CI._edge_neighbors_one(cid):
             if nbr not in visited:
                 visited.add(nbr)
                 frontier.append(nbr)
@@ -403,14 +397,5 @@ def get_simple_covering(region: Region, start_point, level: int) -> list[int]:
     `start_point` (S2RegionCoverer.GetSimpleCovering).  The start point
     should be contained by the region (all cells returned intersect
     the region and are edge-connected to the start cell)."""
-    import numpy as np
-
-    from . import cellid as CI
-
-    leaf = CI.xyz_to_cellid(
-        np.array([start_point[0]]),
-        np.array([start_point[1]]),
-        np.array([start_point[2]]),
-    )
-    start = int(CI.parent(leaf, level)[0])
+    start = CU._parent(CI.xyz_to_cellid_one(*start_point), level)
     return flood_fill(region, start)

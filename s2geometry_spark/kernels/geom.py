@@ -15,11 +15,9 @@ from __future__ import annotations
 import math
 from dataclasses import dataclass
 
-import numpy as np
-
-from ..constants import MAX_LEVEL
+from ..constants import LIMIT_IJ, MAX_LEVEL, MAX_SITI, POS_BITS
 from . import cellid as CI
-from . import coords
+from .hilbert import KPOS_TO_IJ, KPOS_TO_ORIENTATION, to_face_ij_int
 
 DBL_EPS = 2.220446049250313e-16  # 2^-52, .NET double.Epsilon equivalent used by S2
 PI = math.pi
@@ -312,29 +310,56 @@ def _positive_distance(a: float, b: float) -> float:
 # ---------------------------------------------------------------------
 
 class Cell:
-    """One S2 cell: face, level, uv-rect (S2Region/S2Cell.cs:11-64)."""
+    """One S2 cell: face, level, uv-rect (S2Region/S2Cell.cs:11-64).
 
-    __slots__ = ("id", "face", "level", "orientation", "u_lo", "u_hi", "v_lo", "v_hi")
+    A plain Python value: ``id``, ``face``, ``level`` and
+    ``orientation`` are ints and the uv bounds are floats; no method
+    calls numpy.  The constructor decodes the id once
+    (``hilbert.to_face_ij_int``).  ``children()`` follows
+    S2Cell.Subdivide and decodes nothing: child ``pos`` starts at the
+    parent's ``(i_lo, j_lo)`` plus ``KPOS_TO_IJ[orientation][pos]``
+    half-sizes, its orientation is
+    ``orientation ^ KPOS_TO_ORIENTATION[pos]``, and its uv bounds come
+    from the constructor's ``_st_to_uv(ij / 2^30)`` expression, so both
+    ways of making a cell give the same bits.  The four normalized
+    vertices and the rect bound are computed once per cell, on first
+    use.
+    """
+
+    __slots__ = (
+        "id", "face", "level", "orientation", "u_lo", "u_hi", "v_lo",
+        "v_hi", "_i_lo", "_j_lo", "_vertices", "_rect_bound",
+    )
 
     def __init__(self, cell_id: int):
         # accept either unsigned or signed-LongType representations of
         # the same 64-bit id (Spark hands back signed longs)
-        self.id = int(cell_id) & 0xFFFFFFFFFFFFFFFF
-        one = np.array([self.id], dtype=np.uint64)
-        from .hilbert import to_face_ij
+        cid = int(cell_id) & 0xFFFFFFFFFFFFFFFF
+        face, i, j, orientation = to_face_ij_int(cid)
+        level = MAX_LEVEL - ((cid & -cid).bit_length() - 1) // 2
+        size = 1 << (MAX_LEVEL - level)
+        i_lo = i & -size
+        j_lo = j & -size
+        self._set(
+            cid, face, level, orientation, i_lo, j_lo,
+            _st_to_uv(i_lo / LIMIT_IJ), _st_to_uv((i_lo + size) / LIMIT_IJ),
+            _st_to_uv(j_lo / LIMIT_IJ), _st_to_uv((j_lo + size) / LIMIT_IJ),
+        )
 
-        f, i, j, o = to_face_ij(one, want_orientation=True)
-        self.face = int(f[0])
-        self.orientation = int(o[0])
-        self.level = int(CI.level(one)[0])
-        size = 1 << (MAX_LEVEL - self.level)
-        i_lo = int(i[0]) & -size
-        j_lo = int(j[0]) & -size
-        limit = float(1 << MAX_LEVEL)
-        self.u_lo = _st_to_uv(i_lo / limit)
-        self.u_hi = _st_to_uv((i_lo + size) / limit)
-        self.v_lo = _st_to_uv(j_lo / limit)
-        self.v_hi = _st_to_uv((j_lo + size) / limit)
+    def _set(self, cid, face, level, orientation, i_lo, j_lo,
+             u_lo, u_hi, v_lo, v_hi) -> None:
+        self.id = cid
+        self.face = face
+        self.level = level
+        self.orientation = orientation
+        self._i_lo = i_lo
+        self._j_lo = j_lo
+        self.u_lo = u_lo
+        self.u_hi = u_hi
+        self.v_lo = v_lo
+        self.v_hi = v_hi
+        self._vertices = None
+        self._rect_bound = None
 
     def is_leaf(self) -> bool:
         return self.level == MAX_LEVEL
@@ -347,8 +372,17 @@ class Cell:
         v = self.v_hi if j else self.v_lo
         return _face_uv_to_xyz(self.face, u, v)
 
+    def vertices(self) -> tuple:
+        """The four normalized vertices in ``vertex_raw`` order."""
+        vs = self._vertices
+        if vs is None:
+            vs = self._vertices = tuple(
+                normalize(self.vertex_raw(k)) for k in range(4)
+            )
+        return vs
+
     def vertex(self, k: int):
-        return normalize(self.vertex_raw(k))
+        return self.vertices()[k & 3]
 
     def edge_raw(self, k: int):
         # Outward-facing edge normals (S2Cell.cs:106-112)
@@ -362,8 +396,15 @@ class Cell:
         return neg(_get_u_norm(self.face, self.u_lo))  # left
 
     def center_raw(self):
-        x, y, z = CI.cellid_to_xyz_raw(np.array([self.id], np.uint64))
-        return (float(x[0]), float(y[0]), float(z[0]))
+        """Center direction, not unit length (S2CellId.ToPointRaw): the
+        center's si/ti is ``2 * ij_lo + size``, as
+        ``cellid.center_siti`` computes it."""
+        size = 1 << (MAX_LEVEL - self.level)
+        return _face_uv_to_xyz(
+            self.face,
+            _st_to_uv((1.0 / MAX_SITI) * (2 * self._i_lo + size)),
+            _st_to_uv((1.0 / MAX_SITI) * (2 * self._j_lo + size)),
+        )
 
     def center(self):
         return normalize(self.center_raw())
@@ -392,7 +433,12 @@ class Cell:
         return longitude(_face_uv_to_xyz(self.face, u, v))
 
     def get_rect_bound(self) -> "LatLngRect":
-        """S2Cell.cs:556-624."""
+        """S2Cell.cs:556-624 (computed once per cell)."""
+        if self._rect_bound is None:
+            self._rect_bound = self._compute_rect_bound()
+        return self._rect_bound
+
+    def _compute_rect_bound(self) -> "LatLngRect":
         if self.level > 0:
             u = self.u_lo + self.u_hi
             v = self.v_lo + self.v_hi
@@ -430,10 +476,31 @@ class Cell:
         return cap
 
     def children(self) -> list["Cell"]:
-        cid = np.array([self.id], np.uint64)
-        return [
-            Cell(int(CI.child(cid, k)[0])) for k in range(4)
-        ]
+        """The four children of a non-leaf cell in Hilbert order
+        (S2Cell.Subdivide)."""
+        level = self.level + 1
+        half = 1 << (MAX_LEVEL - level)
+        lsb = 1 << (2 * (MAX_LEVEL - level))
+        face, orientation = self.face, self.orientation
+        i_lo, j_lo = self._i_lo, self._j_lo
+        # the uv bounds shared with the parent, then the midlines
+        us = (self.u_lo, _st_to_uv((i_lo + half) / LIMIT_IJ), self.u_hi)
+        vs = (self.v_lo, _st_to_uv((j_lo + half) / LIMIT_IJ), self.v_hi)
+        cid = self.id - 3 * lsb  # child 0: id - 4 * lsb + lsb
+        out = []
+        for pos in range(4):
+            ij = KPOS_TO_IJ[orientation][pos]
+            ci = ij >> 1
+            cj = ij & 1
+            child = Cell.__new__(Cell)
+            child._set(
+                cid, face, level, orientation ^ KPOS_TO_ORIENTATION[pos],
+                i_lo + ci * half, j_lo + cj * half,
+                us[ci], us[ci + 1], vs[cj], vs[cj + 1],
+            )
+            out.append(child)
+            cid += 2 * lsb
+        return out
 
 
 def _st_to_uv(s: float) -> float:
@@ -443,14 +510,17 @@ def _st_to_uv(s: float) -> float:
 
 
 def _face_uv_to_xyz(face: int, u: float, v: float):
-    return {
-        0: (1.0, u, v),
-        1: (-u, 1.0, v),
-        2: (-u, -v, 1.0),
-        3: (-1.0, -v, -u),
-        4: (v, -1.0, -u),
-        5: (v, u, -1.0),
-    }[face]
+    if face == 0:
+        return (1.0, u, v)
+    if face == 1:
+        return (-u, 1.0, v)
+    if face == 2:
+        return (-u, -v, 1.0)
+    if face == 3:
+        return (-1.0, -v, -u)
+    if face == 4:
+        return (v, -1.0, -u)
+    return (v, u, -1.0)
 
 
 def _valid_face_xyz_to_uv(face: int, p):
@@ -469,17 +539,31 @@ def _valid_face_xyz_to_uv(face: int, p):
 
 
 def _get_u_norm(face: int, u: float):
-    return {
-        0: (u, -1.0, 0.0), 1: (1.0, u, 0.0), 2: (1.0, 0.0, u),
-        3: (-u, 0.0, 1.0), 4: (0.0, -u, 1.0), 5: (0.0, -1.0, -u),
-    }[face]
+    if face == 0:
+        return (u, -1.0, 0.0)
+    if face == 1:
+        return (1.0, u, 0.0)
+    if face == 2:
+        return (1.0, 0.0, u)
+    if face == 3:
+        return (-u, 0.0, 1.0)
+    if face == 4:
+        return (0.0, -u, 1.0)
+    return (0.0, -1.0, -u)
 
 
 def _get_v_norm(face: int, v: float):
-    return {
-        0: (-v, 0.0, 1.0), 1: (0.0, -v, 1.0), 2: (0.0, -1.0, -v),
-        3: (v, -1.0, 0.0), 4: (1.0, v, 0.0), 5: (1.0, 0.0, v),
-    }[face]
+    if face == 0:
+        return (-v, 0.0, 1.0)
+    if face == 1:
+        return (0.0, -v, 1.0)
+    if face == 2:
+        return (0.0, -1.0, -v)
+    if face == 3:
+        return (v, -1.0, 0.0)
+    if face == 4:
+        return (1.0, v, 0.0)
+    return (1.0, 0.0, v)
 
 
 _UVW_AXES = [
@@ -671,13 +755,10 @@ class Cap(Region):
 
         level = KMIN_WIDTH.get_level_for_min_value(self.radius_radians()) - 1
         if level < 0:
-            return [int(CI.from_face(np.array([f]))[0]) for f in range(6)]
-        center_id = CI.xyz_to_cellid(
-            np.array([self.center[0]]),
-            np.array([self.center[1]]),
-            np.array([self.center[2]]),
+            return [(f << POS_BITS) | (1 << (POS_BITS - 1)) for f in range(6)]
+        return CI._vertex_neighbors_one(
+            CI.xyz_to_cellid_one(*self.center), level
         )
-        return [int(v) for v in CI.vertex_neighbors(center_id, level)[0]]
 
     def intersects_cell(self, cell: Cell) -> bool:
         """Exact cap-cell intersection: S2Cap.MayIntersect
@@ -686,7 +767,7 @@ class Cap(Region):
 
     def contains_cell(self, cell: Cell) -> bool:
         """S2Cap.cs:449-465."""
-        vertices = [cell.vertex(k) for k in range(4)]
+        vertices = cell.vertices()
         for v in vertices:
             if not self.contains_point(v):
                 return False
@@ -694,7 +775,7 @@ class Cap(Region):
 
     def may_intersect_cell(self, cell: Cell) -> bool:
         """S2Cap.cs:467-478."""
-        vertices = [cell.vertex(k) for k in range(4)]
+        vertices = cell.vertices()
         for v in vertices:
             if self.contains_point(v):
                 return True

@@ -123,16 +123,34 @@ def from_face_ij(face: np.ndarray, i: np.ndarray, j: np.ndarray) -> np.ndarray:
     return ((n << 1) | 1).view(np.uint64)
 
 
-_LOOKUP_IJ_LIST = None
+# Python-int copies of the 4-bit tables for the one-cell paths below
+_LOOKUP_POS_LIST = LOOKUP_POS.tolist()
+_LOOKUP_IJ_LIST = LOOKUP_IJ.tolist()
 
 
-def _to_face_ij_scalar(cid: int, want_orientation: bool, shape):
-    """One-cell decode in Python ints (same LUT rounds as the
-    vectorized path, so identical results), wrapped back into arrays
-    of the input shape."""
-    global _LOOKUP_IJ_LIST
-    if _LOOKUP_IJ_LIST is None:
-        _LOOKUP_IJ_LIST = LOOKUP_IJ.tolist()
+def from_face_ij_int(face: int, i: int, j: int) -> int:
+    """One-cell leaf encode in Python ints: the 8 four-bit LUT rounds
+    of S2CellId.FromFaceIJ (S2CellId.cs:817-853), bit-identical to
+    ``from_face_ij``.  For the one-cell region code, where
+    1-element ufunc dispatch costs ~100x the int work."""
+    lut = _LOOKUP_POS_LIST
+    n = face << (POS_BITS - 1)
+    bits = face & SWAP_MASK
+    mask = (1 << LOOKUP_BITS) - 1
+    for k in range(7, -1, -1):
+        shift = k * LOOKUP_BITS
+        bits = lut[bits + (((i >> shift) & mask) << (LOOKUP_BITS + 2))
+                   + (((j >> shift) & mask) << 2)]
+        n |= (bits >> 2) << (2 * shift)
+        bits &= SWAP_MASK | INVERT_MASK
+    return n * 2 + 1
+
+
+def to_face_ij_int(cid: int) -> tuple[int, int, int, int]:
+    """One-cell decode in Python ints: cid -> (face, i, j, orientation),
+    the same LUT rounds as ``to_face_ij`` (so identical results).  For
+    non-leaf cells (i, j) is a leaf next to the cell center and the
+    orientation is the cell's own (S2CellId.cs:860-916)."""
     lut = _LOOKUP_IJ_LIST
     face = cid >> POS_BITS
     bits = face & SWAP_MASK
@@ -140,23 +158,23 @@ def _to_face_ij_scalar(cid: int, want_orientation: bool, shape):
     j = 0
     for k in range(7, -1, -1):
         nbits = (MAX_LEVEL - 7 * LOOKUP_BITS) if k == 7 else LOOKUP_BITS
-        bits += ((cid >> (k * 2 * LOOKUP_BITS + 1))
-                 & ((1 << (2 * nbits)) - 1)) << 2
-        bits = lut[bits]
+        bits = lut[bits + (((cid >> (k * 2 * LOOKUP_BITS + 1))
+                            & ((1 << (2 * nbits)) - 1)) << 2)]
         i += (bits >> (LOOKUP_BITS + 2)) << (k * LOOKUP_BITS)
         j += ((bits >> 2) & ((1 << LOOKUP_BITS) - 1)) << (k * LOOKUP_BITS)
         bits &= SWAP_MASK | INVERT_MASK
+    # each "00" suffix pair of a non-leaf cell flips the swap bit
+    if (cid & -cid) & 0x1111111111111110:
+        bits ^= SWAP_MASK
+    return face, i, j, bits
 
-    def arr(v, dtype=np.int64):
-        return np.full(shape, v, dtype=dtype)
 
+def _to_face_ij_scalar(cid: int, want_orientation: bool, shape):
+    """``to_face_ij_int`` wrapped back into arrays of the input shape."""
+    vals = to_face_ij_int(cid)
     if not want_orientation:
-        return arr(face), arr(i), arr(j)
-    lsb = cid & -cid  # lowest set bit (python ints: two's complement)
-    orientation = (
-        bits ^ SWAP_MASK if (lsb & 0x1111111111111110) else bits
-    )
-    return arr(face), arr(i), arr(j), arr(orientation)
+        vals = vals[:3]
+    return tuple(np.full(shape, v, dtype=np.int64) for v in vals)
 
 
 def to_face_ij(

@@ -139,7 +139,41 @@ def edge_chain_bound(verts: np.ndarray, closed: bool = True) -> LatLngRect:
     return rb.get_bound()
 
 
-class Loop(Region):
+class _EdgeRegion(Region):
+    """Cell pruning of a region bounded by edges (Loop, Polygon): a
+    cell whose rect bound no boundary edge's bound touches is uniformly
+    inside or outside, decided by its center."""
+
+    _OUT, _EDGE, _IN = 0, 1, 2
+    # (cell, state) of the last cell classified: the coverer asks
+    # may_intersect_cell and then contains_cell of the same cell
+    _last_cell = (None, _OUT)
+
+    def _cell_state(self, cell: Cell) -> int:
+        last, state = self._last_cell
+        if last is cell:
+            return state
+        cb = cell.get_rect_bound()
+        if not self.bound.intersects_rect(cb):
+            state = self._OUT
+        elif self._boundary_may_intersect(cb):
+            state = self._EDGE
+        elif self.contains_point(cell.center()):
+            state = self._IN
+        else:
+            state = self._OUT
+        self._last_cell = (cell, state)
+        return state
+
+    def may_intersect_cell(self, cell: Cell) -> bool:
+        return self._cell_state(cell) != self._OUT
+
+    def contains_cell(self, cell: Cell) -> bool:
+        # conservative: only claims cells no boundary edge may touch
+        return self._cell_state(cell) == self._IN
+
+
+class Loop(_EdgeRegion):
     """Closed CCW geodesic ring; interior = left of the edges."""
 
     def __init__(self, verts: np.ndarray):
@@ -245,25 +279,8 @@ class Loop(Region):
     def _boundary_may_intersect(self, cell_bound: LatLngRect) -> bool:
         return bool(self.edges_intersecting_rect(cell_bound).any())
 
-    def may_intersect_cell(self, cell: Cell) -> bool:
-        cb = cell.get_rect_bound()
-        if not self.bound.intersects_rect(cb):
-            return False
-        if self._boundary_may_intersect(cb):
-            return True
-        # no boundary in the cell: the cell is uniformly in or out
-        return self.contains_point(cell.center())
 
-    def contains_cell(self, cell: Cell) -> bool:
-        cb = cell.get_rect_bound()
-        if not self.bound.intersects_rect(cb):
-            return False
-        if self._boundary_may_intersect(cb):
-            return False  # conservative: only claim provable interiors
-        return self.contains_point(cell.center())
-
-
-class Polygon(Region):
+class Polygon(_EdgeRegion):
     """Multi-loop polygon with holes (S2Region/S2Polygon.cs semantics):
     a point is inside iff the total crossing parity against every
     ring's edges (XOR the combined origin_inside bit) is odd — the
@@ -318,22 +335,6 @@ class Polygon(Region):
             bool(lp.edges_intersecting_rect(cell_bound).any())
             for lp in self.loops
         )
-
-    def may_intersect_cell(self, cell: Cell) -> bool:
-        cb = cell.get_rect_bound()
-        if not self.bound.intersects_rect(cb):
-            return False
-        if self._boundary_may_intersect(cb):
-            return True
-        return self.contains_point(cell.center())
-
-    def contains_cell(self, cell: Cell) -> bool:
-        cb = cell.get_rect_bound()
-        if not self.bound.intersects_rect(cb):
-            return False
-        if self._boundary_may_intersect(cb):
-            return False
-        return self.contains_point(cell.center())
 
 
 # ---------------------------------------------------------------------

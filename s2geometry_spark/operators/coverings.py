@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame
 from ..kernels import cellid as CI
 from ..kernels import cellunion as CU
 from ..kernels.coverer import CovererOptions, RegionCoverer
-from ..kernels.geom import Region
+from ..kernels.geom import Cell, Region
 
 
 def build_covering_rows(
@@ -32,23 +32,21 @@ def build_covering_rows(
     cells that are entirely contained in the region (cheap PIP skip at
     refine time, mirroring MutableS2ShapeIndex contains_center).
     """
-    import numpy as np
-
     rc = RegionCoverer(options or CovererOptions())
-    rows = []
+    rows, cells = [], []
     for region_id, region in regions:
         cov = (
             rc.get_interior_covering(region) if interior else rc.get_covering(region)
         )
         for cid in cov:
-            lv = CU._level(cid)
-            from ..kernels.geom import Cell
-
             is_int = bool(region.contains_cell(Cell(cid)))
-            rows.append((region_id, CI.as_i64(np.array([cid], np.uint64))[0], lv, is_int))
-    return pd.DataFrame(
-        rows, columns=["region_id", "cov_cell", "level", "is_interior"]
-    ).astype({"cov_cell": "int64", "level": "int32", "is_interior": "bool"})
+            rows.append((region_id, CU._level(cid), is_int))
+            cells.append(cid)
+    pdf = pd.DataFrame(rows, columns=["region_id", "level", "is_interior"])
+    pdf.insert(1, "cov_cell", CI.as_i64(np.array(cells, np.uint64)))
+    return pdf.astype(
+        {"cov_cell": "int64", "level": "int32", "is_interior": "bool"}
+    )
 
 
 def covering_levels(pdf_or_df) -> list[int]:
@@ -100,22 +98,9 @@ def covering_kind_rows(key: int, rc, rc_canon, i64) -> list[tuple]:
     # (S2RegionCoverer.GetSimpleCovering) at one level finer than the
     # coarsest GetCovering cell — deterministic and bounded (~4x the
     # adaptive covering size)
-    from ..kernels import cellid as _CI
     from ..kernels.coverer import get_simple_covering
 
-    # cov holds UNSIGNED cell ids — use them directly: round-tripping
-    # through i64() would feed np.uint64 a negative Python int, which
-    # numpy >= 2.0 rejects with OverflowError (face >= 4 cells)
-    lvl = min(
-        30,
-        int(
-            min(
-                _CI.level(np.array([c], dtype=np.uint64))[0]
-                for c in cov
-            )
-        )
-        + 1,
-    )
+    lvl = min(30, min(CU._level(c) for c in cov) + 1)
     rows.extend(
         (key, "simple", i, i64(c))
         for i, c in enumerate(

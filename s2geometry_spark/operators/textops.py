@@ -303,7 +303,10 @@ def _minhash_sig_agg(docs: DataFrame) -> DataFrame:
     one row per INPUT ROW, this groupBy one row per doc_id — on a
     corpus violating uniqueness the agg would blend two texts'
     shingles into a signature of neither, so the contract is unique
-    ids, not dedup-on-the-fly."""
+    ids, not dedup-on-the-fly.  The same groupBy enforces it: it also
+    counts each doc_id's input rows (every row has exactly one
+    position 1) and fails the query with ``raise_error`` naming a
+    duplicated doc_id — no extra Spark job."""
     k = SHINGLE_K
     pos = docs.where(F.col("text").isNotNull()).select(
         "doc_id",
@@ -317,9 +320,11 @@ def _minhash_sig_agg(docs: DataFrame) -> DataFrame:
     )
     words = pos.select(
         "doc_id",
+        (F.col("__mh_i") == 1).alias("__mh_first"),
         F.md5(F.expr(f"substring(text, __mh_i, {k})")).alias("__mh_h"),
     ).select(
         "doc_id",
+        "__mh_first",
         F.conv(F.substring("__mh_h", 1, 8), 16, 10)
         .cast("long")
         .alias("w1"),
@@ -328,14 +333,24 @@ def _minhash_sig_agg(docs: DataFrame) -> DataFrame:
         .alias("w2"),
     )
     p = F.lit(MINHASH_P)
-    return words.groupBy("doc_id").agg(
+    sigs = words.groupBy("doc_id").agg(
+        F.count(F.when(F.col("__mh_first"), 1)).alias("__mh_rows"),
         *[
             F.min(F.pmod(F.col("w1") + F.col("w2") * F.lit(i), p)).alias(
                 f"h{i}"
             )
             for i in range(MINHASH_N)
-        ]
+        ],
     )
+    unique = F.when(
+        F.col("__mh_rows") > 1,
+        F.raise_error(F.concat(
+            F.lit("minhash signature: duplicated doc_id "),
+            F.col("doc_id").cast("string"),
+            F.lit(" (doc_id must be unique)"),
+        )),
+    ).otherwise(F.lit(True))
+    return sigs.where(unique).drop("__mh_rows")
 
 
 def minhash_signature(docs: DataFrame) -> DataFrame:
