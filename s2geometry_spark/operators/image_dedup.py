@@ -83,6 +83,44 @@ def first_band_filter(
     )
 
 
+def hamming_matches(
+    left: DataFrame,
+    right: DataFrame,
+    a: str,
+    b: str,
+    distinct: Column,
+    max_hamming: int,
+    n_bands: int = DEFAULT_N_BANDS,
+) -> DataFrame:
+    """(a, b, hamming) for the band_rows frames ``left`` (ids ``a``)
+    and ``right`` (ids ``b``), both banded with ``n_bands``: the
+    (band, val) equi-join, the caller's ``distinct`` id condition, the
+    first-agreeing-band filter and the exact popcount refine."""
+    # a loud error, not an assert: python -O would strip an assert and
+    # silently lose recall for pairs disagreeing on every band
+    if max_hamming >= n_bands:
+        raise ValueError(
+            f"pigeonhole recall needs max_hamming < n_bands "
+            f"({max_hamming} >= {n_bands}): raise n_bands or lower "
+            f"max_hamming"
+        )
+    ham = F.bit_count(
+        F.col(f"{a}_hash").bitwiseXOR(F.col(f"{b}_hash"))
+    ).cast("int")
+    return (
+        left.join(right, ["band", "val"])
+        .where(distinct)
+        .where(
+            F.col("band")
+            == first_band_filter(
+                F.col(f"{a}_hash"), F.col(f"{b}_hash"), n_bands
+            )
+        )
+        .select(a, b, ham.alias("hamming"))
+        .where(F.col("hamming") <= max_hamming)
+    )
+
+
 def phash_near_dup(
     hashes: DataFrame,
     max_hamming: int = 3,
@@ -92,32 +130,12 @@ def phash_near_dup(
 ) -> DataFrame:
     """hashes(id, phash) -> (a_id, b_id, hamming) for all pairs with
     Hamming(phash_a, phash_b) <= max_hamming (a_id < b_id)."""
-    # a loud error, not an assert: python -O would strip an assert and
-    # silently lose recall for pairs disagreeing on every band (the
-    # streaming twin guards the same precondition the same way)
-    if max_hamming >= n_bands:
-        raise ValueError(
-            f"pigeonhole recall needs max_hamming < n_bands "
-            f"({max_hamming} >= {n_bands}): raise n_bands or lower "
-            f"max_hamming"
-        )
-    left = band_rows(hashes, id_col, "a_id", hash_col, n_bands)
-    right = band_rows(hashes, id_col, "b_id", hash_col, n_bands)
-    cand = (
-        left.join(right, ["band", "val"])
-        .where(F.col("a_id") < F.col("b_id"))
-        .where(
-            F.col("band")
-            == first_band_filter(
-                F.col("a_id_hash"), F.col("b_id_hash"), n_bands
-            )
-        )
-    )
-    ham = F.bit_count(
-        F.col("a_id_hash").bitwiseXOR(F.col("b_id_hash"))
-    ).cast("int")
-    return (
-        cand.withColumn("hamming", ham)
-        .where(F.col("hamming") <= max_hamming)
-        .select("a_id", "b_id", "hamming")
+    return hamming_matches(
+        band_rows(hashes, id_col, "a_id", hash_col, n_bands),
+        band_rows(hashes, id_col, "b_id", hash_col, n_bands),
+        "a_id",
+        "b_id",
+        F.col("a_id") < F.col("b_id"),
+        max_hamming,
+        n_bands,
     )

@@ -1,17 +1,17 @@
 """Embedding similarity search over the `embeddings` table
 (vec_id, embedding float[64], label).
 
-Two paths (SURVEY-mandated ANN component of the training-data suite):
-- ``cosine_topk``   — exact brute-force top-k (the correctness
-  baseline; O(n^2) cross join, fine for dim tables / oracle scale).
-- ``ann_lsh_topk``  — random-hyperplane LSH buckets (sign-bit
-  signature over P fixed literal planes) + top-k within bucket: the
-  100-TB path (bucket equi-join replaces the n^2 cross join).
-
-Both are pure JVM column arithmetic: the 64-term dot product is
-generated as an explicit left-associative expression, identical
-(term-for-term, cast-for-cast) to the DuckDB SQL the oracle runs, so
-cosine scores and orderings are bit-identical.
+Four operators: exact ``cosine_topk`` (an n^2 cross join, the
+correctness baseline), and the scale paths ``ann_lsh_topk`` and
+``embed_near_dup`` (banded sign-LSH candidates over fixed literal
+planes) and ``ann_ivf_topk`` (probed coarse-quantizer lists).  All
+score pairs with one cosine (``_cosine``, oracle ``_COS_DUCK``) and
+the top-k ones rank with one window (``_top_k``, ``_top_k_sql``).  The
+64-term dot product is one chunked left-associative sum per engine,
+``_scalar_dot`` (Spark), ``_dot_duck`` (DuckDB) and ``_chunked_dots``
+(numpy), adding the same terms in the same order, so scores, LSH sign
+bits and IVF probe ranks are bit-identical to the oracle.  Spark and
+oracle helpers stay apart so one bug cannot match itself.
 """
 
 from __future__ import annotations
@@ -20,7 +20,7 @@ import math
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -34,42 +34,60 @@ _PLANE_SEED = 20260816
 CHUNK = 16  # partial-sum width: keeps each codegen'd expression small
 
 
-def _dot_terms_duck(a: str, b: str) -> str:
-    """Chunked dot product in DuckDB SQL: 4 partial sums of 16 terms,
-    combined left-assoc — the SAME association tree as _scalar_dot, so
-    both engines produce bit-identical doubles."""
+def _dot_duck(a: str, b) -> str:
+    """DuckDB dot product of array column ``a`` with ``b``, an array
+    column or a literal DIM-vector: CHUNK-term partial sums, each and
+    then all added left-assoc (the association tree of every engine)."""
+    if isinstance(b, str):
+        rhs = [f"CAST({b}[{i + 1}] AS DOUBLE)" for i in range(DIM)]
+    else:
+        rhs = [f"CAST('{float(v)!r}' AS DOUBLE)" for v in b]
     partials = []
     for lo in range(0, DIM, CHUNK):
         terms = " + ".join(
-            f"CAST({a}[{i + 1}] AS DOUBLE) * CAST({b}[{i + 1}] AS DOUBLE)"
+            f"CAST({a}[{i + 1}] AS DOUBLE) * {rhs[i]}"
             for i in range(lo, lo + CHUNK)
         )
         partials.append(f"({terms})")
     return " + ".join(partials)
 
 
-def _components(df: DataFrame, id_alias: str, prefix: str) -> DataFrame:
-    """Pre-project the vector into 64 scalar DOUBLE columns + the norm:
-    per-pair dot products then touch only scalar columns (whole-stage
-    codegen; array element access per joined row is ~20x slower)."""
-    cols = [F.col("vec_id").alias(id_alias)] + [
-        F.expr(f"CAST(embedding[{i}] AS DOUBLE)").alias(f"{prefix}{i}")
-        for i in range(DIM)
-    ]
-    norm_terms = " + ".join(
-        "("
-        + " + ".join(
-            f"{prefix}{i} * {prefix}{i}" for i in range(lo, lo + CHUNK)
-        )
-        + ")"
-        for lo in range(0, DIM, CHUNK)
-    )
-    return df.select(*cols).withColumn(
-        f"{prefix}n", F.expr(f"sqrt({norm_terms})")
-    )
+def _nrm_cte(table: str) -> str:
+    norm = f"sqrt({_dot_duck('embedding', 'embedding')})"
+    return f"nrm AS (SELECT vec_id, embedding, {norm} AS nrm FROM {table})"
+
+
+# oracle cosine of the pair (a, b) joined from the ``nrm`` CTE
+_COS_DUCK = f"({_dot_duck('a.embedding', 'b.embedding')}) / (a.nrm * b.nrm)"
+# the candidate-pair form of the oracle's scoring join
+_CAND_NRM = """FROM cand JOIN nrm a ON a.vec_id = cand.qid
+            JOIN nrm b ON b.vec_id = cand.nid"""
+
+
+def _top_k_sql(
+    ctes: str, table: str, k: int,
+    q: str = "cand.qid", n: str = "cand.nid", pairs_from: str = _CAND_NRM,
+) -> str:
+    """Oracle tail of every top-k operator: score the (q, n) pairs of
+    ``pairs_from`` and keep each vec_id's k best by
+    (cosine DESC, neighbor_id).  ``ctes`` are the CTEs before ``nrm``."""
+    return f"""
+WITH {ctes}{_nrm_cte(table)},
+pairs AS (
+  SELECT {q} AS vec_id, {n} AS neighbor_id,
+         {_COS_DUCK} AS cosine
+  {pairs_from}
+)
+SELECT vec_id, neighbor_id, cosine, rn FROM (
+  SELECT vec_id, neighbor_id, cosine,
+         row_number() OVER (PARTITION BY vec_id
+                            ORDER BY cosine DESC, neighbor_id) AS rn
+  FROM pairs
+) WHERE rn <= {k}"""
 
 
 def _scalar_dot(a_prefix: str, b_prefix: str) -> str:
+    """Chunked dot product over the scalar columns of _components."""
     return " + ".join(
         "("
         + " + ".join(
@@ -80,17 +98,37 @@ def _scalar_dot(a_prefix: str, b_prefix: str) -> str:
     )
 
 
-def cosine_topk(emb: DataFrame, k: int) -> DataFrame:
-    """Exact top-k cosine neighbors per vector (self excluded).
-    Output (vec_id, neighbor_id, cosine, rn) ordered by
-    (cosine desc, neighbor_id)."""
-    a = _components(emb, "qid", "q")
-    b = _components(emb, "nid", "e")
-    pairs = a.crossJoin(b).where(F.col("qid") != F.col("nid"))
-    cos = F.expr(f"({_scalar_dot('q', 'e')})") / (F.col("qn") * F.col("en"))
+def _components(df: DataFrame, id_alias: str, prefix: str) -> DataFrame:
+    """Pre-project the vector into 64 scalar DOUBLE columns + the norm:
+    per-pair dot products then touch only scalar columns (whole-stage
+    codegen; array element access per joined row is ~20x slower)."""
+    cols = [F.col("vec_id").alias(id_alias)] + [
+        F.expr(f"CAST(embedding[{i}] AS DOUBLE)").alias(f"{prefix}{i}")
+        for i in range(DIM)
+    ]
+    return df.select(*cols).withColumn(
+        f"{prefix}n", F.expr(f"sqrt({_scalar_dot(prefix, prefix)})")
+    )
+
+
+def _with_components(cand: DataFrame, emb: DataFrame) -> DataFrame:
+    """Attach both sides' components to (qid, nid) candidate pairs."""
+    qc = _components(emb, "qid", "q")
+    ec = _components(emb, "nid", "e")
+    return cand.join(qc, on="qid").join(ec, on="nid")
+
+
+def _cosine() -> Column:
+    """Cosine of a pair carrying both sides' components (q*, e*)."""
+    return F.expr(f"({_scalar_dot('q', 'e')})") / (F.col("qn") * F.col("en"))
+
+
+def _top_k(pairs: DataFrame, k: int) -> DataFrame:
+    """Each qid's k best pairs by (cosine desc, nid), renamed to
+    (vec_id, neighbor_id, cosine, rn)."""
     w = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.col("nid"))
     return (
-        pairs.withColumn("cosine", cos)
+        pairs.withColumn("cosine", _cosine())
         .select("qid", "nid", "cosine")
         .withColumn("rn", F.row_number().over(w).cast("long"))
         .where(F.col("rn") <= k)
@@ -103,22 +141,20 @@ def cosine_topk(emb: DataFrame, k: int) -> DataFrame:
     )
 
 
+def cosine_topk(emb: DataFrame, k: int) -> DataFrame:
+    """Exact top-k cosine neighbors per vector (self excluded).
+    Output (vec_id, neighbor_id, cosine, rn) ordered by
+    (cosine desc, neighbor_id)."""
+    a = _components(emb, "qid", "q")
+    b = _components(emb, "nid", "e")
+    return _top_k(a.crossJoin(b).where(F.col("qid") != F.col("nid")), k)
+
+
 def cosine_topk_sql(k: int, table: str = "embeddings") -> str:
-    dot = _dot_terms_duck("a.embedding", "b.embedding")
-    norm = _dot_terms_duck("embedding", "embedding")
-    return f"""
-WITH nrm AS (SELECT vec_id, embedding, sqrt({norm}) AS nrm FROM {table}),
-pairs AS (
-  SELECT a.vec_id AS vec_id, b.vec_id AS neighbor_id,
-         ({dot}) / (a.nrm * b.nrm) AS cosine
-  FROM nrm a CROSS JOIN nrm b WHERE a.vec_id != b.vec_id
-)
-SELECT vec_id, neighbor_id, cosine, rn FROM (
-  SELECT vec_id, neighbor_id, cosine,
-         row_number() OVER (PARTITION BY vec_id
-                            ORDER BY cosine DESC, neighbor_id) AS rn
-  FROM pairs
-) WHERE rn <= {k}"""
+    return _top_k_sql(
+        "", table, k, "a.vec_id", "b.vec_id",
+        "FROM nrm a CROSS JOIN nrm b WHERE a.vec_id != b.vec_id",
+    )
 
 
 N_BANDS = 4
@@ -132,24 +168,34 @@ def lsh_planes(n_planes: int = N_PLANES) -> np.ndarray:
     return rng.standard_normal((n_planes, DIM))
 
 
-def _plane_dot(col: str, p: np.ndarray, one_based: bool) -> str:
-    off = 1 if one_based else 0
-    partials = []
-    for lo in range(0, DIM, CHUNK):
-        terms = " + ".join(
-            f"CAST({col}[{i + off}] AS DOUBLE) * CAST('{float(p[i])!r}' AS DOUBLE)"
-            for i in range(lo, lo + CHUNK)
-        )
-        partials.append(f"({terms})")
-    return " + ".join(partials)
-
-
 def _bucket_expr_duck(col: str, planes: np.ndarray) -> str:
     bits = [
-        f"(CASE WHEN ({_plane_dot(col, p, True)}) >= 0 THEN '1' ELSE '0' END)"
+        f"(CASE WHEN ({_dot_duck(col, p)}) >= 0 THEN '1' ELSE '0' END)"
         for p in planes
     ]
     return " || ".join(bits)
+
+
+def _lsh_cand_ctes(table: str, n_bands: int, band_bits: int) -> str:
+    """Oracle sig/slim/cand CTEs (each vector's band keys, one row per
+    band, the distinct directed pairs sharing a band key) and a comma."""
+    bands = _band_planes(n_bands, band_bits)
+    band_exprs = ", ".join(
+        _bucket_expr_duck("embedding", bp) + f" AS band{b}"
+        for b, bp in enumerate(bands)
+    )
+    band_union = "\nUNION ALL\n".join(
+        f"SELECT vec_id, {b} AS b, band{b} AS bk FROM sig"
+        for b in range(n_bands)
+    )
+    return f"""sig AS (SELECT vec_id, {band_exprs} FROM {table}),
+slim AS ({band_union}),
+cand AS (
+  SELECT DISTINCT a.vec_id AS qid, c.vec_id AS nid
+  FROM slim a JOIN slim c
+    ON a.b = c.b AND a.bk = c.bk AND a.vec_id != c.vec_id
+),
+"""
 
 
 def _band_planes(n_bands: int, band_bits: int) -> list[np.ndarray]:
@@ -159,46 +205,40 @@ def _band_planes(n_bands: int, band_bits: int) -> list[np.ndarray]:
     ]
 
 
+def _chunked_dots(E: np.ndarray, W: np.ndarray) -> np.ndarray:
+    """(N, DIM) vectors x (P, DIM) planes -> (N, P) dots, each element
+    summed in _dot_duck's order: left-assoc partials of CHUNK terms,
+    then the partials left-assoc — so sign bits and rank ties match
+    the oracle's SQL expression tree bit for bit."""
+    tot = None
+    for lo in range(0, DIM, CHUNK):
+        acc = E[:, lo, None] * W[:, lo]
+        for i in range(lo + 1, lo + CHUNK):
+            acc = acc + E[:, i, None] * W[:, i]
+        tot = acc if tot is None else tot + acc
+    return tot
+
+
 def _band_rows(emb: DataFrame, bands: list[np.ndarray]) -> DataFrame:
-    """(vec_id, b, bk) band-signature rows via one Arrow pass.
+    """(vec_id, allb, b, bk) band-signature rows via one Arrow pass.
 
     The generated-SQL form of 32 plane dots is a ~2000-term projection
     whose Janino compile time dwarfs the data at dim-table scale, so
-    the dots run in numpy instead — with the sums accumulated in the
-    exact chunked left-associative order of _plane_dot, keeping the
-    sign bits (and hence bucket keys) bit-identical to the DuckDB
-    oracle's expression tree."""
+    the dots run in numpy instead (_chunked_dots), keeping the sign
+    bits (and hence bucket keys) bit-identical to the DuckDB oracle's
+    expression tree."""
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import ArrayType, StringType
 
-    planes = [p.copy() for p in bands]
+    W = np.concatenate(bands)
+    band_bits = len(bands[0])
 
     @pandas_udf(ArrayType(StringType()))
     def _keys(embedding: pd.Series) -> pd.Series:
-        E = np.stack(
-            [np.asarray(v, dtype=np.float64) for v in embedding]
-        )
-        out_bits = []
-        for bp in planes:
-            band_strs = None
-            for p in bp:
-                # chunked left-assoc: partials of CHUNK terms, then
-                # left-assoc partial sum — mirrors _plane_dot exactly
-                partials = []
-                for lo in range(0, DIM, CHUNK):
-                    acc = E[:, lo] * p[lo]
-                    for i in range(lo + 1, lo + CHUNK):
-                        acc = acc + E[:, i] * p[i]
-                    partials.append(acc)
-                tot = partials[0]
-                for q in partials[1:]:
-                    tot = tot + q
-                bit = np.where(tot >= 0, "1", "0")
-                band_strs = bit if band_strs is None else np.char.add(band_strs, bit)
-            out_bits.append(band_strs)
-        return pd.Series(
-            [[out_bits[b][r] for b in range(len(planes))] for r in range(len(E))]
-        )
+        E = np.stack([np.asarray(v, dtype=np.float64) for v in embedding])
+        bits = np.where(_chunked_dots(E, W) >= 0, "1", "0")
+        # each row's band_bits one-char bits read as one string per band
+        return pd.Series(bits.view(f"<U{band_bits}").tolist())
 
     sigs = emb.select(F.col("vec_id"), _keys(F.col("embedding")).alias("bks"))
     # materialize once: both sides of the candidate self-join read it.
@@ -211,6 +251,17 @@ def _band_rows(emb: DataFrame, bands: list[np.ndarray]) -> DataFrame:
         F.array_join(F.col("bks"), "").alias("allb"),
         F.posexplode(F.col("bks")).alias("b", "bk"),
     ).localCheckpoint()
+
+
+def _lsh_pairs(
+    emb: DataFrame, n_bands: int, band_bits: int, hot_bucket_threshold: int,
+    salt_g: int,
+) -> DataFrame:
+    """(qid, nid): every directed pair sharing a band key, once."""
+    slim = _band_rows(emb, _band_planes(n_bands, band_bits))
+    return banded_self_join(
+        slim, "vec_id", True, band_bits, n_bands, hot_bucket_threshold, salt_g
+    ).toDF("qid", "nid")
 
 
 def ann_lsh_topk(
@@ -230,34 +281,15 @@ def ann_lsh_topk(
     Scale shape mirrors the near-dup LSH join: candidate generation
     shuffles only (vec_id, band, bucket) rows through the skew-aware
     salted self-join (hot buckets spread over ``salt_g`` reducers, see
-    ``banded_join.banded_self_join``); pairs dedup before the 64-dim scoring
-    components re-attach once.  Recall floors are
-    measured in tests/test_similarity_recall.py (>=0.9 on clustered
-    corpora; the uniform-random table's analytic limit is documented
-    there — no hash family beats brute force on data with no structure).
+    ``banded_join.banded_self_join``, which emits each pair once); the
+    64-dim scoring components attach once per candidate pair.  Recall
+    floors are measured in tests/test_similarity_recall.py (>=0.9 on
+    clustered corpora; the uniform-random table's analytic limit is
+    documented there — no hash family beats brute force on data with
+    no structure).
     """
-    bands = _band_planes(n_bands, band_bits)
-    slim = _band_rows(emb, bands)
-    cand = banded_self_join(
-        slim, "vec_id", True, band_bits, n_bands, hot_bucket_threshold, salt_g
-    ).toDF("qid", "nid")
-    qc = _components(emb, "qid", "q")
-    ec = _components(emb, "nid", "e")
-    pairs = cand.join(qc, on="qid").join(ec, on="nid")
-    cos = F.expr(f"({_scalar_dot('q', 'e')})") / (F.col("qn") * F.col("en"))
-    w = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.col("nid"))
-    return (
-        pairs.withColumn("cosine", cos)
-        .select("qid", "nid", "cosine")
-        .withColumn("rn", F.row_number().over(w).cast("long"))
-        .where(F.col("rn") <= k)
-        .select(
-            F.col("qid").alias("vec_id"),
-            F.col("nid").alias("neighbor_id"),
-            "cosine",
-            "rn",
-        )
-    )
+    cand = _lsh_pairs(emb, n_bands, band_bits, hot_bucket_threshold, salt_g)
+    return _top_k(_with_components(cand, emb), k)
 
 
 def ann_lsh_topk_sql(
@@ -266,38 +298,7 @@ def ann_lsh_topk_sql(
     n_bands: int = N_BANDS,
     band_bits: int = BAND_BITS,
 ) -> str:
-    bands = _band_planes(n_bands, band_bits)
-    dot = _dot_terms_duck("a.embedding", "b.embedding")
-    norm = _dot_terms_duck("embedding", "embedding")
-    band_exprs = ", ".join(
-        _bucket_expr_duck("embedding", bp) + f" AS band{b}"
-        for b, bp in enumerate(bands)
-    )
-    band_union = "\nUNION ALL\n".join(
-        f"SELECT vec_id, {b} AS b, band{b} AS bk FROM sig"
-        for b in range(n_bands)
-    )
-    return f"""
-WITH sig AS (SELECT vec_id, {band_exprs} FROM {table}),
-slim AS ({band_union}),
-cand AS (
-  SELECT DISTINCT a.vec_id AS qid, c.vec_id AS nid
-  FROM slim a JOIN slim c
-    ON a.b = c.b AND a.bk = c.bk AND a.vec_id != c.vec_id
-),
-nrm AS (SELECT vec_id, embedding, sqrt({norm}) AS nrm FROM {table}),
-pairs AS (
-  SELECT cand.qid AS vec_id, cand.nid AS neighbor_id,
-         ({dot}) / (a.nrm * b.nrm) AS cosine
-  FROM cand JOIN nrm a ON a.vec_id = cand.qid
-            JOIN nrm b ON b.vec_id = cand.nid
-)
-SELECT vec_id, neighbor_id, cosine, rn FROM (
-  SELECT vec_id, neighbor_id, cosine,
-         row_number() OVER (PARTITION BY vec_id
-                            ORDER BY cosine DESC, neighbor_id) AS rn
-  FROM pairs
-) WHERE rn <= {k}"""
+    return _top_k_sql(_lsh_cand_ctes(table, n_bands, band_bits), table, k)
 
 
 def embed_near_dup(
@@ -318,27 +319,16 @@ def embed_near_dup(
     Output (vec_id, dup_root, n_nbrs, is_dup): ``is_dup`` rows are the
     ones a dedup pass would drop (root survives).
 
-    Scale shape: identical to ``ann_lsh_topk`` — the self-join touches
-    only slim (vec_id, band, bucket) rows through the skew-aware salted
-    form (``banded_join.banded_self_join``; hot buckets of boilerplate
-    embeddings spread over ``salt_g`` reducers instead of one), pairs
-    dedup before the 64-float components attach, and the final fold is
-    a single map-side-combinable min/count agg on vec_id.  No cross
+    Scale shape: the candidates and scoring of ``ann_lsh_topk`` (hot
+    buckets of boilerplate embeddings spread over ``salt_g`` reducers),
+    then one map-side-combinable min/count agg on vec_id.  No cross
     join at any width; candidate volume is governed by the LSH family,
     not n^2.
     """
-    bands = _band_planes(n_bands, band_bits)
-    slim = _band_rows(emb, bands)
-    cand = banded_self_join(
-        slim, "vec_id", True, band_bits, n_bands, hot_bucket_threshold, salt_g
-    ).toDF("qid", "nid")
-    qc = _components(emb, "qid", "q")
-    ec = _components(emb, "nid", "e")
-    cos = F.expr(f"({_scalar_dot('q', 'e')})") / (F.col("qn") * F.col("en"))
+    cand = _lsh_pairs(emb, n_bands, band_bits, hot_bucket_threshold, salt_g)
     nbrs = (
-        cand.join(qc, on="qid")
-        .join(ec, on="nid")
-        .withColumn("cosine", cos)
+        _with_components(cand, emb)
+        .withColumn("cosine", _cosine())
         .where(F.col("cosine") >= F.lit(float(threshold)))
         .select("qid", "nid")
     )
@@ -370,31 +360,12 @@ def embed_near_dup_sql(
     """DuckDB oracle mirroring embed_near_dup: the identical literal
     plane family, band bucketing, shared-association dot product, and
     min-root fold."""
-    bands = _band_planes(n_bands, band_bits)
-    dot = _dot_terms_duck("a.embedding", "b.embedding")
-    norm = _dot_terms_duck("embedding", "embedding")
-    band_exprs = ", ".join(
-        _bucket_expr_duck("embedding", bp) + f" AS band{b}"
-        for b, bp in enumerate(bands)
-    )
-    band_union = "\nUNION ALL\n".join(
-        f"SELECT vec_id, {b} AS b, band{b} AS bk FROM sig"
-        for b in range(n_bands)
-    )
     return f"""
-WITH sig AS (SELECT vec_id, {band_exprs} FROM {table}),
-slim AS ({band_union}),
-cand AS (
-  SELECT DISTINCT a.vec_id AS qid, c.vec_id AS nid
-  FROM slim a JOIN slim c
-    ON a.b = c.b AND a.bk = c.bk AND a.vec_id != c.vec_id
-),
-nrm AS (SELECT vec_id, embedding, sqrt({norm}) AS nrm FROM {table}),
+WITH {_lsh_cand_ctes(table, n_bands, band_bits)}{_nrm_cte(table)},
 nbrs AS (
   SELECT cand.qid, cand.nid
-  FROM cand JOIN nrm a ON a.vec_id = cand.qid
-            JOIN nrm b ON b.vec_id = cand.nid
-  WHERE ({dot}) / (a.nrm * b.nrm) >= {float(threshold)!r}
+  {_CAND_NRM}
+  WHERE {_COS_DUCK} >= {float(threshold)!r}
 ),
 folded AS (
   SELECT t.vec_id AS qid,
@@ -478,36 +449,22 @@ def _ivf_probe_rows(
     emb: DataFrame, cents: np.ndarray, n_probe: int
 ) -> DataFrame:
     """(vec_id, rk, c): each vector's centroids ranked 1..n_probe by
-    (dot DESC, index ASC).  The dots use the chunked left-associative
-    accumulation of _plane_dot so they match the oracle's SQL
-    expression tree bit for bit — which makes the numpy argsort emit
-    the exact ranks the oracle's row_number() window computes, without
-    a Spark window exchange."""
+    (dot DESC, index ASC).  The dots are _chunked_dots, bit-equal to
+    the oracle's SQL expression tree — which makes the numpy argsort
+    emit the exact ranks the oracle's row_number() window computes,
+    without a Spark window exchange."""
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import ArrayType, IntegerType
 
-    C = [c.copy() for c in cents]
+    C = np.array(cents, dtype=np.float64)
 
     @pandas_udf(ArrayType(IntegerType()))
     def _probes(embedding: pd.Series) -> pd.Series:
         E = np.stack([np.asarray(v, dtype=np.float64) for v in embedding])
-        outs = []
-        for cv in C:
-            partials = []
-            for lo in range(0, DIM, CHUNK):
-                acc = E[:, lo] * cv[lo]
-                for i in range(lo + 1, lo + CHUNK):
-                    acc = acc + E[:, i] * cv[i]
-                partials.append(acc)
-            tot = partials[0]
-            for q in partials[1:]:
-                tot = tot + q
-            outs.append(tot)
-        M = np.stack(outs, axis=1)  # (N, C)
         # stable argsort on -dot: ties resolve to the lower index,
         # identical to ORDER BY cdot DESC, c
-        order = np.argsort(-M, axis=1, kind="stable")[:, :n_probe]
-        return pd.Series([row.tolist() for row in order])
+        order = np.argsort(-_chunked_dots(E, C), axis=1, kind="stable")
+        return pd.Series(order[:, :n_probe].tolist())
 
     return emb.select(
         "vec_id", F.posexplode(_probes(F.col("embedding"))).alias("rk0", "c")
@@ -552,35 +509,7 @@ def ann_ivf_topk(
     cand = probes.join(assign, on="list_id").where(
         F.col("qid") != F.col("nid")
     ).select("qid", "nid")
-    qc = _components(emb, "qid", "q")
-    ec = _components(emb, "nid", "e")
-    cos = F.expr(f"({_scalar_dot('q', 'e')})") / (F.col("qn") * F.col("en"))
-    wk = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.col("nid"))
-    return (
-        cand.join(qc, on="qid")
-        .join(ec, on="nid")
-        .withColumn("cosine", cos)
-        .select("qid", "nid", "cosine")
-        .withColumn("rn", F.row_number().over(wk).cast("long"))
-        .where(F.col("rn") <= k)
-        .select(
-            F.col("qid").alias("vec_id"),
-            F.col("nid").alias("neighbor_id"),
-            "cosine",
-            "rn",
-        )
-    )
-
-
-def _centroid_dot_duck(col: str, cv: np.ndarray) -> str:
-    partials = []
-    for lo in range(0, DIM, CHUNK):
-        terms = " + ".join(
-            f"CAST({col}[{i + 1}] AS DOUBLE) * CAST('{float(cv[i])!r}' AS DOUBLE)"
-            for i in range(lo, lo + CHUNK)
-        )
-        partials.append(f"({terms})")
-    return " + ".join(partials)
+    return _top_k(_with_components(cand, emb), k)
 
 
 def ann_ivf_topk_sql(
@@ -595,15 +524,13 @@ def ann_ivf_topk_sql(
     if n_centroids is None:
         n_centroids = ivf_num_centroids(sf_dir)
     cents = ivf_centroids(sf_dir, n_centroids)
-    dot = _dot_terms_duck("a.embedding", "b.embedding")
-    norm = _dot_terms_duck("embedding", "embedding")
     cdot_union = "\nUNION ALL\n".join(
         f"SELECT vec_id, {c} AS c, "
-        f"({_centroid_dot_duck('embedding', cents[c])}) AS cdot FROM {table}"
+        f"({_dot_duck('embedding', cents[c])}) AS cdot FROM {table}"
         for c in range(n_centroids)
     )
-    return f"""
-WITH dots AS ({cdot_union}),
+    return _top_k_sql(
+        f"""dots AS ({cdot_union}),
 ranked AS (
   SELECT vec_id, c,
          row_number() OVER (PARTITION BY vec_id
@@ -617,16 +544,7 @@ cand AS (
   SELECT p.qid, a.nid FROM probes p JOIN assign a USING (list_id)
   WHERE p.qid != a.nid
 ),
-nrm AS (SELECT vec_id, embedding, sqrt({norm}) AS nrm FROM {table}),
-pairs AS (
-  SELECT cand.qid AS vec_id, cand.nid AS neighbor_id,
-         ({dot}) / (a.nrm * b.nrm) AS cosine
-  FROM cand JOIN nrm a ON a.vec_id = cand.qid
-            JOIN nrm b ON b.vec_id = cand.nid
-)
-SELECT vec_id, neighbor_id, cosine, rn FROM (
-  SELECT vec_id, neighbor_id, cosine,
-         row_number() OVER (PARTITION BY vec_id
-                            ORDER BY cosine DESC, neighbor_id) AS rn
-  FROM pairs
-) WHERE rn <= {k}"""
+""",
+        table,
+        k,
+    )

@@ -30,7 +30,7 @@ from pyspark.sql.types import LongType, StringType, StructField, StructType
 from ..operators.image_dedup import (
     DEFAULT_N_BANDS,
     band_rows,
-    first_band_filter,
+    hamming_matches,
 )
 
 MAX_HAMMING = 3
@@ -60,34 +60,16 @@ def _matches(
     # the index MUST be banded with the same n_bands: the query side is
     # re-banded here with ``n_bands``, and a mismatched slicing would
     # silently lose matches (different (band, val) keys), defeating the
-    # pigeonhole guarantee below — callers thread ONE n_bands through
+    # pigeonhole guarantee — callers thread ONE n_bands through
     # static_phash_index and this function
-    # same pigeonhole precondition phash_near_dup enforces: banding is
-    # lossless only when max_hamming < n_bands (a pair differing in
-    # n_bands+ bits may disagree on every band and lose recall) — a
-    # loud error, not an assert, so python -O cannot strip the recall
-    # guarantee
-    if max_hamming >= n_bands:
-        raise ValueError(
-            f"pigeonhole recall needs max_hamming < n_bands "
-            f"({max_hamming} >= {n_bands}): raise n_bands or lower "
-            "the Hamming threshold"
-        )
-    bands = band_rows(imgs, "image_id", "image_id", n_bands=n_bands)
-    ham = F.bit_count(
-        F.col("image_id_hash").bitwiseXOR(F.col("sid_hash"))
-    ).cast("int")
-    return (
-        bands.join(F.broadcast(band_index), ["band", "val"])
-        .where(F.col("image_id") != F.col("sid"))
-        .where(
-            F.col("band")
-            == first_band_filter(
-                F.col("image_id_hash"), F.col("sid_hash"), n_bands
-            )
-        )
-        .select("image_id", "sid", ham.alias("hamming"))
-        .where(F.col("hamming") <= max_hamming)
+    return hamming_matches(
+        band_rows(imgs, "image_id", "image_id", n_bands=n_bands),
+        F.broadcast(band_index),
+        "image_id",
+        "sid",
+        F.col("image_id") != F.col("sid"),
+        max_hamming,
+        n_bands,
     )
 
 

@@ -19,8 +19,11 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from .tile_stream import EVENT_SCHEMA, event_tiles
 
 HLL_P = 8  # 2^8 registers; relative error ~= 1.04/sqrt(256) = 6.5%
 HLL_M = 1 << HLL_P
@@ -112,14 +115,10 @@ def streaming_tile_uniques(
 ) -> DataFrame:
     """readStream -> per-tile running approximate unique users via HLL
     group state."""
-    from .tile_stream import event_tiles
-
-    from .tile_stream import EVENT_SCHEMA
-
     stream = spark.readStream.schema(EVENT_SCHEMA).parquet(events_path)
     tiled = event_tiles(stream, tile_level)
     return (
-        tiled.select("tile_id", F_user("key"))
+        tiled.select("tile_id", F.col("key").alias("user_id"))
         .groupBy("tile_id")
         .applyInPandasWithState(
             _update,
@@ -131,18 +130,8 @@ def streaming_tile_uniques(
     )
 
 
-def F_user(col: str):
-    from pyspark.sql import functions as F
-
-    return F.col(col).alias("user_id")
-
-
 def batch_tile_uniques(spark, events_path: str, tile_level: int = 4):
     """Batch twin: exact distinct + the same HLL fold for comparison."""
-    from pyspark.sql import functions as F
-
-    from .tile_stream import event_tiles
-
     tiled = event_tiles(spark.read.parquet(events_path), tile_level)
     return tiled.groupBy("tile_id").agg(
         F.countDistinct("key").alias("exact_uniques"),

@@ -63,6 +63,22 @@ def event_tiles(df: DataFrame, tile_level: int) -> DataFrame:
     )
 
 
+def _window_counts(df: DataFrame, window: str, key: str) -> DataFrame:
+    """Per-(event-time window, ``key``) counts as
+    (win_start, win_end, tile_id, n): region counts share the tile
+    counts' sink shape."""
+    return (
+        df.groupBy(F.window("ts", window).alias("win"), key)
+        .agg(F.count(F.lit(1)).alias("n"))
+        .select(
+            F.col("win.start").alias("win_start"),
+            F.col("win.end").alias("win_end"),
+            F.col(key).alias("tile_id"),
+            "n",
+        )
+    )
+
+
 def streaming_tile_counts(
     spark: SparkSession,
     events_path: str,
@@ -74,16 +90,8 @@ def streaming_tile_counts(
     watermark; late rows beyond the horizon are dropped)."""
     stream = spark.readStream.schema(EVENT_SCHEMA).parquet(events_path)
     tiled = event_tiles(stream, tile_level)
-    return (
-        tiled.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("win"), "tile_id")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(
-            F.col("win.start").alias("win_start"),
-            F.col("win.end").alias("win_end"),
-            "tile_id",
-            "n",
-        )
+    return _window_counts(
+        tiled.withWatermark("ts", watermark), window, "tile_id"
     )
 
 
@@ -95,16 +103,7 @@ def batch_tile_counts(
 ) -> DataFrame:
     """Batch twin of streaming_tile_counts (replay oracle)."""
     tiled = event_tiles(spark.read.parquet(events_path), tile_level)
-    return (
-        tiled.groupBy(F.window("ts", window).alias("win"), "tile_id")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(
-            F.col("win.start").alias("win_start"),
-            F.col("win.end").alias("win_end"),
-            "tile_id",
-            "n",
-        )
-    )
+    return _window_counts(tiled, window, "tile_id")
 
 
 def run_available_now(query_df: DataFrame, name: str, checkpoint: str):
@@ -152,16 +151,8 @@ def streaming_region_counts(
     count."""
     stream = spark.readStream.schema(EVENT_SCHEMA).parquet(events_path)
     pairs = _region_joined(spark, stream, caps, tile_level)
-    return (
-        pairs.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("win"), "region_id")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(
-            F.col("win.start").alias("win_start"),
-            F.col("win.end").alias("win_end"),
-            F.col("region_id").alias("tile_id"),  # sink-shape parity
-            "n",
-        )
+    return _window_counts(
+        pairs.withWatermark("ts", watermark), window, "region_id"
     )
 
 
@@ -176,13 +167,4 @@ def batch_region_counts(
     pairs = _region_joined(
         spark, spark.read.parquet(events_path), caps, tile_level
     )
-    return (
-        pairs.groupBy(F.window("ts", window).alias("win"), "region_id")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(
-            F.col("win.start").alias("win_start"),
-            F.col("win.end").alias("win_end"),
-            F.col("region_id").alias("tile_id"),
-            "n",
-        )
-    )
+    return _window_counts(pairs, window, "region_id")
