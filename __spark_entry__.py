@@ -56,19 +56,16 @@ def _orders_points(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _ensure_pkg(spark: SparkSession) -> None:
     """Ship the package to python workers regardless of how the driver
-    built the SparkSession."""
+    built the SparkSession (a no-op when ``build_session`` made it)."""
     import os
     import sys
 
     here = os.path.dirname(os.path.abspath(__file__))
     if here not in sys.path:
         sys.path.insert(0, here)
-    from s2geometry_spark.plans.session import package_zip
+    from s2geometry_spark.plans.session import ship_package
 
-    try:
-        spark.sparkContext.addPyFile(package_zip())
-    except Exception:
-        pass  # already added
+    ship_package(spark)
 
 
 # ---------------------------------------------------------------------

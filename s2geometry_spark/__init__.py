@@ -16,6 +16,16 @@ Layout:
   sources/    deterministic synthetic image/region tables + IO layout
   plans/      session config, checkpoint/lineage
   streaming/  structured-streaming variants
+
+Importing the package in a PySpark Python worker installs a stat guard
+on ``zipimport.zipimporter.invalidate_caches`` (``plans/zipcache.py``):
+the per-task ``importlib.invalidate_caches()`` of the worker then skips
+re-reading ``pyspark.zip`` and the spark-core jar while those archives
+are unchanged.  In the driver the import changes nothing.
 """
 
+from s2geometry_spark.plans.zipcache import guard_worker_zip_caches
+
 __version__ = "0.1.0"
+
+guard_worker_zip_caches()

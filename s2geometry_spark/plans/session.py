@@ -9,7 +9,9 @@ for region dim tables.
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 import tempfile
 import zipfile
 
@@ -39,6 +41,18 @@ def package_zip(out_path: str | None = None) -> str:
                     full = os.path.join(dirpath, fn)
                     zf.write(full, os.path.relpath(full, root))
     return out_path
+
+
+def ship_package(spark: SparkSession) -> None:
+    """``addPyFile`` the package zip unless the context already lists a
+    ``s2geometry_spark.zip``.  The zip's temp dir is removed when this
+    process exits; the context serves the file until then."""
+    sc = spark.sparkContext
+    if any(f.endswith("/s2geometry_spark.zip") for f in sc.listFiles):
+        return
+    tmp = tempfile.mkdtemp(prefix="s2geometry_spark_pyfiles_")
+    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
+    sc.addPyFile(package_zip(os.path.join(tmp, "s2geometry_spark.zip")))
 
 
 def build_session(
@@ -71,7 +85,11 @@ def build_session(
         # 16.2s with minPartitionNum=cores).  The one stage that needs
         # width on a tiny scan — the minhash signature pUDF — gets an
         # explicit repartition at the operator (textops), which is also
-        # the correct cluster-side idiom.
+        # the correct cluster-side idiom.  That A/B was taken while
+        # every pUDF task also re-read pyspark.zip and the spark-core
+        # jar (0.12-0.24 s CPU per task, removed by plans/zipcache.py), so
+        # it overstates the per-task cost; the setting has not been
+        # re-measured since.
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.driver.extraJavaOptions", "-Djava.net.preferIPv4Stack=true")
@@ -82,5 +100,5 @@ def build_session(
     # Ship the package to python workers (local mode spawns fresh worker
     # processes that do not inherit the driver's sys.path edits; on a
     # real cluster this is the --py-files artifact).
-    spark.sparkContext.addPyFile(package_zip())
+    ship_package(spark)
     return spark
