@@ -52,8 +52,3 @@ def cell_token(cell_id: Column) -> Column:
     hex16 = F.lpad(F.hex(cell_id), 16, "0")
     stripped = F.regexp_replace(hex16, "0+$", "")
     return F.when(cell_id == 0, F.lit("X")).otherwise(stripped)
-
-
-def tile_of(cell_id: Column, tile_level: int) -> Column:
-    """Tile assignment: ancestor at the configured tile level."""
-    return cell_parent(cell_id, tile_level)

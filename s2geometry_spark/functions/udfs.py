@@ -30,36 +30,14 @@ def ll_to_cellid(lat: pd.Series, lon: pd.Series) -> pd.Series:
 
 
 @pandas_udf(ArrayType(DoubleType()))
-def cellid_to_center_ll(cid: pd.Series) -> pd.Series:
-    lat, lon = C.cellid_to_ll(cid.to_numpy())
-    return pd.Series(list(np.stack([lat, lon], axis=1)))
-
-
-@pandas_udf(ArrayType(DoubleType()))
 def cellid_to_center_xyz(cid: pd.Series) -> pd.Series:
     x, y, z = C.cellid_to_xyz(cid.to_numpy())
     return pd.Series(list(np.stack([x, y, z], axis=1)))
 
 
-@pandas_udf(LongType())
-def cell_level(cid: pd.Series) -> pd.Series:
-    return pd.Series(C.level(cid.to_numpy()).astype(np.int64))
-
-
 @pandas_udf(StringType())
 def cell_token(cid: pd.Series) -> pd.Series:
     return pd.Series(C.to_token(cid.to_numpy()))
-
-
-@pandas_udf(LongType())
-def cell_from_token(tok: pd.Series) -> pd.Series:
-    return pd.Series(C.as_i64(C.from_token(tok.tolist())))
-
-
-@pandas_udf(ArrayType(LongType()))
-def cell_all_neighbors(cid: pd.Series, nbr_level: pd.Series) -> pd.Series:
-    out = C.all_neighbors(cid.to_numpy(), nbr_level.to_numpy())
-    return pd.Series([C.as_i64(a).tolist() for a in out])
 
 
 # ---------------------------------------------------------------------

@@ -97,3 +97,41 @@ def closest_k(
         pos.append(c[top])
         dist2.append(v[top])
     return np.concatenate(counts), np.concatenate(pos), np.concatenate(dist2)
+
+
+def closest_k_grouped(
+    qx, qy, qz, group, starts, ix, iy, iz, k: int,
+    max_distance2: float | None = None,
+):
+    """``closest_k`` within groups: the index is sorted by (group, key)
+    and group ``g`` holds positions ``starts[g]:starts[g + 1]``; query
+    ``i`` ranks only the slice of ``group[i]``, and a query with group
+    -1 gets no rows.  Same return as ``closest_k``, positions into the
+    whole index.
+
+    One ``closest_k`` call per group present in the batch; a stable
+    sort on each result row's query puts the rows back in query
+    order, each query's rows still in rank order."""
+    qx, qy, qz, ix, iy, iz = (
+        np.asarray(a, dtype=np.float64) for a in (qx, qy, qz, ix, iy, iz)
+    )
+    group = np.asarray(group, dtype=np.int64)
+    order = np.argsort(group, kind="stable")
+    present, first = np.unique(group[order], return_index=True)
+    counts = np.zeros(len(group), dtype=np.int64)
+    none = np.empty(0, dtype=np.int64)
+    owner, pos, dist2 = [none], [none], [np.empty(0)]
+    for g, qi in zip(present, np.split(order, first[1:])):
+        if g < 0:
+            continue
+        lo, hi = starts[g], starts[g + 1]
+        c, p, d = closest_k(
+            qx[qi], qy[qi], qz[qi], ix[lo:hi], iy[lo:hi], iz[lo:hi],
+            k, max_distance2,
+        )
+        counts[qi] = c
+        owner.append(np.repeat(qi, c))
+        pos.append(p + lo)
+        dist2.append(d)
+    take = np.argsort(np.concatenate(owner), kind="stable")
+    return counts, np.concatenate(pos)[take], np.concatenate(dist2)[take]

@@ -130,11 +130,6 @@ def siti_to_st(si: np.ndarray) -> np.ndarray:
     return (1.0 / MAX_SITI) * np.asarray(si, dtype=np.float64)
 
 
-def st_to_siti(s: np.ndarray) -> np.ndarray:
-    """Nearest si/ti (round-half-even, S2Coords.cs:208-215)."""
-    return np.rint(np.asarray(s, dtype=np.float64) * MAX_SITI).astype(np.int64)
-
-
 def face_siti_to_xyz(
     face: np.ndarray, si: np.ndarray, ti: np.ndarray
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:

@@ -41,11 +41,3 @@ def meters_to_chord2(meters: float) -> float:
 
 def chord2_to_meters(length2: float) -> float:
     return radians_to_meters(2 * math.asin(0.5 * math.sqrt(min(length2, 4.0))))
-
-
-def square_km_to_steradians(km2: float) -> float:
-    return km2 / (RADIUS_KM * RADIUS_KM)
-
-
-def steradians_to_square_km(sr: float) -> float:
-    return sr * RADIUS_KM * RADIUS_KM

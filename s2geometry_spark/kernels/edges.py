@@ -415,10 +415,6 @@ def crossing_parity_robust(
     return out
 
 
-def normalize_rows(p: np.ndarray) -> np.ndarray:
-    return p / np.sqrt((p * p).sum(axis=1))[:, None]
-
-
 def loop_origin_inside(
     verts: np.ndarray, prep: "ParityPrep | None" = None
 ) -> bool:

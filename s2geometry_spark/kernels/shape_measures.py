@@ -135,10 +135,6 @@ def collection_area(shapes: list[MultiShape]) -> float:
     return sum(shape_area(s) for s in shapes)
 
 
-def collection_approx_area(shapes: list[MultiShape]) -> float:
-    return sum(shape_approx_area(s) for s in shapes)
-
-
 def collection_centroid(shapes: list[MultiShape]) -> tuple:
     dim = collection_dimension(shapes)
     cx = cy = cz = 0.0

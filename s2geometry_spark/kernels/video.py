@@ -61,7 +61,3 @@ def extract_frame(data: bytes, k: int) -> np.ndarray:
     if not 0 <= k < n_frames:
         raise IndexError(k)
     return PNG.decode_png(data[start + offsets[k] : start + offsets[k + 1]])
-
-
-def frame_count(data: bytes) -> int:
-    return video_header(data)[1]

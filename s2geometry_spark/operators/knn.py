@@ -7,12 +7,13 @@ size-based choice between scanning every indexed point and descending
 the index (S2ClosestEdgeQueryBase.cs:274-298).  ``knn_join`` picks the
 arm from the index size:
 
-- brute force (``knn_join_brute``, index <= ``KNN_BRUTE_FORCE_MAX_INDEX``
-  points, no ``group_col``): the normalized index is collected once to
-  the driver, sorted by key, and every query is answered in one Arrow
-  UDF pass that carries the index (``kernels.closest_point``).  No
-  join, no shuffle, no eager rounds: a single narrow stage over the
-  query side.
+- brute force (``knn_join_brute``, largest group <=
+  ``KNN_BRUTE_FORCE_MAX_INDEX`` points, an ungrouped index being one
+  group): the normalized index is collected once to the driver, sorted
+  by (group, key), and every query is answered in one Arrow UDF pass
+  that carries the index (``kernels.closest_point``); a grouped query
+  ranks only its group's slice.  No join, no shuffle, no eager rounds:
+  a single narrow stage over the query side.
 - ring expansion (``knn_join_rings``), a bounded loop of Spark joins
   (SURVEY.md §2.4 / §3.3).  Round r: every *unfinished* query joins its
   3x3 cell neighborhood at level L_r against the index side keyed by
@@ -63,6 +64,7 @@ import math
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -85,8 +87,6 @@ def _ring_udf(level: int):
 
     @pandas_udf(ArrayType(LongType()))
     def _ring(cid: pd.Series) -> pd.Series:
-        import numpy as np
-
         mat = CI.as_i64(CI.ring_neighbors(cid.to_numpy(), level)).copy()
         mat.sort(axis=1)
         keep = np.ones(mat.shape, dtype=bool)
@@ -150,13 +150,15 @@ def knn_join(
     max_error2: float = 0.0,
 ) -> DataFrame:
     """k nearest index points per query point, by the brute-force scan
-    when the index has at most ``KNN_BRUTE_FORCE_MAX_INDEX`` points,
-    by ring expansion otherwise (the reference's brute-vs-indexed
-    switch, S2ClosestEdgeQueryBase.cs:274-298).
+    when the largest group has at most ``KNN_BRUTE_FORCE_MAX_INDEX``
+    points and the whole index fits ``BROADCAST_POINT_BUDGET``, by ring
+    expansion otherwise (the reference's brute-vs-indexed switch,
+    S2ClosestEdgeQueryBase.cs:274-298).
 
-    The size comes from ``index_count`` when given, else from
-    ``approx_index_count``.  ``group_col`` searches always take the
-    rings.  Both arms return the same rows; see ``knn_join_rings`` for
+    An ungrouped index is one group, sized by ``index_count`` when
+    given, else by ``approx_index_count``.  A ``group_col`` search
+    reads its largest group and its total from one aggregate over the
+    index.  Both arms return the same rows; see ``knn_join_rings`` for
     the parameters.  The brute arm is exact and runs no rounds, so
     ``seed_level``, ``max_rounds``, ``checkpoint_dir`` and
     ``max_error2`` do not apply to it.
@@ -164,11 +166,28 @@ def knn_join(
     if group_col is None:
         if index_count is None:
             index_count = approx_index_count(index)
-        if index_count <= KNN_BRUTE_FORCE_MAX_INDEX:
-            return knn_join_brute(
-                queries, index, k, query_key=query_key,
-                index_key=index_key, max_distance2=max_distance2,
-            )
+        largest = total = index_count
+    else:
+        # one partition of per-group counts: the max and sum then need
+        # no second shuffle (one Spark job fewer)
+        sizes = (
+            index.where(F.col(group_col).isNotNull())
+            .groupBy(group_col).count()
+            .coalesce(1)
+            .agg(F.max("count"), F.sum("count"))
+            .first()
+        )
+        largest, total = (int(v or 0) for v in sizes)
+        if index_count is None:
+            index_count = total
+    if (
+        largest <= KNN_BRUTE_FORCE_MAX_INDEX
+        and total <= BROADCAST_POINT_BUDGET
+    ):
+        return knn_join_brute(
+            queries, index, k, query_key=query_key, index_key=index_key,
+            group_col=group_col, max_distance2=max_distance2,
+        )
     return knn_join_rings(
         spark, queries, index, k, seed_level=seed_level,
         query_key=query_key, index_key=index_key, max_rounds=max_rounds,
@@ -185,6 +204,7 @@ def knn_join_brute(
     k: int,
     query_key: str = "key",
     index_key: str = "key",
+    group_col: str | None = None,
     max_distance2: float | None = None,
 ) -> DataFrame:
     """k nearest index points per query point by scanning the whole
@@ -197,6 +217,12 @@ def knn_join_brute(
     it.  Inputs need (key, x, y, z); ``max_distance2`` keeps pairs with
     dist2 <= bound.  Indexes above ``BROADCAST_POINT_BUDGET`` points
     raise: use ``knn_join_rings``.
+
+    ``group_col``: the index is collected sorted by (group, key) without
+    its NULL-group rows, and each query ranks only its own group's
+    slice (``closest_k_grouped``); a query whose group is NULL or
+    absent from the index gets no rows.  The output carries the
+    query's group column after ``key``, as ``knn_join_rings`` does.
     """
     from pyspark.sql.functions import arrow_udf
     from pyspark.sql.pandas.types import to_arrow_type
@@ -205,11 +231,16 @@ def knn_join_brute(
     )
 
     key_type = index.schema[index_key].dataType
+    gsel, order = [], ["ik"]
+    if group_col is not None:
+        group_type = index.schema[group_col].dataType
+        index = index.where(F.col(group_col).isNotNull())
+        gsel, order = [F.col(group_col).alias("gg")], ["gg", "ik"]
     rows = (
         normalized_cols(index)
-        .select(F.col(index_key).alias("ik"), "ux", "uy", "uz")
+        .select(F.col(index_key).alias("ik"), "ux", "uy", "uz", *gsel)
         .coalesce(1)
-        .sortWithinPartitions("ik")
+        .sortWithinPartitions(*order)
         .limit(BROADCAST_POINT_BUDGET + 1)
         .collect()
     )
@@ -223,21 +254,13 @@ def knn_join_brute(
         np.array([r[c] for r in rows], dtype=np.float64)
         for c in ("ux", "uy", "uz")
     )
-
-    @arrow_udf(
-        ArrayType(
-            StructType(
-                [StructField("ik", key_type), StructField("dist2", DoubleType())]
-            )
+    rtype = ArrayType(
+        StructType(
+            [StructField("ik", key_type), StructField("dist2", DoubleType())]
         )
     )
-    def _closest(qx: pa.Array, qy: pa.Array, qz: pa.Array) -> pa.Array:
-        from ..kernels.closest_point import closest_k
 
-        counts, pos, d2 = closest_k(
-            *(c.to_numpy(zero_copy_only=False) for c in (qx, qy, qz)),
-            ix, iy, iz, k, max_distance2,
-        )
+    def nested(counts, pos, d2):
         offsets = np.zeros(len(counts) + 1, dtype=np.int32)
         np.cumsum(counts, out=offsets[1:])
         nb = pa.StructArray.from_arrays(
@@ -245,14 +268,49 @@ def knn_join_brute(
         )
         return pa.ListArray.from_arrays(pa.array(offsets), nb)
 
+    qcols = [F.col("ux"), F.col("uy"), F.col("uz")]
+    if group_col is None:
+        @arrow_udf(rtype)
+        def _closest(qx: pa.Array, qy: pa.Array, qz: pa.Array) -> pa.Array:
+            from ..kernels.closest_point import closest_k
+
+            return nested(*closest_k(
+                *(c.to_numpy(zero_copy_only=False) for c in (qx, qy, qz)),
+                ix, iy, iz, k, max_distance2,
+            ))
+    else:
+        # the sorted rows hold each group in one run: its values and
+        # run lengths give the group -> index slice map
+        runs = pc.value_counts(
+            pa.array([r["gg"] for r in rows], type=to_arrow_type(group_type))
+        )
+        groups = runs.field("values")
+        starts = np.zeros(len(runs) + 1, dtype=np.int64)
+        np.cumsum(runs.field("counts").to_numpy(), out=starts[1:])
+        qcols.append(F.col(group_col))
+
+        @arrow_udf(rtype)
+        def _closest(
+            qx: pa.Array, qy: pa.Array, qz: pa.Array, qg: pa.Array
+        ) -> pa.Array:
+            from ..kernels.closest_point import closest_k_grouped
+
+            gid = pc.index_in(qg, value_set=groups).fill_null(-1)
+            return nested(*closest_k_grouped(
+                *(c.to_numpy(zero_copy_only=False) for c in (qx, qy, qz)),
+                gid.to_numpy(zero_copy_only=False), starts,
+                ix, iy, iz, k, max_distance2,
+            ))
+
+    out_grp = [group_col] if group_col else []
     res = normalized_cols(queries).select(
         F.col(query_key).alias("key"),
-        F.posexplode(_closest(F.col("ux"), F.col("uy"), F.col("uz"))).alias(
-            "pos", "nb"
-        ),
+        *out_grp,
+        F.posexplode(_closest(*qcols)).alias("pos", "nb"),
     )
     return res.select(
         "key",
+        *out_grp,
         F.col("nb.ik").alias("neighbor_key"),
         F.col("nb.dist2").alias("dist2"),
         (F.col("pos") + 1).cast("long").alias("rn"),
@@ -303,8 +361,9 @@ def knn_join_rings(
 
     ``group_col``: when set (present on both sides), neighbors are
     searched within the same group only (the per-group closest-point
-    composition the kNN-based Hausdorff path uses); the group key joins
-    alongside the cell key, so hot groups still spread over cells.
+    query of ``hausdorff_directed``); the group key joins alongside the
+    cell key, so hot groups still spread over cells.  The output
+    carries the group column after ``key``.
 
     ``index_count``: pass a known/estimated index size to skip the
     seed-level sampling scan entirely.
@@ -556,107 +615,47 @@ def _ring_search(
     return result
 
 
-def hausdorff_directed_knn(
-    spark: SparkSession,
+def hausdorff_directed(
     a_df: DataFrame,
     b_df: DataFrame,
     group_col: str = "grp",
 ) -> DataFrame:
-    """Directed Hausdorff via per-group closest-point composition:
-    knn_join(k=1) restricted to the group, then max per group — the
-    scale path for large groups (the broadcast form below is A x B per
-    group, quadratic).  Result values are identical: both take max over
-    a of the exact min squared-chord distance."""
+    """Directed Hausdorff distance per group: max over a in A of
+    min over b in B of dist(a, b), as squared chord
+    (S2HausdorffDistanceQuery.cs:63-100: a closest-point query per
+    source point, then a max).
+
+    Inputs carry (key, x, y, z, <group_col>).  The closest-point query
+    is ``knn_join(k=1)`` within the group, so its size rule picks the
+    plan: the brute-force scan while every B group is small, the rings
+    for large ones.  Cell ids are assigned lazily, so a brute-force
+    plan never runs their encode.  A group with no B points has no
+    row."""
     from . import tile as T
 
     if "cell_id" not in a_df.columns:
         a_df = T.assign_cellids(a_df)
     if "cell_id" not in b_df.columns:
         b_df = T.assign_cellids(b_df)
-    nn = knn_join(spark, a_df, b_df, k=1, group_col=group_col)
-    return (
-        nn.groupBy(group_col)
-        .agg(F.max("dist2").alias("hausdorff2"))
-        .select(group_col, "hausdorff2")
-    )
-
-
-HAUSDORFF_KNN_THRESHOLD = 20_000
-
-
-def hausdorff_directed(
-    a_df: DataFrame,
-    b_df: DataFrame,
-    group_col: str = "grp",
-    spark: SparkSession | None = None,
-    knn_threshold: int = HAUSDORFF_KNN_THRESHOLD,
-    b_count: int | None = None,
-) -> DataFrame:
-    """Directed Hausdorff distance per group: max over a in A of
-    min over b in B of dist(a, b), as squared chord
-    (S2HausdorffDistanceQuery.cs:63-100 composition: closest-point
-    query per source point + max aggregate).
-
-    Inputs carry (key, x, y, z, <group_col>).  Size-based plan switch
-    (the brute-vs-indexed cost switch of S2ClosestEdgeQueryBase): small
-    B sides broadcast and evaluate all pairs per group; when the B side
-    exceeds ``knn_threshold`` rows (and ``spark`` is provided), the
-    per-group kNN composition above takes over — same values, no
-    per-group quadratic blowup.
-    """
-    if spark is not None:
-        # the switch needs order-of-magnitude accuracy only: a sampled
-        # estimate (or a caller-supplied count, the index_count
-        # pattern) replaces a full count() action that would re-run
-        # the B side's whole upstream lineage — twice per undirected
-        # call — just to pick a plan
-        n_b = b_count if b_count is not None else approx_index_count(b_df)
-        if n_b >= knn_threshold:
-            return hausdorff_directed_knn(spark, a_df, b_df, group_col)
-    a = normalized_cols(a_df).select(
-        F.col("key").alias("ak"), F.col(group_col).alias("ag"),
-        F.col("ux").alias("aux"), F.col("uy").alias("auy"),
-        F.col("uz").alias("auz"),
-    )
-    b = normalized_cols(b_df).select(
-        F.col(group_col).alias("bg"),
-        F.col("ux").alias("bux"), F.col("uy").alias("buy"),
-        F.col("uz").alias("buz"),
-    )
-    pairs = a.join(F.broadcast(b), a["ag"] == b["bg"], "inner")
-    d2 = _dist2(
-        F.col("aux"), F.col("auy"), F.col("auz"),
-        F.col("bux"), F.col("buy"), F.col("buz"),
-    )
-    mins = pairs.groupBy("ak", "ag").agg(F.min(d2).alias("min_d2"))
-    return (
-        mins.groupBy("ag")
-        .agg(F.max("min_d2").alias("hausdorff2"))
-        .select(F.col("ag").alias(group_col), "hausdorff2")
-    )
+    nn = knn_join(a_df.sparkSession, a_df, b_df, k=1, group_col=group_col)
+    return nn.groupBy(group_col).agg(F.max("dist2").alias("hausdorff2"))
 
 
 def hausdorff_undirected(
     a_df: DataFrame,
     b_df: DataFrame,
     group_col: str = "grp",
-    spark: SparkSession | None = None,
-    knn_threshold: int = HAUSDORFF_KNN_THRESHOLD,
-    a_count: int | None = None,
-    b_count: int | None = None,
 ) -> DataFrame:
     """Undirected Hausdorff distance per group
     (S2HausdorffDistanceQuery.cs:18-52: the max of the two directed
-    passes).  Each pass reuses hausdorff_directed's size-based plan
-    switch (broadcast per-group pairs vs per-group kNN-round
-    composition), so the undirected form inherits the scale path.
-    Output: (group_col, hausdorff2 = directed a->b, undirected2)."""
-    fwd = hausdorff_directed(
-        a_df, b_df, group_col, spark, knn_threshold, b_count=b_count
-    ).withColumnRenamed("hausdorff2", "h_ab2")
-    bwd = hausdorff_directed(
-        b_df, a_df, group_col, spark, knn_threshold, b_count=a_count
-    ).withColumnRenamed("hausdorff2", "h_ba2")
+    passes).  Output: (group_col, hausdorff2 = directed a->b,
+    undirected2)."""
+    fwd = hausdorff_directed(a_df, b_df, group_col).withColumnRenamed(
+        "hausdorff2", "h_ab2"
+    )
+    bwd = hausdorff_directed(b_df, a_df, group_col).withColumnRenamed(
+        "hausdorff2", "h_ba2"
+    )
     return (
         fwd.join(bwd, group_col)
         .select(
@@ -699,7 +698,6 @@ def closest_polyline(
     ``polylines``: [(line_id, edges [(a, b), ...])].  Ties break by
     line_id (reference result order distance-then-shape-id).
     """
-    import pandas as pd
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import (
         DoubleType,
@@ -723,8 +721,6 @@ def closest_polyline(
         )
     )
     def _closest(ux: pd.Series, uy: pd.Series, uz: pd.Series) -> pd.DataFrame:
-        import numpy as np
-
         from ..kernels import polyline as PL
 
         px, py, pz = ux.to_numpy(), uy.to_numpy(), uz.to_numpy()
@@ -971,7 +967,6 @@ def closest_polygon(
 
     ``polygons``: [(region_id, Loop)].  Output (key, region_id, dist2)
     with ties broken by (dist2, region_id)."""
-    import pandas as pd
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import (
         DoubleType,
@@ -1335,7 +1330,6 @@ def closest_cell_join(
     cells) of numpy column math — suitable for dim-scale indexes (for
     huge indexes, pre-prune candidates with the ring-expansion kNN on
     cell centers first)."""
-    import numpy as np
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import (
         ArrayType, DoubleType, LongType, StructField, StructType,

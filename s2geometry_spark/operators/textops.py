@@ -20,6 +20,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.read import spread_scan
 from .banded_join import HOT_BUCKET, SALT_G, banded_self_join
 
 STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "on")
@@ -359,7 +360,14 @@ def minhash_signature(docs: DataFrame) -> DataFrame:
     take the codegen explode-agg path; streams keep the pure-projection
     Arrow form (aggs are not streamable in a stateless append plan)."""
     if not docs.isStreaming:
-        return _minhash_sig_agg(_spread_if_narrow(docs))
+        # only a NARROW scan (fewer partitions than the session's
+        # parallelism, i.e. a small or single-row-group local file)
+        # needs the wide-text repartition to parallelize the codegen
+        # md5 stage; a production-scale scan is already wide, and
+        # forcing the repartition there would move the full text corpus
+        # through a shuffle whose only downstream exchange is otherwise
+        # the agg's slim partial-min rows
+        return _minhash_sig_agg(spread_scan(docs, key="doc_id"))
     shingled = _shingle_words(doc_shingles(_spread(docs)))
     sig = shingled.select(
         "doc_id",
@@ -382,21 +390,6 @@ def doc_shingles(docs: DataFrame) -> DataFrame:
     )
 
 
-def _spread_if_narrow(docs: DataFrame) -> DataFrame:
-    """Conditional spread for the explode-agg signature path: only a
-    NARROW scan (fewer partitions than the session's parallelism, i.e.
-    a small or single-row-group local file) needs the wide-text
-    repartition to parallelize the codegen md5 stage; a
-    production-scale scan is already wide, and forcing the repartition
-    there would move the full text corpus through a shuffle whose only
-    downstream exchange is otherwise the agg's slim partial-min rows.
-    Delegates to sources.read.spread_scan (the same guard the registry
-    readers use)."""
-    from ..sources.read import spread_scan
-
-    return spread_scan(docs, key="doc_id")
-
-
 def _spread(docs: DataFrame) -> DataFrame:
     """Repartition ahead of the Arrow signature stage: a small parquet
     scan yields 1-2 splits, which would run the minhash pUDF nearly
@@ -406,7 +399,7 @@ def _spread(docs: DataFrame) -> DataFrame:
     (The Arrow-pUDF path keeps this UNCONDITIONAL form: its CPU cost
     is per-doc in an interpreted lambda chain, so it wants the spread
     even on moderately wide scans; the explode-agg path uses the
-    conditional `_spread_if_narrow`.)"""
+    conditional `sources.read.spread_scan`.)"""
     if docs.isStreaming:
         return docs
     n = docs.sparkSession.sparkContext.defaultParallelism
@@ -429,24 +422,22 @@ def _banded(docs: DataFrame, keep_shingles: bool = False) -> DataFrame:
 
     Two physically different plans, one semantics (pinned by the
     stream-vs-batch replay tests and the shared band expression):
-    batch without shingles rides the codegen explode-agg signature
-    (`_minhash_sig_agg`); streams and keep-shingles consumers stay on
-    the single projection chain a stateless stream requires."""
-    if not docs.isStreaming and not keep_shingles:
-        sigs = _minhash_sig_agg(_spread_if_narrow(docs))
-        return sigs.select(
-            "doc_id",
-            *_band_key_cols(lambda i: F.col(f"h{i}")),
+    without shingles the band keys read ``minhash_signature``, which
+    picks the codegen explode-agg for batch and the projection chain
+    for streams; keep-shingles consumers stay on the single projection
+    chain a stateless stream requires."""
+    if not keep_shingles:
+        return minhash_signature(docs).select(
+            "doc_id", *_band_key_cols(lambda i: F.col(f"h{i}"))
         )
     shingled = _shingle_words(doc_shingles(_spread(docs)))
-    extra = ["shingles"] if keep_shingles else []
     sigs = shingled.select(
-        "doc_id", *extra,
+        "doc_id", "shingles",
         _minhash_sig_udf()(F.col("w1"), F.col("w2")).alias("sig"),
     )
     return sigs.select(
         "doc_id",
-        *extra,
+        "shingles",
         *_band_key_cols(lambda i: F.col("sig")[i]),
     )
 

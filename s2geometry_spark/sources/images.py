@@ -208,13 +208,6 @@ def geo_table(spark: SparkSession, n: int, partitions: int = 0) -> DataFrame:
     return base.mapInPandas(gen, schema=GEO_SCHEMA)
 
 
-def expected_pixels(i: int) -> np.ndarray:
-    """Oracle: the decoded pixels row i must reproduce (exact for png,
-    quantized for the fake-jpeg stub)."""
-    rec = row_record(i)
-    return PNG.decode_image(rec["bytes"], rec["fmt"])
-
-
 def phash_table(spark: SparkSession, n: int, partitions: int = 0) -> DataFrame:
     """Payload-free (idx, phash) table — the perceptual-hash column of
     the image table without materializing bytes (same pixel synthesis,

@@ -162,58 +162,60 @@ def test_closest_k_kernel_matches_brute_force(monkeypatch, chunk_pairs):
         assert got == brute_force_knn(q_pdf, i_pdf, k), k
 
 
-class TestHausdorffKnnPath:
-    def test_knn_path_matches_broadcast(self, spark, sf_dir):
-        cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
-        sup = spark.read.parquet(f"{sf_dir}/supplier.parquet")
-        a = P.with_xyz(
-            cust.select(
-                F.col("c_custkey").alias("key"),
-                F.col("c_nationkey").alias("grp"),
-            )
+@pytest.fixture(scope="module")
+def nation_sides(spark, sf_dir):
+    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
+    sup = spark.read.parquet(f"{sf_dir}/supplier.parquet")
+    a = P.with_xyz(
+        cust.select(
+            F.col("c_custkey").alias("key"),
+            F.col("c_nationkey").alias("grp"),
         )
-        b = P.with_xyz(
-            sup.select(
-                F.col("s_suppkey").alias("key"),
-                F.col("s_nationkey").alias("grp"),
-            )
+    )
+    b = P.with_xyz(
+        sup.select(
+            F.col("s_suppkey").alias("key"),
+            F.col("s_nationkey").alias("grp"),
         )
-        broad = {
-            r["grp"]: r["hausdorff2"]
-            for r in KNN.hausdorff_directed(a, b).collect()
-        }
-        via_knn = {
-            r["grp"]: r["hausdorff2"]
-            for r in KNN.hausdorff_directed_knn(spark, a, b).collect()
-        }
-        assert broad == via_knn  # bit-identical values
+    )
+    return a, b
 
-    def test_auto_switch_uses_knn_for_large_b(self, spark, sf_dir):
-        cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
-        sup = spark.read.parquet(f"{sf_dir}/supplier.parquet")
-        a = P.with_xyz(
-            cust.select(
-                F.col("c_custkey").alias("key"),
-                F.col("c_nationkey").alias("grp"),
-            )
-        )
-        b = P.with_xyz(
-            sup.select(
-                F.col("s_suppkey").alias("key"),
-                F.col("s_nationkey").alias("grp"),
-            )
-        )
+
+def _ring_hausdorff(spark, a, b):
+    """Directed Hausdorff per group as the max over the ring arm's
+    grouped k=1 search."""
+    nn = KNN.knn_join_rings(
+        spark, T.assign_cellids(a), T.assign_cellids(b), 1, group_col="grp"
+    )
+    return {
+        r["grp"]: r["h2"]
+        for r in nn.groupBy("grp").agg(F.max("dist2").alias("h2")).collect()
+    }
+
+
+class TestHausdorffKnnPath:
+    def test_knn_path_matches_broadcast(self, spark, nation_sides):
+        """hausdorff_directed (knn_join's grouped brute-force arm on
+        this index) equals the max over the ring arm's grouped search,
+        bit for bit."""
+        a, b = nation_sides
         got = {
             r["grp"]: r["hausdorff2"]
-            for r in KNN.hausdorff_directed(
-                a, b, spark=spark, knn_threshold=1  # force the knn path
-            ).collect()
-        }
-        want = {
-            r["grp"]: r["hausdorff2"]
             for r in KNN.hausdorff_directed(a, b).collect()
         }
-        assert got == want
+        assert got == _ring_hausdorff(spark, a, b)
+
+    def test_auto_switch_uses_knn_for_large_b(self, spark, nation_sides):
+        """Both passes of hausdorff_undirected, the reverse one searching
+        the larger customer side, equal the ring arm's maxes."""
+        a, b = nation_sides
+        ab = _ring_hausdorff(spark, a, b)
+        ba = _ring_hausdorff(spark, b, a)
+        got = {
+            r["grp"]: (r["hausdorff2"], r["undirected2"])
+            for r in KNN.hausdorff_undirected(a, b).collect()
+        }
+        assert got == {g: (ab[g], max(ab[g], ba[g])) for g in ab}
 
 
 class TestCheckpointedRounds:

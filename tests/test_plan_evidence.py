@@ -169,6 +169,36 @@ def test_knn_brute_arm_is_one_narrow_python_pass(spark, sf_dir, pts):
         assert names.count("ArrowEvalPythonExec") == 1, (op.__name__, names)
 
 
+def test_hausdorff_directed_is_one_python_pass(spark, sf_dir):
+    """The directed Hausdorff of the sf0.01 nation query (customers to
+    suppliers, per nation) is knn_join's grouped brute-force scan: one
+    Arrow pass over the customers, no join over the point sides, and
+    no cell-id encode (the scan never reads the cell ids it is given)."""
+    import os
+
+    from s2geometry_spark.operators import knn as KNN
+    from s2geometry_spark.sources import points as P
+
+    sf = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+
+    def side(table, key, grp):
+        df = spark.read.parquet(f"{sf}/{table}.parquet")
+        return P.with_xyz(
+            df.select(F.col(key).alias("key"), F.col(grp).alias("grp"))
+        )
+
+    h = KNN.hausdorff_directed(
+        side("customer", "c_custkey", "c_nationkey"),
+        side("supplier", "s_suppkey", "s_nationkey"),
+    )
+    names = [n for n, _ in _walk_plan(h)]
+    assert names.count("ArrowEvalPythonExec") == 1, names
+    joins = [n for n in names if "Join" in n or n == "CartesianProductExec"]
+    assert not joins, joins
+    plan = h._jdf.queryExecution().executedPlan().toString()
+    assert "xyz_to_cellid" not in plan
+
+
 def test_doc_near_dup_shuffles_slim_rows_only(spark, sf_dir):
     """The LSH candidate join must stay a bucketed equi-join (no
     cartesian/nested-loop fallback) and no ARRAY column (shingles,
