@@ -346,7 +346,7 @@ def bench_skew(cores: int, skew_dir: str, passes: int = 2) -> dict:
             # the embedding paths' directed band self-join
             return BJ.banded_self_join(
                 slim, "vec_id", True, SIM.BAND_BITS, SIM.N_BANDS,
-                hot_bucket_threshold, BJ.SALT_G,
+                hot_bucket_threshold,
             )
 
         arms = {

@@ -6,7 +6,9 @@ Its one size-driven decision — partitioned join for cold buckets,
 replicated partner-group join only when some bucket is hot ("To
 Partition, or Not to Partition", SIGMOD 2021) — lives here alone, with
 the first-agreeing-band fold that the streaming text dedup and the
-image phash join (``image_dedup.first_band_filter``) also use.
+image phash join (``image_dedup.first_band_filter``) also use.  Both
+branches sit in one lazy plan; Spark's adaptive execution drops the
+replicated one at run time when no bucket is hot.
 """
 
 from __future__ import annotations
@@ -57,7 +59,7 @@ def first_match_band(
 
 def shuffle_partitions(df: DataFrame) -> int:
     """The session's shuffle-partition count, with a sane fallback for
-    'auto'/unset — shared by the skew gate and the hot branch so the
+    'auto'/unset — shared by ``hot_buckets`` and the hot branch so the
     reducer-share math and the explicit-count repartition pins stay
     consistent."""
     try:
@@ -67,8 +69,8 @@ def shuffle_partitions(df: DataFrame) -> int:
 
 
 def hot_buckets(slim: DataFrame, hot_bucket_threshold: int) -> DataFrame:
-    """(b, bk, hot=true) rows for band buckets that would straggle a
-    reducer in the candidate self-join: big in absolute terms
+    """(b, bk) of the band buckets that would straggle a reducer in
+    the candidate self-join: big in absolute terms
     (``n > hot_bucket_threshold``) AND with pair volume n^2 above
     ``HOT_IMBALANCE_FACTOR`` x the mean per-reducer share of the total
     pair work (sum of n_i^2 / shuffle partitions — the balanced share a
@@ -79,22 +81,17 @@ def hot_buckets(slim: DataFrame, hot_bucket_threshold: int) -> DataFrame:
     pure overhead (measured 2.5x slower salted at sf1, and 3-4x on the
     sf1 soak where all 1024 band buckets held ~80 rows each); a planted
     boilerplate block whose buckets dominate the pair work trips both
-    conditions and spreads over ``salt_g`` reducers (measured 1.9x
-    faster salted on the skew fixture)."""
+    conditions and spreads over ``SALT_G`` reducers (measured 1.9x
+    faster salted on the skew fixture).  The total pair work is a
+    scalar subquery, so the frame stays lazy and joins nothing."""
     n_reducers = shuffle_partitions(slim)
     cnt = slim.groupBy("b", "bk").agg(F.count(F.lit(1)).alias("n"))
-    total_pair_work = cnt.agg(
-        F.sum(F.col("n").cast("double") * F.col("n")).alias("tp")
-    )
     work = F.col("n").cast("double") * F.col("n")
-    return (
-        cnt.crossJoin(F.broadcast(total_pair_work))
-        .where(
-            (F.col("n") > hot_bucket_threshold)
-            & (work > F.col("tp") * F.lit(HOT_IMBALANCE_FACTOR / n_reducers))
-        )
-        .select("b", "bk", F.lit(True).alias("hot"))
-    )
+    total_pair_work = cnt.agg(F.sum(work)).scalar()
+    return cnt.where(
+        (F.col("n") > hot_bucket_threshold)
+        & (work > total_pair_work * F.lit(HOT_IMBALANCE_FACTOR / n_reducers))
+    ).select("b", "bk")
 
 
 def banded_self_join(
@@ -104,7 +101,6 @@ def banded_self_join(
     width: int,
     n_bands: int,
     hot_bucket_threshold: int = HOT_BUCKET,
-    salt_g: int = SALT_G,
 ) -> DataFrame:
     """Candidate pairs (id_a, id_b) from the banded (id_col, allb, b,
     bk) self-join: every pair of distinct ids sharing a (b, bk) bucket,
@@ -117,8 +113,8 @@ def banded_self_join(
     naive self-join sends every pair of a hot bucket to one reducer —
     O(n_hot^2) on a single core.  Here a first map-side-combinable
     count pass finds the hot buckets (``hot_buckets``); only those rows
-    replicate (left side x ``salt_g`` partner groups, right side keeps
-    its hash group ``g``), so a hot bucket's pairs land on ``salt_g``
+    replicate (left side x ``SALT_G`` partner groups, right side keeps
+    its hash group ``g``), so a hot bucket's pairs land on ``SALT_G``
     reducers.  Cold buckets — the common case — join unsalted with zero
     replication.
 
@@ -132,11 +128,12 @@ def banded_self_join(
 
     Output pair SET is provably identical to the unsalted join: the
     hot path enumerates each pair exactly once (partner group
-    p == xxhash64(id_b) % salt_g partitions the id_b side).
+    p == xxhash64(id_b) % SALT_G partitions the id_b side).
 
     Salting engages only for buckets that would actually STRAGGLE a
-    reducer (``hot_buckets``): big in absolute terms AND dominating the
-    total pair work, so a uniformly-loaded table stays unsalted.
+    reducer (``hot_buckets``), so a uniformly-loaded table stays
+    unsalted.  Building the plan runs no Spark job: adaptive execution
+    picks the branches at run time from the hot-bucket broadcast.
     """
     first_b = first_match_band(
         F.col("a.allb"), F.col("c.allb"), n_bands, width
@@ -155,30 +152,22 @@ def banded_self_join(
             .select(a_id.alias("id_a"), c_id.alias("id_b"))
         )
 
-    # the band rows arrive already materialized by the caller (the
-    # band keys are expensive projections — minhash signatures, or a
-    # 32-plane sign-bucket literal expression Janino can't compile
-    # into one method, so every plan reference would re-evaluate it
-    # interpreted) — a second checkpoint here would write the whole
-    # slim table to executor storage AGAIN just to add one cheap hash
-    # column; g recomputes per read instead
-    slim = slim.withColumn("g", F.pmod(F.xxhash64(id_col), F.lit(salt_g)))
-    # eager emptiness check on the (tiny, aggregated) hot-bucket frame:
-    # on the common unskewed path there are NO hot buckets, so the
-    # two-branch salted plan would double whole-stage-codegen size for
-    # nothing — sf1 soak measured the one-time compile of the bigger
-    # plan at ~25s of a 37s cold run.  The count pass reads the already
-    # checkpointed slim rows, and the salted path reuses the
-    # checkpointed hot frame, so no work is duplicated either way.
-    hot = hot_buckets(slim, hot_bucket_threshold).localCheckpoint()
-    if not hot.take(1):
-        return pairs(slim.drop("g"), slim.drop("g"), F.lit(True))
-    marked = slim.join(F.broadcast(hot), ["b", "bk"], "left")
-    cold = marked.where(F.col("hot").isNull()).drop("hot", "g")
-    hotr = marked.where(F.col("hot").isNotNull()).drop("hot")
+    # the caller materializes the band rows (their keys are expensive
+    # minhash or sign-plane projections), so each read below is cheap.
+    # One lazy plan for both cases: AQE runs the hot-bucket broadcast
+    # stage first, and when it is empty its empty-relation propagation
+    # turns the anti join into plain slim and drops the whole salted
+    # half before any of its stages exist, so the common unskewed path
+    # never compiles it (the sf1 soak measured that compile at ~25 s of
+    # a 37 s cold run).  Without AQE the plan is still correct.
+    hot = F.broadcast(hot_buckets(slim, hot_bucket_threshold))
+    cold = slim.join(hot, ["b", "bk"], "left_anti")
+    hotr = slim.join(hot, ["b", "bk"], "left_semi").withColumn(
+        "g", F.pmod(F.xxhash64(id_col), F.lit(SALT_G))
+    )
     # hot buckets: left replicates once per partner group p; the join
     # requires p == right.g so the shuffle key (b, bk, p) splits a hot
-    # bucket's pairs across salt_g reducers
+    # bucket's pairs across SALT_G reducers
     # explicit-count repartition on the join keys: AQE's partition
     # coalescing sizes by INPUT bytes, so it would merge the hot join's
     # few-MB band rows back into 1-2 tasks and the output-sized pair
@@ -189,7 +178,7 @@ def banded_self_join(
     # minhash pUDF stage.
     n_parts = shuffle_partitions(slim)
     hot_a = hotr.withColumn(
-        "p", F.explode(F.array(*[F.lit(i) for i in range(salt_g)]))
+        "p", F.explode(F.array(*[F.lit(i) for i in range(SALT_G)]))
     ).repartition(n_parts, "b", "bk", "p")
     hot_c = hotr.repartition(n_parts, "b", "bk", "g")
     return pairs(cold, cold, F.lit(True)).unionByName(

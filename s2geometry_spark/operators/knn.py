@@ -60,6 +60,7 @@ Scale notes (ring loop):
 from __future__ import annotations
 
 import math
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -67,6 +68,7 @@ import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType
 from pyspark.sql.window import Window
 
 from ..constants import KMIN_WIDTH
@@ -157,37 +159,32 @@ def knn_join(
 
     An ungrouped index is one group, sized by ``index_count`` when
     given, else by ``approx_index_count``.  A ``group_col`` search
-    reads its largest group and its total from one aggregate over the
-    index.  Both arms return the same rows; see ``knn_join_rings`` for
-    the parameters.  The brute arm is exact and runs no rounds, so
-    ``seed_level``, ``max_rounds``, ``checkpoint_dir`` and
-    ``max_error2`` do not apply to it.
+    reads its largest group and its total from the run lengths of the
+    brute arm's one bounded index collect, which it reuses.  Both arms
+    return the same rows; see ``knn_join_rings`` for the parameters.
+    The brute arm is exact and runs no rounds, so ``seed_level``,
+    ``max_rounds``, ``checkpoint_dir`` and ``max_error2`` do not apply
+    to it.
     """
     if group_col is None:
         if index_count is None:
             index_count = approx_index_count(index)
         largest = total = index_count
     else:
-        # one partition of per-group counts: the max and sum then need
-        # no second shuffle (one Spark job fewer)
-        sizes = (
-            index.where(F.col(group_col).isNotNull())
-            .groupBy(group_col).count()
-            .coalesce(1)
-            .agg(F.max("count"), F.sum("count"))
-            .first()
-        )
-        largest, total = (int(v or 0) for v in sizes)
-        if index_count is None:
+        idx = _collect_index(index, index_key, group_col)
+        largest, total = np.diff(idx.starts).max(initial=0), len(idx.ik)
+        if index_count is None and total <= BROADCAST_POINT_BUDGET:
             index_count = total
     if (
         largest <= KNN_BRUTE_FORCE_MAX_INDEX
         and total <= BROADCAST_POINT_BUDGET
     ):
-        return knn_join_brute(
-            queries, index, k, query_key=query_key, index_key=index_key,
-            group_col=group_col, max_distance2=max_distance2,
-        )
+        if group_col is None:
+            return knn_join_brute(
+                queries, index, k, query_key=query_key, index_key=index_key,
+                max_distance2=max_distance2,
+            )
+        return _brute_plan(queries, idx, k, query_key, group_col, max_distance2)
     return knn_join_rings(
         spark, queries, index, k, seed_level=seed_level,
         query_key=query_key, index_key=index_key, max_rounds=max_rounds,
@@ -195,6 +192,47 @@ def knn_join(
         checkpoint_dir=checkpoint_dir,
         checkpoint_version=checkpoint_version,
         max_distance2=max_distance2, max_error2=max_error2,
+    )
+
+
+class _BruteIndex(NamedTuple):
+    """The brute arm's collected index; group ``groups[g]`` owns rows
+    ``starts[g]:starts[g + 1]`` (both None when ungrouped)."""
+    key_type: DataType
+    ik: pa.Array
+    xyz: tuple[np.ndarray, np.ndarray, np.ndarray]
+    groups: pa.Array | None
+    starts: np.ndarray | None
+
+
+def _collect_index(
+    index: DataFrame, index_key: str, group_col: str | None
+) -> _BruteIndex:
+    """The brute arm's collect step (see ``knn_join_brute``), bounded
+    at ``BROADCAST_POINT_BUDGET + 1`` rows."""
+    gsel, order = [], ["ik"]
+    if group_col is not None:
+        index = index.where(F.col(group_col).isNotNull())
+        gsel, order = [F.col(group_col).alias("gg")], ["gg", "ik"]
+    t = (
+        normalized_cols(index)
+        .select(F.col(index_key).alias("ik"), "ux", "uy", "uz", *gsel)
+        .coalesce(1)
+        .sortWithinPartitions(*order)
+        .limit(BROADCAST_POINT_BUDGET + 1)
+        .toArrow()
+    )
+    groups = starts = None
+    if group_col is not None:
+        # the sorted rows hold each group in one run: its values and
+        # run lengths give the group -> index slice map
+        runs = pc.value_counts(t["gg"])
+        groups = runs.field("values")
+        starts = np.zeros(len(runs) + 1, dtype=np.int64)
+        np.cumsum(runs.field("counts").to_numpy(), out=starts[1:])
+    return _BruteIndex(
+        index.schema[index_key].dataType, t["ik"].combine_chunks(),
+        tuple(t[c].to_numpy() for c in ("ux", "uy", "uz")), groups, starts,
     )
 
 
@@ -224,39 +262,29 @@ def knn_join_brute(
     absent from the index gets no rows.  The output carries the
     query's group column after ``key``, as ``knn_join_rings`` does.
     """
-    from pyspark.sql.functions import arrow_udf
-    from pyspark.sql.pandas.types import to_arrow_type
-    from pyspark.sql.types import (
-        ArrayType, DoubleType, StructField, StructType,
-    )
-
-    key_type = index.schema[index_key].dataType
-    gsel, order = [], ["ik"]
-    if group_col is not None:
-        group_type = index.schema[group_col].dataType
-        index = index.where(F.col(group_col).isNotNull())
-        gsel, order = [F.col(group_col).alias("gg")], ["gg", "ik"]
-    rows = (
-        normalized_cols(index)
-        .select(F.col(index_key).alias("ik"), "ux", "uy", "uz", *gsel)
-        .coalesce(1)
-        .sortWithinPartitions(*order)
-        .limit(BROADCAST_POINT_BUDGET + 1)
-        .collect()
-    )
-    if len(rows) > BROADCAST_POINT_BUDGET:
+    idx = _collect_index(index, index_key, group_col)
+    if len(idx.ik) > BROADCAST_POINT_BUDGET:
         raise ValueError(
             f"knn_join_brute: index exceeds the broadcast budget of "
             f"{BROADCAST_POINT_BUDGET} points; use knn_join_rings"
         )
-    ik = pa.array([r["ik"] for r in rows], type=to_arrow_type(key_type))
-    ix, iy, iz = (
-        np.array([r[c] for r in rows], dtype=np.float64)
-        for c in ("ux", "uy", "uz")
+    return _brute_plan(queries, idx, k, query_key, group_col, max_distance2)
+
+
+def _brute_plan(
+    queries: DataFrame, idx: _BruteIndex, k: int, query_key: str,
+    group_col: str | None, max_distance2: float | None,
+) -> DataFrame:
+    """The brute arm's plan step: one Arrow UDF over the query side."""
+    from pyspark.sql.functions import arrow_udf
+    from pyspark.sql.types import (
+        ArrayType, DoubleType, StructField, StructType,
     )
+
+    ik, (ix, iy, iz) = idx.ik, idx.xyz
     rtype = ArrayType(
         StructType(
-            [StructField("ik", key_type), StructField("dist2", DoubleType())]
+            [StructField("ik", idx.key_type), StructField("dist2", DoubleType())]
         )
     )
 
@@ -279,14 +307,7 @@ def knn_join_brute(
                 ix, iy, iz, k, max_distance2,
             ))
     else:
-        # the sorted rows hold each group in one run: its values and
-        # run lengths give the group -> index slice map
-        runs = pc.value_counts(
-            pa.array([r["gg"] for r in rows], type=to_arrow_type(group_type))
-        )
-        groups = runs.field("values")
-        starts = np.zeros(len(runs) + 1, dtype=np.int64)
-        np.cumsum(runs.field("counts").to_numpy(), out=starts[1:])
+        groups, starts = idx.groups, idx.starts
         qcols.append(F.col(group_col))
 
         @arrow_udf(rtype)

@@ -24,7 +24,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .banded_join import HOT_BUCKET, SALT_G, banded_self_join
+from .banded_join import banded_self_join
 
 DIM = 64
 N_PLANES = 8
@@ -253,15 +253,11 @@ def _band_rows(emb: DataFrame, bands: list[np.ndarray]) -> DataFrame:
     ).localCheckpoint()
 
 
-def _lsh_pairs(
-    emb: DataFrame, n_bands: int, band_bits: int, hot_bucket_threshold: int,
-    salt_g: int,
-) -> DataFrame:
+def _lsh_pairs(emb: DataFrame, n_bands: int, band_bits: int) -> DataFrame:
     """(qid, nid): every directed pair sharing a band key, once."""
     slim = _band_rows(emb, _band_planes(n_bands, band_bits))
-    return banded_self_join(
-        slim, "vec_id", True, band_bits, n_bands, hot_bucket_threshold, salt_g
-    ).toDF("qid", "nid")
+    cand = banded_self_join(slim, "vec_id", True, band_bits, n_bands)
+    return cand.toDF("qid", "nid")
 
 
 def ann_lsh_topk(
@@ -269,8 +265,6 @@ def ann_lsh_topk(
     k: int,
     n_bands: int = N_BANDS,
     band_bits: int = BAND_BITS,
-    hot_bucket_threshold: int = HOT_BUCKET,
-    salt_g: int = SALT_G,
 ) -> DataFrame:
     """Approximate top-k via banded (OR-amplified) sign-LSH: a pair is
     a candidate when it collides in ANY of ``n_bands`` independent
@@ -280,15 +274,15 @@ def ann_lsh_topk(
 
     Scale shape mirrors the near-dup LSH join: candidate generation
     shuffles only (vec_id, band, bucket) rows through the skew-aware
-    salted self-join (hot buckets spread over ``salt_g`` reducers, see
-    ``banded_join.banded_self_join``, which emits each pair once); the
-    64-dim scoring components attach once per candidate pair.  Recall
-    floors are measured in tests/test_similarity_recall.py (>=0.9 on
-    clustered corpora; the uniform-random table's analytic limit is
-    documented there — no hash family beats brute force on data with
-    no structure).
+    salted self-join (hot buckets spread over ``banded_join.SALT_G``
+    reducers, see ``banded_join.banded_self_join``, which emits each
+    pair once); the 64-dim scoring components attach once per candidate
+    pair.  Recall floors are measured in tests/test_similarity_recall.py
+    (>=0.9 on clustered corpora; the uniform-random table's analytic
+    limit is documented there — no hash family beats brute force on data
+    with no structure).
     """
-    cand = _lsh_pairs(emb, n_bands, band_bits, hot_bucket_threshold, salt_g)
+    cand = _lsh_pairs(emb, n_bands, band_bits)
     return _top_k(_with_components(cand, emb), k)
 
 
@@ -306,8 +300,6 @@ def embed_near_dup(
     threshold: float = 0.92,
     n_bands: int = N_BANDS,
     band_bits: int = BAND_BITS,
-    hot_bucket_threshold: int = HOT_BUCKET,
-    salt_g: int = SALT_G,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate grouping (the embedding-space
     twin of ``textops.near_dup_pairs``): candidates from the banded
@@ -320,12 +312,12 @@ def embed_near_dup(
     ones a dedup pass would drop (root survives).
 
     Scale shape: the candidates and scoring of ``ann_lsh_topk`` (hot
-    buckets of boilerplate embeddings spread over ``salt_g`` reducers),
-    then one map-side-combinable min/count agg on vec_id.  No cross
-    join at any width; candidate volume is governed by the LSH family,
-    not n^2.
+    buckets of boilerplate embeddings spread over ``banded_join.SALT_G``
+    reducers), then one map-side-combinable min/count agg on vec_id.  No
+    cross join at any width; candidate volume is governed by the LSH
+    family, not n^2.
     """
-    cand = _lsh_pairs(emb, n_bands, band_bits, hot_bucket_threshold, salt_g)
+    cand = _lsh_pairs(emb, n_bands, band_bits)
     nbrs = (
         _with_components(cand, emb)
         .withColumn("cosine", _cosine())

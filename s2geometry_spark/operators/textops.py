@@ -11,7 +11,8 @@ Scale notes: all operators are single-pass scans + one hash-key
 aggregation/join; minhash banding converts O(n^2) near-dup search into
 an equi-join on band keys (the standard shingle->minhash->band->bucket
 pipeline); skewed bucket keys (boilerplate docs) are bounded by the
-hot-bucket salting of banded_join.banded_self_join.
+hot-bucket salting of banded_join.banded_self_join, which adaptive
+execution drops at run time when no bucket is hot.
 """
 
 from __future__ import annotations
@@ -21,7 +22,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..sources.read import spread_scan
-from .banded_join import HOT_BUCKET, SALT_G, banded_self_join
+from .banded_join import banded_self_join
 
 STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "on")
 
@@ -499,12 +500,7 @@ def doc_band_rows(
     return _stack_bands(banded, *extra)
 
 
-def near_dup_pairs(
-    docs: DataFrame,
-    with_mutants: bool = True,
-    salt_g: int = SALT_G,
-    hot_bucket_threshold: int = HOT_BUCKET,
-) -> DataFrame:
+def near_dup_pairs(docs: DataFrame, with_mutants: bool = True) -> DataFrame:
     """MinHash-LSH near-duplicate candidate pairs, verified by exact
     shingle Jaccard >= 0.5.
 
@@ -514,11 +510,11 @@ def near_dup_pairs(
     pigeonhole filter — no pair-volume dedup shuffle) and the two
     shingle sets attach once for the verification step.  Salting is
     skew-AWARE (``banded_join.banded_self_join``): only rows in hot
-    buckets (> ``hot_bucket_threshold`` members — boilerplate corpora
+    buckets (> ``banded_join.HOT_BUCKET`` members — boilerplate corpora
     where thousands of docs share every band) pay the partner-group
     replication, so a hot bucket's n^2 candidate pairs land on
-    ``salt_g`` partitions instead of one; cold buckets (the common
-    case) join unsalted.
+    ``banded_join.SALT_G`` partitions instead of one; cold buckets (the
+    common case) join unsalted.
 
     ``with_mutants`` unions a deterministic mutated copy of each doc
     (id -> -id - 1, text + marker suffix) so the pipeline provably
@@ -534,11 +530,9 @@ def near_dup_pairs(
         )
         base = base.unionByName(mut)
 
-    # materialized once: the skew gate and both join sides read it
+    # materialized once: the hot-bucket count and both join sides read it
     bands = doc_band_rows(base, with_allb=True).localCheckpoint()
-    cand = banded_self_join(
-        bands, "doc_id", False, 32, LSH_BANDS, hot_bucket_threshold, salt_g
-    )
+    cand = banded_self_join(bands, "doc_id", False, 32, LSH_BANDS)
     return _jaccard_verified(cand, base)
 
 

@@ -51,3 +51,18 @@ def shuffle_join_rows(spark):
             spark.conf.set(conf, saved)
 
     return run
+
+
+@pytest.fixture
+def final_plan():
+    """Run an action on a frame and return its ``== Final Plan ==``:
+    the plan adaptive execution actually ran, not the one it started
+    from."""
+
+    def run(df):
+        df.collect()
+        aqe = df._jdf.queryExecution().executedPlan()
+        assert aqe.isFinalPlan()
+        return aqe.executedPlan().toString()
+
+    return run

@@ -1,7 +1,7 @@
 """Hot-bucket LSH skew for the embedding paths: a boilerplate corpus
 (hundreds of identical embeddings sharing every sign band) must engage
 the partner-group salting, spread the hot bucket's pair volume over
-``salt_g`` reducer keys, and produce the exact same pair set as the
+``SALT_G`` reducer keys, and produce the exact same pair set as the
 unsalted join.  The embedding and text near-dup families share one
 band self-join, ``banded_join.banded_self_join``: the embedding paths
 call it directed, ``textops.near_dup_pairs`` undirected."""
@@ -39,14 +39,14 @@ def _emb_df(spark, n_same: int, n_rand: int):
 
 
 def test_hot_bucket_salting_preserves_pair_set(spark):
-    """Salted (salt_g=8) and unsalted (threshold so high nothing is
+    """Salted (threshold 16) and unsalted (threshold so high nothing is
     hot) candidate generation produce identical directed pair sets on
     a corpus with one planted hot bucket."""
     emb = _emb_df(spark, n_same=120, n_rand=40)
     bands = SIM._band_planes(SIM.N_BANDS, SIM.BAND_BITS)
     slim = SIM._band_rows(emb, bands)
-    salted = _cand(slim, hot_bucket_threshold=16, salt_g=8)
-    unsalted = _cand(slim, hot_bucket_threshold=10**9, salt_g=8)
+    salted = _cand(slim, hot_bucket_threshold=16)
+    unsalted = _cand(slim, hot_bucket_threshold=10**9)
     got = sorted(tuple(r) for r in salted.collect())
     want = sorted(tuple(r) for r in unsalted.collect())
     assert got == want
@@ -68,7 +68,7 @@ def test_directed_and_undirected_modes_agree(spark):
             rows = [
                 tuple(r)
                 for r in _cand(
-                    slim, directed, hot_bucket_threshold=threshold, salt_g=8
+                    slim, directed, hot_bucket_threshold=threshold
                 ).collect()
             ]
             assert len(rows) == len(set(rows)), (directed, threshold)
@@ -87,7 +87,7 @@ def test_hot_bucket_pairs_spread_over_salt_groups(spark):
     i.e. the pair volume lands on salt_g reducer keys instead of one.
     Verified from the data side: partner-group keys g of the nid side
     cover all salt_g groups for the hot block."""
-    salt_g = 8
+    salt_g = BJ.SALT_G
     emb = _emb_df(spark, n_same=120, n_rand=10)
     bands = SIM._band_planes(SIM.N_BANDS, SIM.BAND_BITS)
     slim = SIM._band_rows(emb, bands).withColumn(
@@ -105,22 +105,28 @@ def test_hot_bucket_pairs_spread_over_salt_groups(spark):
 
 
 def test_ann_and_near_dup_complete_on_boilerplate(spark):
-    """End-to-end: both gated queries complete on the skewed corpus and
-    agree between salt_g=1 and salt_g=8."""
+    """End-to-end: both gated queries run their hot branch on the
+    skewed corpus (the 150-clone block is hot at the product
+    threshold) and return the DuckDB oracle's rows."""
+    import duckdb
+
     emb = _emb_df(spark, n_same=150, n_rand=30)
-    for fn, kw in (
-        (SIM.ann_lsh_topk, dict(k=3)),
-        (SIM.embed_near_dup, dict(threshold=0.92)),
+    slim = SIM._band_rows(emb, SIM._band_planes(SIM.N_BANDS, SIM.BAND_BITS))
+    assert BJ.hot_buckets(slim, BJ.HOT_BUCKET).count() > 0
+    con = duckdb.connect()
+    con.register("emb_pdf", emb.toPandas())
+    con.execute(
+        "CREATE TABLE embeddings AS SELECT vec_id, "
+        "CAST(embedding AS FLOAT[]) AS embedding FROM emb_pdf"
+    )
+    for got, sql in (
+        (SIM.ann_lsh_topk(emb, 3), SIM.ann_lsh_topk_sql(3)),
+        (SIM.embed_near_dup(emb, 0.92), SIM.embed_near_dup_sql(0.92)),
     ):
-        got1 = sorted(
-            tuple(r) for r in fn(emb, salt_g=1, **kw).collect()
-        )
-        got8 = sorted(
-            tuple(r) for r in fn(emb, hot_bucket_threshold=16, salt_g=8, **kw).collect()
-        )
-        assert got1 == got8
+        want = con.execute(sql).fetchall()
+        assert sorted(map(tuple, got.collect())) == sorted(want)
     # the clone block folds to one root under near-dup
-    nd = SIM.embed_near_dup(emb, 0.92, hot_bucket_threshold=16).collect()
+    nd = SIM.embed_near_dup(emb, 0.92).collect()
     roots = {r["dup_root"] for r in nd if r["vec_id"] < 150}
     assert roots == {0}
 
@@ -155,22 +161,38 @@ def test_uniform_buckets_stay_unsalted(spark):
     assert BJ.hot_buckets(hot_slim, hot_bucket_threshold=16).count() > 0
 
 
-def test_unskewed_corpus_compiles_one_branch_plan(spark):
-    """With zero hot buckets the eager emptiness check must return the
-    plain one-branch join — no partner-group explode, no hot+cold
-    union — so whole-stage codegen never compiles the salted half of
-    the plan (the sf1 soak measured that compile at ~25s of a 37s cold
-    run).  A planted boilerplate block must still produce the salted
-    two-branch plan."""
+def test_unskewed_corpus_compiles_one_branch_plan(spark, final_plan):
+    """With zero hot buckets adaptive execution must run the plain
+    one-branch join — no partner-group explode, no hot+cold union — so
+    whole-stage codegen never compiles the salted half of the plan (the
+    sf1 soak measured that compile at ~25s of a 37s cold run).  A
+    planted boilerplate block must still run the salted two-branch
+    plan."""
     emb = _emb_df(spark, n_same=1, n_rand=60)
     bands = SIM._band_planes(SIM.N_BANDS, SIM.BAND_BITS)
     slim = SIM._band_rows(emb, bands)
-    cand = _cand(slim, hot_bucket_threshold=16)
-    plan = cand._jdf.queryExecution().executedPlan().toString()
+    plan = final_plan(_cand(slim, hot_bucket_threshold=16))
     assert "explode" not in plan and "Union" not in plan
 
     hot_emb = _emb_df(spark, n_same=120, n_rand=10)
     hot_slim = SIM._band_rows(hot_emb, bands)
-    hot_cand = _cand(hot_slim, hot_bucket_threshold=16)
-    hot_plan = hot_cand._jdf.queryExecution().executedPlan().toString()
+    hot_plan = final_plan(_cand(hot_slim, hot_bucket_threshold=16))
     assert "explode" in hot_plan and "Union" in hot_plan
+
+
+@pytest.mark.parametrize("n_same", [1, 120])
+def test_building_the_join_starts_no_spark_job(spark, n_same):
+    """Building the candidate join over checkpointed band rows runs
+    nothing, on a cold and on a hot corpus: the branch choice is left
+    to adaptive execution, not made by an eager job."""
+    emb = _emb_df(spark, n_same=n_same, n_rand=40)
+    slim = SIM._band_rows(emb, SIM._band_planes(SIM.N_BANDS, SIM.BAND_BITS))
+    sc = spark.sparkContext
+    group = f"build-banded-self-join-{n_same}"
+    sc.setJobGroup(group, group)
+    try:
+        _cand(slim, hot_bucket_threshold=16)
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(jobs) == []

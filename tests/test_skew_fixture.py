@@ -97,7 +97,7 @@ def test_embedding_hot_bucket_engages_and_matches(spark, skew_dir):
     assert hot_n >= SIM.N_BANDS  # one hot bucket per band
     def cand(threshold):
         return BJ.banded_self_join(
-            slim, "vec_id", True, SIM.BAND_BITS, SIM.N_BANDS, threshold, 8
+            slim, "vec_id", True, SIM.BAND_BITS, SIM.N_BANDS, threshold
         )
 
     salted = cand(BJ.HOT_BUCKET)
@@ -110,18 +110,24 @@ def test_embedding_hot_bucket_engages_and_matches(spark, skew_dir):
 
 
 def test_doc_hot_bucket_salting_matches(spark, skew_dir):
+    from s2geometry_spark.operators import banded_join as BJ
     from s2geometry_spark.operators import textops as TX
 
     docs = spark.read.parquet(f"{skew_dir}/documents.parquet")
-    salted = TX.near_dup_pairs(
-        docs, with_mutants=False, salt_g=8, hot_bucket_threshold=16
-    )
-    unsalted = TX.near_dup_pairs(
-        docs, with_mutants=False, hot_bucket_threshold=2**31
-    )
-    got = sorted(tuple(r) for r in salted.collect())
-    want = sorted(tuple(r) for r in unsalted.collect())
-    assert got == want
+    slim = TX.doc_band_rows(docs, with_allb=True).localCheckpoint()
+    # the boilerplate block is hot at 16, so the salted branch runs
+    assert BJ.hot_buckets(slim, 16).count() > 0
+
+    def cand(threshold):
+        return sorted(
+            tuple(r)
+            for r in BJ.banded_self_join(
+                slim, "doc_id", False, 32, TX.LSH_BANDS, threshold
+            ).collect()
+        )
+
+    got = cand(16)
+    assert got == cand(10**9)
     # the boilerplate block is all mutual near-dups
-    ids = {a for a, *_ in got} | {b for _, b, *_ in got}
+    ids = {a for a, _ in got} | {b for _, b in got}
     assert set(range(SIZES["hot_docs"])) <= ids

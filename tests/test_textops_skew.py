@@ -8,6 +8,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from s2geometry_spark.operators import banded_join as BJ
 from s2geometry_spark.operators import textops as TX
 
 
@@ -31,6 +32,8 @@ def test_boilerplate_corpus_completes(spark):
 
 
 def test_salting_preserves_output(spark):
+    """The doc band self-join returns one pair set salted (threshold
+    16, where this corpus has hot buckets) and unsalted."""
     rows = [
         (i, f"document about topic {i % 7} with shared phrasing and filler {i}")
         for i in range(80)
@@ -38,20 +41,25 @@ def test_salting_preserves_output(spark):
     docs = spark.createDataFrame(
         pd.DataFrame(rows, columns=["doc_id", "text"])
     )
-    got1 = sorted(
-        tuple(r) for r in TX.near_dup_pairs(docs, salt_g=1).collect()
-    )
-    got8 = sorted(
-        tuple(r) for r in TX.near_dup_pairs(docs, salt_g=8).collect()
-    )
-    assert got1 == got8
+    slim = TX.doc_band_rows(docs, with_allb=True).localCheckpoint()
+    assert BJ.hot_buckets(slim, 16).count() > 0
+
+    def cand(threshold):
+        return sorted(
+            tuple(r)
+            for r in BJ.banded_self_join(
+                slim, "doc_id", False, 32, TX.LSH_BANDS, threshold
+            ).collect()
+        )
+
+    assert cand(16) == cand(10**9)
 
 
-def test_unskewed_corpus_compiles_one_branch_plan(spark):
-    """Twin of the similarity test: with zero hot buckets the eager
-    emptiness check returns the one-branch candidate plan (no
-    partner-group explode of band rows), so codegen never compiles the
-    salted half; a boilerplate block still takes the salted plan."""
+def test_unskewed_corpus_compiles_one_branch_plan(spark, final_plan):
+    """Twin of the similarity test: with zero hot buckets adaptive
+    execution runs the one-branch candidate plan (no partner-group
+    explode of band rows, no hot+cold union), so codegen never compiles
+    the salted half; a boilerplate block still runs the salted plan."""
     rows = [
         (i, f"unique document number {i} with its own words {i * i}")
         for i in range(60)
@@ -59,17 +67,16 @@ def test_unskewed_corpus_compiles_one_branch_plan(spark):
     docs = spark.createDataFrame(
         pd.DataFrame(rows, columns=["doc_id", "text"])
     )
-    cand = TX.near_dup_pairs(docs, with_mutants=False)
-    plan = cand._jdf.queryExecution().executedPlan().toString()
-    assert "explode" not in plan
+    plan = final_plan(TX.near_dup_pairs(docs, with_mutants=False))
+    assert "explode" not in plan and "Union" not in plan
 
+    # the unique docs keep the cold branch non-empty, so both run
     hot_rows = [
         (i, "the same boilerplate paragraph repeated " * 4)
         for i in range(200)
-    ]
+    ] + [(200 + i, text) for i, text in rows]
     hot_docs = spark.createDataFrame(
         pd.DataFrame(hot_rows, columns=["doc_id", "text"])
     )
-    hot_cand = TX.near_dup_pairs(hot_docs, with_mutants=False)
-    hot_plan = hot_cand._jdf.queryExecution().executedPlan().toString()
-    assert "explode" in hot_plan
+    hot_plan = final_plan(TX.near_dup_pairs(hot_docs, with_mutants=False))
+    assert "explode" in hot_plan and "Union" in hot_plan
