@@ -3,6 +3,11 @@
 Every UDF is vectorized batch-at-a-time (Arrow transfer, numpy body) —
 never per-row Python (north rule).  Raw cell-id bits are stored in
 LongType; the kernels view them as uint64.
+
+The region refines (loop parity, near-loop, near-polyline and the
+shape index's cell parity) share one per-region batch split,
+``split_by_region``: rows are grouped by region key inside the Arrow
+batch and each group runs one vectorized kernel call.
 """
 
 from __future__ import annotations
@@ -70,6 +75,29 @@ def cell_common_ancestor_level(a: pd.Series, b: pd.Series) -> pd.Series:
     )
 
 
+def split_by_region(keys, xyz, kernel) -> pd.Series:
+    """The per-region batch split behind every region refine: group an
+    Arrow batch's rows by region key (one key Series, or several
+    compared as a tuple), call ``kernel(key, px, py, pz)`` once per
+    group on that group's coordinates, and scatter its boolean answers
+    back into batch order (a scalar answer fills the whole group)."""
+    ks = [k.to_numpy() for k in keys]
+    px, py, pz = (c.to_numpy() for c in xyz)
+    out = np.zeros(len(px), dtype=bool)
+    order = np.lexsort(ks[::-1])
+    srt = [k[order] for k in ks]
+    new = np.zeros(len(order), dtype=bool)
+    new[:1] = True
+    for k in srt:
+        new[1:] |= k[1:] != k[:-1]
+    bounds = np.r_[np.flatnonzero(new), len(order)]
+    for si, ei in zip(bounds[:-1], bounds[1:]):
+        idx = order[si:ei]
+        key = tuple(k[si] for k in srt) if len(srt) > 1 else srt[0][si]
+        out[idx] = kernel(key, px[idx], py[idx], pz[idx])
+    return pd.Series(out)
+
+
 def loop_parity_udf(loops_by_id: dict):
     """UDF factory: crossing-number parity of candidate (region, point)
     rows against the region's loop (kernels.edges.crossing_parity_fast,
@@ -87,80 +115,43 @@ def loop_parity_udf(loops_by_id: dict):
 
     from ..kernels import edges as E
 
+    def parity(rid, px, py, pz):
+        edges, origin_inside = loops_by_id[rid]
+        return E.crossing_parity_fast_edges(edges, px, py, pz) ^ int(origin_inside)
+
     @pandas_udf(BooleanType())
     def _contains(rid: pd.Series, x: pd.Series, y: pd.Series, z: pd.Series) -> pd.Series:
-        rids = rid.to_numpy()
-        px, py, pz = x.to_numpy(), y.to_numpy(), z.to_numpy()
-        out = np.zeros(len(rids), dtype=bool)
-        # vectorize per region group within the Arrow batch
-        order = np.argsort(rids, kind="stable")
-        sorted_rids = rids[order]
-        starts = np.flatnonzero(
-            np.r_[True, sorted_rids[1:] != sorted_rids[:-1]]
-        )
-        bounds = np.r_[starts, len(sorted_rids)]
-        for si, ei in zip(bounds[:-1], bounds[1:]):
-            idx = order[si:ei]
-            region_edges, origin_inside = loops_by_id[sorted_rids[si]]
-            par = E.crossing_parity_fast_edges(
-                region_edges, px[idx], py[idx], pz[idx]
-            )
-            out[idx] = (par ^ int(origin_inside)).astype(bool)
-        return pd.Series(out)
+        return split_by_region([rid], (x, y, z), parity)
 
     return _contains
 
 
 def loop_near_udf(loops_by_id: dict, radius_chord2: float):
     """UDF factory for the within-distance ("buffered") join refine:
-    true iff the point is inside the loop (crossing parity) OR within
-    `radius_chord2` (squared chord) of some boundary edge
-    (S2ShapeIndexBufferedRegion semantics — distance predicate, no
+    true iff the point's distance to the loop region is within
+    `radius_chord2` (squared chord): 0 inside (crossing parity), else
+    the min boundary edge distance (kernels.polyline.region_distance2;
+    S2ShapeIndexBufferedRegion semantics — distance predicate, no
     buffer geometry materialized, S2Region/S2ShapeIndexBufferedRegion.cs).
 
     Rows must carry unit coordinates; ``loops_by_id``:
     {region_id: (verts, origin_inside)}."""
     from pyspark.sql.types import BooleanType
 
-    from ..kernels import edges as E
     from ..kernels import polyline as PL
 
-    # hoist the per-edge endpoint tuples out of the UDF: rebuilding them
-    # inside costs O(vertices) Python-tuple churn per region per Arrow
-    # batch; the values (float() of the same doubles) are bit-identical
-    edge_tuples = {
-        rid: [
-            (
-                tuple(float(v) for v in verts[k]),
-                tuple(float(v) for v in verts[(k + 1) % len(verts)]),
-            )
-            for k in range(len(verts))
-        ]
-        for rid, (verts, _oi) in loops_by_id.items()
+    # edge tuples built once here, not per region per Arrow batch
+    regions = {
+        rid: (PL.chain_edges(verts, closed=True), oi)
+        for rid, (verts, oi) in loops_by_id.items()
     }
+
+    def near(rid, px, py, pz):
+        return PL.region_distance2(px, py, pz, *regions[rid]) <= radius_chord2
 
     @pandas_udf(BooleanType())
     def _near(rid: pd.Series, ux: pd.Series, uy: pd.Series, uz: pd.Series) -> pd.Series:
-        rids = rid.to_numpy()
-        px, py, pz = ux.to_numpy(), uy.to_numpy(), uz.to_numpy()
-        out = np.zeros(len(rids), dtype=bool)
-        order = np.argsort(rids, kind="stable")
-        srt = rids[order]
-        starts = np.flatnonzero(np.r_[True, srt[1:] != srt[:-1]])
-        bounds = np.r_[starts, len(srt)]
-        for si, ei in zip(bounds[:-1], bounds[1:]):
-            idx = order[si:ei]
-            verts, origin_inside = loops_by_id[srt[si]]
-            inside = (
-                E.crossing_parity_fast(verts, px[idx], py[idx], pz[idx])
-                ^ int(origin_inside)
-            ).astype(bool)
-            min_d2 = np.full(len(idx), np.inf)
-            for a, b in edge_tuples[srt[si]]:
-                d2 = PL.edge_distance2_batch(px[idx], py[idx], pz[idx], a, b)
-                min_d2 = np.minimum(min_d2, d2)
-            out[idx] = inside | (min_d2 <= radius_chord2)
-        return pd.Series(out)
+        return split_by_region([rid], (ux, uy, uz), near)
 
     return _near
 
@@ -177,36 +168,14 @@ def polyline_near_udf(lines_by_id: dict, radius_chord2: float):
 
     from ..kernels import polyline as PL
 
-    # hoisted per-edge endpoint tuples (see loop_near_udf): values are
-    # bit-identical, built once instead of per region per Arrow batch
-    edge_tuples = {
-        lid: [
-            (
-                tuple(float(v) for v in verts[k]),
-                tuple(float(v) for v in verts[k + 1]),
-            )
-            for k in range(len(verts) - 1)
-        ]
-        for lid, verts in lines_by_id.items()
-    }
+    lines = {lid: PL.chain_edges(verts) for lid, verts in lines_by_id.items()}
+
+    def near(lid, px, py, pz):
+        return PL.edges_min_distance2(px, py, pz, lines[lid]) <= radius_chord2
 
     @pandas_udf(BooleanType())
     def _near(lid: pd.Series, ux: pd.Series, uy: pd.Series, uz: pd.Series) -> pd.Series:
-        lids = lid.to_numpy()
-        px, py, pz = ux.to_numpy(), uy.to_numpy(), uz.to_numpy()
-        out = np.zeros(len(lids), dtype=bool)
-        order = np.argsort(lids, kind="stable")
-        srt = lids[order]
-        starts = np.flatnonzero(np.r_[True, srt[1:] != srt[:-1]])
-        bounds = np.r_[starts, len(srt)]
-        for si, ei in zip(bounds[:-1], bounds[1:]):
-            idx = order[si:ei]
-            min_d2 = np.full(len(idx), np.inf)
-            for a, b in edge_tuples[srt[si]]:
-                d2 = PL.edge_distance2_batch(px[idx], py[idx], pz[idx], a, b)
-                min_d2 = np.minimum(min_d2, d2)
-            out[idx] = min_d2 <= radius_chord2
-        return pd.Series(out)
+        return split_by_region([lid], (ux, uy, uz), near)
 
     return _near
 

@@ -37,7 +37,7 @@ import math
 import numpy as np
 
 from . import edges as E
-from .polyline import edge_distance2_batch
+from .polyline import chain_edges, edges_min_distance2, region_distance2
 
 
 def _unit(v):
@@ -290,12 +290,11 @@ def buffered_contains(verts: np.ndarray, radius: float, points: np.ndarray,
                       origin_inside: bool) -> np.ndarray:
     """Reference predicate for tests: inside loop OR within radius of
     its boundary (unit points)."""
-    px, py, pz = points[:, 0], points[:, 1], points[:, 2]
-    inside = (
-        E.crossing_parity_fast(verts, px, py, pz) ^ int(origin_inside)
-    ).astype(bool)
-    min_d2 = _loop_min_dist2(verts, points)
-    return inside | (min_d2 <= _chord2(radius))
+    d2 = region_distance2(
+        points[:, 0], points[:, 1], points[:, 2],
+        chain_edges(verts, closed=True), origin_inside,
+    )
+    return d2 <= _chord2(radius)
 
 
 # ---------------------------------------------------------------------
@@ -376,15 +375,7 @@ def _doubled_path(verts: np.ndarray) -> np.ndarray:
 
 
 def _polyline_min_dist2(verts: np.ndarray, P: np.ndarray) -> np.ndarray:
-    m = len(verts)
-    min_d2 = np.full(len(P), np.inf)
-    for k in range(m - 1):
-        a = tuple(float(x) for x in verts[k])
-        b = tuple(float(x) for x in verts[k + 1])
-        min_d2 = np.minimum(
-            min_d2, edge_distance2_batch(P[:, 0], P[:, 1], P[:, 2], a, b)
-        )
-    return min_d2
+    return edges_min_distance2(P[:, 0], P[:, 1], P[:, 2], chain_edges(verts))
 
 
 def _flat_rect_contains(verts: np.ndarray, radius: float,
@@ -644,17 +635,11 @@ def _rings_contain(rings: list, P: np.ndarray) -> np.ndarray:
 def _loop_min_dist2(verts: np.ndarray, P: np.ndarray) -> np.ndarray:
     """Min chord-squared distance from each probe to a CLOSED loop's
     boundary edges."""
-    n = len(verts)
-    min_d2 = np.full(len(P), np.inf)
-    for k in range(n):
-        a = tuple(float(x) for x in verts[k])
-        b = tuple(float(x) for x in verts[(k + 1) % n])
-        min_d2 = np.minimum(
-            min_d2, edge_distance2_batch(P[:, 0], P[:, 1], P[:, 2], a, b)
-        )
-    return min_d2
+    return _rings_min_dist2([verts], P)
 
 
+# unclamped on purpose: a negative radius maps to +r, which probe_gate's
+# classify(radius - band) relies on (geom.clamped_chord2 would give 0)
 def _chord2(radius: float) -> float:
     s = math.sin(0.5 * radius)
     return 4 * s * s
@@ -739,18 +724,8 @@ def probe_gate(
 
 
 def _rings_min_dist2(rings_in: list, P: np.ndarray) -> np.ndarray:
-    min_d2 = np.full(len(P), np.inf)
-    for ring in rings_in:
-        ring = np.asarray(ring)
-        n = len(ring)
-        for k in range(n):
-            a = tuple(float(x) for x in ring[k])
-            b = tuple(float(x) for x in ring[(k + 1) % n])
-            min_d2 = np.minimum(
-                min_d2,
-                edge_distance2_batch(P[:, 0], P[:, 1], P[:, 2], a, b),
-            )
-    return min_d2
+    edges = [e for ring in rings_in for e in chain_edges(ring, closed=True)]
+    return edges_min_distance2(P[:, 0], P[:, 1], P[:, 2], edges)
 
 
 def buffer_polygon_rings(

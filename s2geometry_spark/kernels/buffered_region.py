@@ -25,12 +25,7 @@ from .cell_dist import (
     point_to_edges_distance2,
     points_to_edges_min,
 )
-from .geom import Cap, Cell, Region
-
-
-def _chord2(radians: float) -> float:
-    s = math.sin(0.5 * min(max(radians, 0.0), math.pi))
-    return min(4.0, 4.0 * s * s)
+from .geom import Cap, Cell, Region, clamped_chord2
 
 
 def _angle(chord2: float) -> float:
@@ -46,7 +41,7 @@ class BufferedLoopRegion(Region):
         self.loop = loop
         self.radius_rad = float(radius_rad)
         # radius.Successor() semantics: accept distance == radius
-        self._radius2 = _chord2(self.radius_rad) * (1 + 4e-16) + 5e-324
+        self._radius2 = clamped_chord2(self.radius_rad) * (1 + 4e-16) + 5e-324
         verts = np.asarray(loop.verts, dtype=float)
         self._av = verts
         self._bv = np.roll(verts, -1, axis=0)
@@ -78,7 +73,7 @@ class BufferedLoopRegion(Region):
         base = self.loop.get_cap_bound()
         return Cap(
             base.center,
-            _chord2(_angle(base.radius2) + self.radius_rad),
+            clamped_chord2(_angle(base.radius2) + self.radius_rad),
         )
 
     def contains_point(self, p) -> bool:
@@ -104,7 +99,7 @@ class BufferedLoopRegion(Region):
                     tuple(map(float, center)), self._av, self._bv
                 ).min()
             )
-        return d2 <= _chord2(self.radius_rad - cap_ang) * (1 + 4e-16)
+        return d2 <= clamped_chord2(self.radius_rad - cap_ang) * (1 + 4e-16)
 
     def may_intersect_cell(self, cell: Cell) -> bool:
         return self._dist2_to_cell(cell) <= self._radius2
@@ -135,7 +130,7 @@ class BufferedPolylineRegion(Region):
         assert verts.ndim == 2 and verts.shape[1] == 3 and len(verts) >= 2
         self.verts = verts
         self.radius_rad = float(radius_rad)
-        self._radius2 = _chord2(self.radius_rad) * (1 + 4e-16) + 5e-324
+        self._radius2 = clamped_chord2(self.radius_rad) * (1 + 4e-16) + 5e-324
         self._av = verts[:-1]
         self._bv = verts[1:]
         # per-edge conservative rect bounds (open chain)
@@ -198,7 +193,7 @@ class BufferedPolylineRegion(Region):
         ang = 2.0 * math.asin(0.5 * math.sqrt(float(d2.max())))
         return Cap(
             tuple(float(c) for c in center),
-            _chord2(ang + self.radius_rad),
+            clamped_chord2(ang + self.radius_rad),
         )
 
     def contains_point(self, p) -> bool:
@@ -211,7 +206,7 @@ class BufferedPolylineRegion(Region):
             return False
         center = cell.center_raw()
         d2 = self._dist2_to_point(tuple(map(float, center)))
-        return d2 <= _chord2(self.radius_rad - cap_ang) * (1 + 4e-16)
+        return d2 <= clamped_chord2(self.radius_rad - cap_ang) * (1 + 4e-16)
 
     def may_intersect_cell(self, cell: Cell) -> bool:
         return self._dist2_to_cell(cell) <= self._radius2

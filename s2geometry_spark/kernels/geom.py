@@ -77,6 +77,13 @@ def chord_from_radians(radians: float) -> float:
     return min(4.0, 4 * s * s)
 
 
+def clamped_chord2(radians: float) -> float:
+    """4*sin^2(r/2) with r clamped to [0, pi]: the squared-chord bound of
+    a radius (spatial_join.near_chord2 validates, then calls this)."""
+    s = math.sin(0.5 * min(max(radians, 0.0), PI))
+    return min(4.0, 4.0 * s * s)
+
+
 def chord_to_radians(length2: float) -> float:
     if length2 < 0:
         return -1.0

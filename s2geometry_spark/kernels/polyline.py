@@ -12,7 +12,12 @@ Reference semantics:
   Project / IsOnRight: S2Region/S2Polyline.cs:211-340
 
 Scalar (per polyline, small vertex counts) plus a vectorized
-point-batch-to-edge distance used by joins.
+point-batch-to-edge distance.  Every near, closest and buffer refine
+folds it through ``edges_min_distance2`` (the min over a shape's
+edges, S2ClosestEdgeQueryBase's AlwaysUpdateMinDistance loop, which
+S2ShapeIndexBufferedRegion reuses) or ``region_distance2`` (the same
+fold with the VisitContainingShapes interior shortcut); no other
+module calls the per-edge kernel.
 """
 
 from __future__ import annotations
@@ -116,6 +121,51 @@ def edge_distance2_batch(
         qr = 1 - np.sqrt((cxx * cxx + cxy * cxy + cxz * cxz) / c2)
         d_int = (x_dot_c * x_dot_c / c2) + qr * qr
     return np.where(near & interior, d_int, np.minimum(xa2, xb2))
+
+
+def float_edges(edges) -> list:
+    """An edge list [(a, b), ...] with every endpoint a tuple of Python
+    floats: the form ``edges_min_distance2`` takes, prepared once per
+    shape (the values are the same doubles)."""
+    return [(tuple(map(float, a)), tuple(map(float, b))) for a, b in edges]
+
+
+def chain_edges(verts, closed: bool = False) -> list:
+    """Float-tuple edges of a vertex chain; ``closed`` adds the edge from
+    the last vertex back to the first (a loop ring)."""
+    vt = [tuple(map(float, v)) for v in verts]
+    return list(zip(vt, vt[1:] + vt[:1] if closed else vt[1:]))
+
+
+def edges_min_distance2(
+    px: np.ndarray, py: np.ndarray, pz: np.ndarray, edges
+) -> np.ndarray:
+    """Min squared-chord distance from each point of a batch to an edge
+    list (``float_edges`` / ``chain_edges`` form); +inf with no edges.
+    ``np.minimum`` is exact, so the edge order does not change a bit."""
+    d2 = np.full(len(px), np.inf)
+    for a, b in edges:
+        np.minimum(d2, edge_distance2_batch(px, py, pz, a, b), out=d2)
+    return d2
+
+
+def region_distance2(
+    px: np.ndarray, py: np.ndarray, pz: np.ndarray, edges, origin_inside
+) -> np.ndarray:
+    """Squared-chord distance from each point to a region (boundary
+    edges plus interior): exactly 0.0 where the crossing parity
+    (``edges.crossing_parity_fast_edges`` XOR ``origin_inside``) says
+    the point is inside, else the edge fold, which only the exterior
+    rows pay (S2ClosestEdgeQueryBase.cs:224-238 VisitContainingShapes).
+    ``edges`` may hold several rings (winding parity)."""
+    inside = (
+        E.crossing_parity_fast_edges(edges, px, py, pz) ^ int(origin_inside)
+    ).astype(bool)
+    d2 = np.zeros(len(px))
+    out = ~inside
+    if out.any():
+        d2[out] = edges_min_distance2(px[out], py[out], pz[out], edges)
+    return d2
 
 
 def edge_distance2_rows(

@@ -55,6 +55,12 @@ Scale notes (ring loop):
 - point distance arithmetic is plain JVM column math (whole-stage
   codegen, bit-identical to the DuckDB oracle's SQL); only the
   neighbor-ring expansion and the edge distance are Arrow pUDFs.
+
+The broadcast closest-shape arms (``closest_polyline``,
+``closest_polygon``) share one argmin-over-shapes pUDF,
+``_closest_shape``, over ``kernels.polyline.edges_min_distance2`` (the
+point-to-edges fold) and ``region_distance2`` (the fold with the
+interior shortcut); their edge tuples are built once on the driver.
 """
 
 from __future__ import annotations
@@ -73,6 +79,7 @@ from pyspark.sql.window import Window
 
 from ..constants import KMIN_WIDTH
 from ..functions import sparkfns as S
+from ..kernels import polyline as PL
 from ..operators.spatial_join import near_chord2, normalized_cols
 
 MIN_LEVEL_FLOOR = 1  # below this, fall back to cross join
@@ -271,6 +278,21 @@ def knn_join_brute(
     return _brute_plan(queries, idx, k, query_key, group_col, max_distance2)
 
 
+def _nested(counts, **fields) -> pa.ListArray:
+    """List-of-struct Arrow column: row i holds the next ``counts[i]``
+    entries of the field arrays (numpy or Arrow), in order.  A field
+    without nulls is typed non-nullable, so it also fits a Spark struct
+    field declared ``nullable=False``."""
+    offsets = np.zeros(len(counts) + 1, dtype=np.int32)
+    np.cumsum(counts, out=offsets[1:])
+    arrays = [pa.array(v) for v in fields.values()]
+    nb = pa.StructArray.from_arrays(arrays, fields=[
+        pa.field(n, a.type, nullable=a.null_count > 0)
+        for n, a in zip(fields, arrays)
+    ])
+    return pa.ListArray.from_arrays(pa.array(offsets), nb)
+
+
 def _brute_plan(
     queries: DataFrame, idx: _BruteIndex, k: int, query_key: str,
     group_col: str | None, max_distance2: float | None,
@@ -289,12 +311,7 @@ def _brute_plan(
     )
 
     def nested(counts, pos, d2):
-        offsets = np.zeros(len(counts) + 1, dtype=np.int32)
-        np.cumsum(counts, out=offsets[1:])
-        nb = pa.StructArray.from_arrays(
-            [ik.take(pa.array(pos)), pa.array(d2)], names=["ik", "dist2"]
-        )
-        return pa.ListArray.from_arrays(pa.array(offsets), nb)
+        return _nested(counts, ik=ik.take(pa.array(pos)), dist2=d2)
 
     qcols = [F.col("ux"), F.col("uy"), F.col("uz")]
     if group_col is None:
@@ -706,6 +723,50 @@ def _check_edge_budget(n_edges: int, what: str, distributed_arm: str) -> None:
         )
 
 
+def _closest_shape(
+    points: DataFrame, shapes: list, dist2, id_col: str
+) -> DataFrame:
+    """The broadcast closest-shape arm: one pUDF scores every Arrow
+    batch against each shape in id order (``dist2(px, py, pz, *args)``
+    for ``shapes`` = [(id, args)]) and keeps the argmin; the compare is
+    strict, so the smaller id wins ties.  Output (key, id_col, dist2)."""
+    from pyspark.sql.functions import pandas_udf
+    from pyspark.sql.types import (
+        DoubleType,
+        LongType,
+        StructField,
+        StructType,
+    )
+
+    @pandas_udf(
+        StructType(
+            [
+                StructField(id_col, LongType(), False),
+                StructField("dist2", DoubleType(), False),
+            ]
+        )
+    )
+    def _closest(ux: pd.Series, uy: pd.Series, uz: pd.Series) -> pd.DataFrame:
+        px, py, pz = ux.to_numpy(), uy.to_numpy(), uz.to_numpy()
+        best_d2 = np.full(len(px), np.inf)
+        best_id = np.full(len(px), -1, dtype=np.int64)
+        for sid, args in shapes:
+            d2 = dist2(px, py, pz, *args)
+            better = d2 < best_d2  # strict: earlier (smaller) id wins ties
+            best_d2 = np.where(better, d2, best_d2)
+            best_id = np.where(better, sid, best_id)
+        return pd.DataFrame({id_col: best_id, "dist2": best_d2})
+
+    out = normalized_cols(points).withColumn(
+        "best", _closest(F.col("ux"), F.col("uy"), F.col("uz"))
+    )
+    return out.select(
+        "key",
+        F.col(f"best.{id_col}").alias(id_col),
+        F.col("best.dist2").alias("dist2"),
+    )
+
+
 def closest_polyline(
     points: DataFrame,
     polylines: list,
@@ -719,50 +780,14 @@ def closest_polyline(
     ``polylines``: [(line_id, edges [(a, b), ...])].  Ties break by
     line_id (reference result order distance-then-shape-id).
     """
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
     lines = sorted(polylines, key=lambda t: t[0])
     _check_edge_budget(
         sum(len(e) for _, e in lines), "closest_polyline",
         "closest_edge_join",
     )
-
-    @pandas_udf(
-        StructType(
-            [
-                StructField("line_id", LongType(), False),
-                StructField("dist2", DoubleType(), False),
-            ]
-        )
-    )
-    def _closest(ux: pd.Series, uy: pd.Series, uz: pd.Series) -> pd.DataFrame:
-        from ..kernels import polyline as PL
-
-        px, py, pz = ux.to_numpy(), uy.to_numpy(), uz.to_numpy()
-        best_d2 = np.full(len(px), np.inf)
-        best_id = np.full(len(px), -1, dtype=np.int64)
-        for lid, edges in lines:
-            d2 = np.full(len(px), np.inf)
-            for a, b in edges:
-                d2 = np.minimum(d2, PL.edge_distance2_batch(px, py, pz, a, b))
-            better = d2 < best_d2  # strict: earlier (smaller) id wins ties
-            best_d2 = np.where(better, d2, best_d2)
-            best_id = np.where(better, lid, best_id)
-        return pd.DataFrame({"line_id": best_id, "dist2": best_d2})
-
-    out = normalized_cols(points).withColumn(
-        "best", _closest(F.col("ux"), F.col("uy"), F.col("uz"))
-    )
-    return out.select(
-        "key",
-        F.col("best.line_id").alias("line_id"),
-        F.col("best.dist2").alias("dist2"),
+    return _closest_shape(
+        points, [(lid, (PL.float_edges(e),)) for lid, e in lines],
+        PL.edges_min_distance2, "line_id",
     )
 
 
@@ -980,77 +1005,25 @@ def closest_polygon(
     (S2ClosestEdgeQueryBase.cs:224-238 VisitContainingShapes): a point
     inside an indexed polygon is at distance 0 immediately, so the
     crossing-parity containment test runs FIRST and only exterior
-    points pay the per-edge distance scan.  The dim-sized polygon side
-    broadcasts and evaluates vectorized (the resolved plan of
+    points pay the per-edge distance scan
+    (``kernels.polyline.region_distance2``).  The dim-sized polygon
+    side broadcasts and evaluates vectorized (the resolved plan of
     closest_polyline); at scale the same shortcut composes as the
     covering-term PIP join emitting dist2=0 rows before ring
     expansion.
 
     ``polygons``: [(region_id, Loop)].  Output (key, region_id, dist2)
     with ties broken by (dist2, region_id)."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
     polys = sorted(
-        (int(rid), np.asarray(lp.verts), bool(lp.origin_inside))
-        for rid, lp in polygons
+        ((int(rid), (PL.chain_edges(lp.verts, closed=True), lp.origin_inside))
+         for rid, lp in polygons),
+        key=lambda t: t[0],
     )
     _check_edge_budget(
-        sum(len(v) for _, v, _ in polys), "closest_polygon",
+        sum(len(e) for _, (e, _oi) in polys), "closest_polygon",
         "closest_edge_join + covering-term PIP dist2=0 rows",
     )
-
-    @pandas_udf(
-        StructType(
-            [
-                StructField("region_id", LongType(), False),
-                StructField("dist2", DoubleType(), False),
-            ]
-        )
-    )
-    def _closest(ux: pd.Series, uy: pd.Series, uz: pd.Series) -> pd.DataFrame:
-        from ..kernels import edges as KE
-        from ..kernels import polyline as PL
-
-        px, py, pz = ux.to_numpy(), uy.to_numpy(), uz.to_numpy()
-        best_d2 = np.full(len(px), np.inf)
-        best_id = np.full(len(px), -1, dtype=np.int64)
-        for rid, verts, oi in polys:
-            inside = (
-                KE.crossing_parity_fast(verts, px, py, pz) ^ int(oi)
-            ).astype(bool)
-            d2 = np.zeros(len(px))
-            out = ~inside
-            if out.any():
-                # the shortcut: edge distances only for exterior points
-                ox, oy, oz = px[out], py[out], pz[out]
-                dd = np.full(out.sum(), np.inf)
-                n = len(verts)
-                for k in range(n):
-                    a = tuple(float(x) for x in verts[k])
-                    b = tuple(float(x) for x in verts[(k + 1) % n])
-                    dd = np.minimum(
-                        dd, PL.edge_distance2_batch(ox, oy, oz, a, b)
-                    )
-                d2[out] = dd
-            better = d2 < best_d2  # strict: smaller region_id wins ties
-            best_d2 = np.where(better, d2, best_d2)
-            best_id = np.where(better, rid, best_id)
-        return pd.DataFrame({"region_id": best_id, "dist2": best_d2})
-
-    out = normalized_cols(points).withColumn(
-        "best", _closest(F.col("ux"), F.col("uy"), F.col("uz"))
-    )
-    return out.select(
-        "key",
-        F.col("best.region_id").alias("region_id"),
-        F.col("best.dist2").alias("dist2"),
-    )
+    return _closest_shape(points, polys, PL.region_distance2, "region_id")
 
 
 def closest_polygon_oracle_sql(
@@ -1351,7 +1324,7 @@ def closest_cell_join(
     cells) of numpy column math — suitable for dim-scale indexes (for
     huge indexes, pre-prune candidates with the ring-expansion kNN on
     cell centers first)."""
-    from pyspark.sql.functions import pandas_udf
+    from pyspark.sql.functions import arrow_udf
     from pyspark.sql.types import (
         ArrayType, DoubleType, LongType, StructField, StructType,
     )
@@ -1370,8 +1343,12 @@ def closest_cell_join(
             "with the ring-expansion kNN on cell centers (knn_join) "
             "before the exact cell-distance refine"
         )
+    cells_i64 = np.array(
+        [np.int64(np.uint64(c)).item() for c, _ in ents], dtype=np.int64
+    )
+    labels = np.array([lab for _, lab in ents], dtype=np.int64)
 
-    @pandas_udf(
+    @arrow_udf(
         ArrayType(
             StructType(
                 [
@@ -1382,37 +1359,21 @@ def closest_cell_join(
             )
         )
     )
-    def _closest(ux: pd.Series, uy: pd.Series, uz: pd.Series) -> pd.Series:
-        px, py, pz = ux.to_numpy(), uy.to_numpy(), uz.to_numpy()
-        n = len(px)
-        dists = np.empty((len(ents), n))
+    def _closest(ux: pa.Array, uy: pa.Array, uz: pa.Array) -> pa.Array:
+        px, py, pz = (c.to_numpy(zero_copy_only=False) for c in (ux, uy, uz))
+        dists = np.empty((len(ents), len(px)))
         for i, (cid, _lab) in enumerate(ents):
-            dists[i] = cell_distance_to_points_batch(
-                Cell(np.uint64(cid).item()), px, py, pz
-            )
+            dists[i] = cell_distance_to_points_batch(Cell(cid), px, py, pz)
         # one vectorized stable sort along the cells axis for ALL
         # points of the batch (ties keep pre-sorted (cell_id, label)
-        # index order)
-        top = np.argsort(dists, axis=0, kind="stable")[:k, :]  # (k', n)
-        cells_i64 = np.array(
-            [np.int64(np.uint64(c)).item() for c, _ in ents], dtype=np.int64
+        # index order); row j of the output lists top[:, j]
+        top = np.argsort(dists, axis=0, kind="stable")[:k, :].T  # (n, k')
+        return _nested(
+            np.full(len(px), top.shape[1]),
+            cell_id=cells_i64[top.ravel()],
+            label=labels[top.ravel()],
+            dist2=np.take_along_axis(dists.T, top, axis=1).ravel(),
         )
-        labels = np.array([lab for _, lab in ents], dtype=np.int64)
-        kk = top.shape[0]
-        out = []
-        for j in range(n):
-            idx = top[:, j]
-            out.append(
-                [
-                    {
-                        "cell_id": cells_i64[idx[r]].item(),
-                        "label": labels[idx[r]].item(),
-                        "dist2": float(dists[idx[r], j]),
-                    }
-                    for r in range(kk)
-                ]
-            )
-        return pd.Series(out)
 
     upts = normalized_cols(points)
     res = upts.select(

@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions.udfs import split_by_region
 from ..kernels import cellid as CI
 from ..kernels import edges as E
 from ..kernels.coverer import CovererOptions, RegionCoverer
@@ -152,33 +153,20 @@ def cell_parity_udf(entries: dict):
     (S2ContainsPointQuery.cs semantics)."""
     from pyspark.sql.functions import pandas_udf
 
+    def parity(key, px, py, pz):
+        _eidx, cd, center, cc = entries[key]
+        if cd is None:
+            return cc
+        edges = [(cd[k, 0], cd[k, 1]) for k in range(len(cd))]
+        par = E.crossing_parity_fast_edges(edges, px, py, pz, origin=center)
+        return par ^ int(cc)
+
     @pandas_udf(T.BooleanType())
     def _contains(
         rid: pd.Series, cell: pd.Series, x: pd.Series, y: pd.Series, z: pd.Series
     ) -> pd.Series:
-        rids = rid.to_numpy()
-        cells = cell.to_numpy()
-        px, py, pz = x.to_numpy(), y.to_numpy(), z.to_numpy()
-        out = np.zeros(len(rids), dtype=bool)
-        # group rows by (region, cell) within the Arrow batch
-        order = np.lexsort((cells, rids))
-        srt_r, srt_c = rids[order], cells[order]
-        starts = np.flatnonzero(
-            np.r_[True, (srt_r[1:] != srt_r[:-1]) | (srt_c[1:] != srt_c[:-1])]
-        )
-        bounds = np.r_[starts, len(order)]
-        for si, ei in zip(bounds[:-1], bounds[1:]):
-            idx = order[si:ei]
-            _eidx, cd, center, cc = entries[(srt_r[si], srt_c[si])]
-            if cd is None:
-                out[idx] = cc
-                continue
-            edges = [(cd[k, 0], cd[k, 1]) for k in range(len(cd))]
-            par = E.crossing_parity_fast_edges(
-                edges, px[idx], py[idx], pz[idx], origin=center
-            )
-            out[idx] = (par ^ int(cc)).astype(bool)
-        return pd.Series(out)
+        # rows grouped by (region, index cell) within the Arrow batch
+        return split_by_region([rid, cell], (x, y, z), parity)
 
     return _contains
 

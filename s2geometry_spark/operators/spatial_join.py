@@ -32,7 +32,7 @@ from ..functions import sparkfns as S
 from ..kernels import cellid as CI
 from ..kernels import cellunion as CU
 from ..kernels.coverer import CovererOptions
-from ..kernels.geom import Cap
+from ..kernels.geom import Cap, clamped_chord2
 from . import coverings as COV
 
 
@@ -190,7 +190,6 @@ def point_in_loop_join(
     points: DataFrame,
     loops: list,
     options: CovererOptions | None = None,
-    skip_interior: bool = False,
     point_key: str = "key",
 ) -> DataFrame:
     """Join points (x,y,z + cell_id columns) to containing loop regions.
@@ -198,13 +197,7 @@ def point_in_loop_join(
     Pattern (SURVEY.md §2.4): region loops -> driver-side coverer ->
     ``covering_join`` (broadcast or shuffle by Spark's threshold);
     crossing-number parity refine (vectorized pUDF, S2Loop.cs Contains
-    semantics).
-
-    ``skip_interior=True`` skips the parity test for candidates whose
-    covering cell is provably interior (MutableS2ShapeIndex
-    contains_center analogue) — enable when the refine kernel dominates;
-    the driver-contract query keeps it off so the output is arithmetic-
-    identical to the brute-force SQL oracle.
+    semantics), arithmetic-identical to the brute-force SQL oracle.
     """
     from ..functions import udfs as U
 
@@ -216,8 +209,6 @@ def point_in_loop_join(
     }
     contains = U.loop_parity_udf(loops_by_id)
     pred = contains(F.col("region_id"), F.col("x"), F.col("y"), F.col("z"))
-    if skip_interior:
-        pred = F.col("is_interior") | pred
     return joined.where(pred).select(F.col(point_key), F.col("region_id"))
 
 
@@ -301,14 +292,11 @@ def near_chord2(radius_rad: float) -> float:
     within-distance refines.  ONE definition shared by the Spark
     predicates and the DuckDB oracle literals — the exact IEEE
     expression must match on both sides or boundary-distance rows
-    diverge.  A negative or NaN radius raises ValueError (the coverer
-    would clamp it to 0 while sin^2 here turns -r into +r)."""
-    import math
-
+    diverge.  A negative or NaN radius raises ValueError; the coverer's
+    ``clamped_chord2`` would silently clamp it to 0."""
     if not radius_rad >= 0:
         raise ValueError(f"radius_rad must be >= 0, got {radius_rad!r}")
-    s = math.sin(0.5 * min(radius_rad, math.pi))
-    return min(4.0, 4 * s * s)
+    return clamped_chord2(radius_rad)
 
 
 def point_near_polyline_join(

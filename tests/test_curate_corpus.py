@@ -4,9 +4,13 @@ stage-for-stage from its checkpoints."""
 
 from __future__ import annotations
 
+import importlib.util
 import json
+import os
 import subprocess
 import sys
+
+import pytest
 
 
 def _run(sf_dir: str, root: str) -> dict:
@@ -100,3 +104,60 @@ def test_published_snapshot_versions(spark, sf_dir, tmp_path):
         "published"
     ]["rows"]
     assert SN.current_version(pub) == 2
+
+
+def _main_in_process(monkeypatch, capsys, sf_dir: str, root: str) -> dict:
+    """Run ``jobs/curate_corpus.main()`` in this process on the active
+    session; returns its JSON report."""
+    import importlib.util
+    import os
+
+    path = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "jobs", "curate_corpus.py",
+    )
+    spec = importlib.util.spec_from_file_location("curate_corpus", path)
+    job = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(job)
+    monkeypatch.setattr(
+        sys, "argv",
+        [path, "--sf-dir", sf_dir, "--checkpoint-root", root],
+    )
+    job.main()
+    lines = [l for l in capsys.readouterr().out.splitlines() if l.startswith("{")]
+    return json.loads(lines[-1])
+
+
+def test_resume_after_near_dup_failure(spark, sf_dir, tmp_path, monkeypatch, capsys):
+    """A run that fails in the near-dup stage resumes from the stages
+    it finished: the re-run reports profile, quality_filter and
+    dedup_exact as resumed, and publishes the same rows as a clean run
+    in a fresh root."""
+    from s2geometry_spark.operators import textops as TX
+    from s2geometry_spark.sources import snapshots as SN
+
+    def boom(*args, **kwargs):
+        raise RuntimeError("injected near-dup failure")
+
+    root = str(tmp_path / "ck")
+    with monkeypatch.context() as m:
+        m.setattr(TX, "near_dup_pairs", boom)
+        with pytest.raises(RuntimeError, match="injected near-dup failure"):
+            _main_in_process(monkeypatch, capsys, sf_dir, root)
+    assert SN.current_version(f"{root}/published") is None
+
+    rep = _main_in_process(monkeypatch, capsys, sf_dir, root)
+    for stage in ("profile", "quality_filter", "dedup_exact"):
+        assert rep[stage]["resumed"] is True, stage
+    assert rep["near_dedup"]["resumed"] is False
+
+    fresh = str(tmp_path / "fresh")
+    clean = _main_in_process(monkeypatch, capsys, sf_dir, fresh)
+    assert not any(clean[s]["resumed"] for s in ("profile", "dedup_exact"))
+
+    def published(r):
+        return sorted(tuple(x) for x in SN.read_snapshot(spark, f"{r}/published").collect())
+
+    got = published(root)
+    assert got == published(fresh)
+    assert len(got) == clean["published"]["rows"] > 0

@@ -186,20 +186,6 @@ class TestLoopJoin:
         )
         assert base == shuffled
 
-    def test_interior_skip_same_result(self, spark, pts_df):
-        loops = R.synthetic_loops(range(12))
-        base = sorted(
-            (r["key"], r["region_id"])
-            for r in SJ.point_in_loop_join(spark, pts_df, loops).collect()
-        )
-        skip = sorted(
-            (r["key"], r["region_id"])
-            for r in SJ.point_in_loop_join(
-                spark, pts_df, loops, skip_interior=True
-            ).collect()
-        )
-        assert base == skip
-
     def test_duckdb_oracle_agrees(self, spark, pts_df, sf_dir):
         import duckdb
 
