@@ -34,18 +34,23 @@ def main() -> None:
 
     from pyspark.sql import SparkSession
 
+    from s2geometry_spark.plans import session as SESSION
+
     active = SparkSession.getActiveSession()
     if active is not None:
         spark = active
     elif os.environ.get("PYSPARK_GATEWAY_PORT"):
         # launched by spark-submit: the JVM gateway already carries
         # --master and the executor confs, so attach to it instead of
-        # building a local[] session that would clobber spark.master
-        spark = SparkSession.builder.appName("s2_pipeline").getOrCreate()
+        # building a local[] session that would clobber spark.master;
+        # the call-site capture goes off here as in build_session
+        spark = (
+            SparkSession.builder.appName("s2_pipeline")
+            .config(*SESSION.NO_CALL_SITE_CAPTURE)
+            .getOrCreate()
+        )
     else:
-        from s2geometry_spark.plans.session import build_session
-
-        spark = build_session(app_name="s2_pipeline")
+        spark = SESSION.build_session(app_name="s2_pipeline")
 
     from s2geometry_spark.operators import mosaic as M
     from s2geometry_spark.plans.checkpoint import CheckpointedPipeline

@@ -37,10 +37,12 @@ from . import coverings as COV
 
 
 def normalized_cols(df: DataFrame, x="x", y="y", z="z") -> DataFrame:
-    """Append unit-vector columns (ux,uy,uz) — plain JVM arithmetic."""
-    r = F.sqrt(F.col(x) * F.col(x) + F.col(y) * F.col(y) + F.col(z) * F.col(z))
+    """Append unit-vector columns (ux,uy,uz) — plain JVM arithmetic,
+    written as SQL strings: one expression each instead of a dozen
+    Column calls, each a Py4J round trip."""
+    r = f"sqrt({x} * {x} + {y} * {y} + {z} * {z})"
     return df.withColumns(
-        {"ux": F.col(x) / r, "uy": F.col(y) / r, "uz": F.col(z) / r}
+        {f"u{a}": F.expr(f"{c} / {r}") for a, c in zip("xyz", (x, y, z))}
     )
 
 
@@ -79,10 +81,11 @@ def typed_cov_df(spark, pdf: pd.DataFrame, id_col: str, ids) -> DataFrame:
 def cap_refine_predicate() -> Column:
     """Exact containment of the unit point (ux, uy, uz) in the cap
     (cx, cy, cz, r2): squared chord length <= radius2
-    (S2Cap.cs:480-486).  min(4, |p-c|^2) like S1ChordAngle ctor."""
-    dx, dy, dz = (F.col(f"u{a}") - F.col(f"c{a}") for a in "xyz")
-    chord2 = dx * dx + dy * dy + dz * dz
-    return F.least(chord2, F.lit(4.0)) <= F.col("r2")
+    (S2Cap.cs:480-486).  min(4, |p-c|^2) like S1ChordAngle ctor.  One
+    SQL expression; ``4.0D`` is a DOUBLE literal (``4.0`` reads as a
+    DECIMAL)."""
+    chord2 = " + ".join(f"(u{a} - c{a}) * (u{a} - c{a})" for a in "xyz")
+    return F.expr(f"least({chord2}, 4.0D) <= r2")
 
 
 def with_cap_params(pdf: pd.DataFrame, caps) -> pd.DataFrame:
@@ -113,10 +116,18 @@ def covering_join(
     estimated smaller still); above it the join shuffles on the cell
     id, with AQE skew-join splitting for hot cells.  An empty ``levels``
     (empty/degenerate region list) yields a valid zero-row frame
-    rather than an un-typeable empty array expression."""
+    rather than an un-typeable empty array expression.  The ancestors
+    are one SQL expression, ``explode(array(...))`` over the
+    ``sparkfns.cell_parent`` bit trick, not a Column per level: each
+    Column call is a Py4J round trip."""
     if levels:
-        arr = F.array(*[S.cell_parent(F.col("cell_id"), lv) for lv in levels])
-        probe = points.withColumn("anc_cell", F.explode(arr))
+        parents = ", ".join(
+            f"(cell_id & {-lsb}) | {lsb}"
+            for lsb in map(S.lsb_for_level, levels)
+        )
+        probe = points.withColumn(
+            "anc_cell", F.expr(f"explode(array({parents}))")
+        )
     else:
         probe = points.withColumn(
             "anc_cell", F.lit(None).cast("long")

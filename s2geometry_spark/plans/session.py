@@ -17,6 +17,17 @@ import zipfile
 
 from pyspark.sql import SparkSession
 
+# PySpark's "DataFrame debugging" captures the Python call site of every
+# ``F.col`` and ``Column`` method (``pyspark.errors.utils._with_origin``):
+# a stack walk plus about 10 extra Py4J round trips per call
+# (``getActiveSession``, a conf read, ``PySparkCurrentOrigin.set/clear``).
+# Measured on 4 cores: ``F.col("id")`` takes 13 round trips with it and 3
+# without, ``df.where(F.col("id") > 1)`` 25 and 5.  The cost is a lost
+# "DataFrame context" section (the Python call site) in analysis errors.
+# It is a static SQL conf, so it goes on the builder of every session
+# this package starts.
+NO_CALL_SITE_CAPTURE = ("spark.python.sql.dataFrameDebugging.enabled", "false")
+
 
 def package_zip(out_path: str | None = None) -> str:
     """Zip the s2geometry_spark package for spark-submit --py-files /
@@ -61,6 +72,22 @@ def build_session(
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
+    """A local[cores] session with the settings below, the package
+    shipped to its python workers.
+
+    It turns off PySpark's per-Column call-site capture
+    (``NO_CALL_SITE_CAPTURE``), which made plan building Py4J-bound:
+    a warm ``point_in_cap_join`` over 57 caps took 1013 round trips to
+    plan with it and 293 without.  Two caveats:
+
+    - the conf is static: it can only be set on a builder, before the
+      context exists, not through ``spark.conf.set``;
+    - PySpark reads the flag once per process
+      (``pyspark.errors.utils._enable_debugging_cache``) at the first
+      Column call.  If a session built elsewhere was active then, the
+      capture stays on for the life of the process, also in sessions
+      built here later.
+    """
     if cores is None:
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     if shuffle_partitions is None:
@@ -93,6 +120,7 @@ def build_session(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.driver.extraJavaOptions", "-Djava.net.preferIPv4Stack=true")
+        .config(*NO_CALL_SITE_CAPTURE)
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
